@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from ..htmlx.convert import extract_page
-from .urlnorm import canonicalize_url, validate_url
+from .urlnorm import canonicalize_url
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -127,16 +127,5 @@ def canonicalize_udf(url: pd.Series) -> pd.DataFrame:
     rows = []
     for u in url:
         c = canonicalize_url(u)
-        rows.append((c.url, c.host, c.valid, c.reason))
-    return pd.DataFrame(rows, columns=_CANON_COLS)
-
-
-@pandas_udf(CANON_SCHEMA)
-def validate_udf(url: pd.Series) -> pd.DataFrame:
-    """Reference-minimal normalization (no canonical extensions) — used
-    by parity tests against the reference's validate_url behavior."""
-    rows = []
-    for u in url:
-        c = validate_url(u)
         rows.append((c.url, c.host, c.valid, c.reason))
     return pd.DataFrame(rows, columns=_CANON_COLS)

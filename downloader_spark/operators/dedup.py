@@ -29,14 +29,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text: Column) -> DataFrame:
     )
 
 
-def exact_dedup_survivors(df: DataFrame, id_col: str, text: Column) -> DataFrame:
-    """Keep-first-by-id semantics: one row per distinct text."""
-    w_keeper = exact_dup_groups(df, id_col, text).select(
-        F.col("keeper").alias(id_col)
-    )
-    return w_keeper
-
-
 # ---------------------------------------------------------------------------
 # Shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -433,9 +425,11 @@ def connected_keepers(
     of pure round fixed cost — the same result is exact in
     milliseconds on the driver. The gate is the same bounded-small-side
     class as the ≤256 MiB Bloom broadcast (CrawlConfig
-    bloom_broadcast_max): 2M bare-id edges ≈ 32 MB collected; the
-    edge table is persisted for the gate count, so the big path's
-    first round reuses it instead of recomputing pair generation.
+    bloom_broadcast_max): 2M bare-id edges ≈ 32 MB collected. The gate
+    counts edges, not bytes, so that size assumes bare integer ids;
+    long string ids collect proportionally more. The edge table is
+    persisted for the gate count, so the big path's first round reuses
+    it instead of recomputing pair generation.
     """
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges.persist()

@@ -25,12 +25,13 @@ embedding_near_dups oracle pattern).
 Scale design (100 TB / 10^9 vectors): the centroid table is k×dim
 integers shipped in the UDF closure (k ~ 50k in the published LAION
 runs — a few MB); assignment is one Arrow-batched numpy pass over the
-corpus, no shuffle. Pair generation shuffles BARE (id, cluster) keys
-— vectors never enter the self-join (the minhash rule) and re-attach
-by id afterwards. The within-cluster all-pairs cost is (n/k)^2 per
-cluster — k is the knob the paper itself uses to bound it. Duplicate
-groups resolve through the same O(log diameter) min-label components
-used by the token-space dedups (operators/dedup.connected_keepers).
+corpus, no shuffle. Pair scoring groups each cluster's (id, vector)
+rows into hash-block-pair tasks of the exact cosine kernel
+(operators/cosine.threshold_edges); no pair table is built. The
+within-cluster all-pairs cost is (n/k)^2 per cluster — k is the knob
+the paper itself uses to bound it. Duplicate groups resolve through
+the same O(log diameter) min-label components used by the token-space
+dedups (operators/dedup.connected_keepers).
 At this repo's oracle scale the fit runs on the fixture corpus
 (functions/classifier.py DEFAULT_SEED_CORPUS pattern); at 100 TB the
 fit would run distributed via similarity.kmeans_centroids(sample_frac)
@@ -44,6 +45,9 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .cosine import threshold_edges
+from .similarity import _dot, _norm
 
 MICRO = 1_000_000
 
@@ -183,137 +187,6 @@ def make_nearest_centroid_exact_udf(centroids_micro: list[list[int]]):
     return nearest
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def _spark_round(x: float, round_to: int) -> float:
-    """Spark Round(DoubleType, n): BigDecimal.valueOf (shortest repr) →
-    setScale(n, HALF_UP) → double (the repetition_arrow._round6 mirror,
-    scale-parameterised)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-round_to)
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
-
-
-def _make_cluster_edges_fn(threshold: float, round_to: int, block: int = 2048):
-    """applyInPandas kernel: one cluster's (_id, _v) rows in → the
-    (id_a, id_b) pairs with round(cosine, round_to) >= threshold out
-    (id_a < id_b), replacing the old within-cluster self-join + two
-    vector re-attach joins + HOF cosine over every pair (r7; guide
-    §2.3/§4.2 — the pair table existed only to be thresholded).
-
-    Exactness: dot/norm use the same elementwise per-dimension
-    accumulation as the F.aggregate folds they replace (single IEEE
-    mul + add per step — bit-identical; see similarity.py's kernel
-    block). The threshold test is on the ROUNDED cosine; raw scores
-    farther than 1e-9 from the decision boundary
-    (threshold − 0.5·quantum) decide directly, the (empirically empty)
-    boundary band goes through the exact _spark_round mirror."""
-    import numpy as np
-
-    quantum = 10.0 ** (-round_to)
-    cut = threshold - 0.5 * quantum
-    band = 1e-9
-
-    def _fold_norm(V):
-        nsq = np.zeros(V.shape[0], dtype=np.float64)
-        for d in range(V.shape[1]):
-            c = V[:, d]
-            nsq = nsq + c * c
-        return np.sqrt(nsq)
-
-    def _emit(ids_a, ids_b, V_a, V_b, nrm_a, nrm_b, pair_mask, out_a, out_b):
-        """Score every (A-row × B-row) pair with the exact fold, keep
-        those passing the rounded-threshold test AND ``pair_mask``."""
-        acc = np.zeros((V_a.shape[0], V_b.shape[0]), dtype=np.float64)
-        for d in range(V_a.shape[1]):
-            acc = acc + V_a[:, d][:, None] * V_b[:, d][None, :]
-        sims = acc / (nrm_a[:, None] * nrm_b[None, :])
-        hit = pair_mask & (sims >= cut - band)
-        ii, jj = np.nonzero(hit)
-        if len(ii):
-            s = sims[ii, jj]
-            sure = s >= cut + band
-            for t in np.nonzero(~sure)[0]:
-                sure[t] = _spark_round(float(s[t]), round_to) >= threshold
-            ii, jj = ii[sure], jj[sure]
-            if len(ii):
-                a, b = ids_a[ii], ids_b[jj]
-                out_a.append(np.minimum(a, b))
-                out_b.append(np.maximum(a, b))
-
-    def edges_fn(pdf: pd.DataFrame, ta: int = 0, tb: int = 0) -> pd.DataFrame:
-        """One (cluster, block-pair) task: rows carry ``_blk`` ∈ {ta,
-        tb}; within-block (ta == tb) pairs use the strict id upper
-        triangle, cross-block pairs score every A×B combination once
-        and emit (min id, max id) — the same pair set and arithmetic
-        as the single-task form, split for parallelism."""
-        empty = pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        if len(pdf) < 2:
-            return empty
-        blk = (
-            pdf["_blk"].to_numpy()
-            if "_blk" in pdf.columns
-            else np.zeros(len(pdf), dtype=np.int64)
-        )
-        ids = pdf["_id"].to_numpy()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        out_a, out_b = [], []
-        if ta == tb:
-            order = np.argsort(ids, kind="stable")
-            ids, V = ids[order], V[order]
-            n = V.shape[0]
-            nrm = _fold_norm(V)
-            for i0 in range(0, n, block):
-                for j0 in range(i0, n, block):
-                    ia = np.arange(i0, min(i0 + block, n))
-                    jb = np.arange(j0, min(j0 + block, n))
-                    _emit(
-                        ids[ia], ids[jb], V[ia], V[jb],
-                        nrm[ia], nrm[jb],
-                        ia[:, None] < jb[None, :], out_a, out_b,
-                    )
-        else:
-            ma, mb = blk == ta, blk == tb
-            if not ma.any() or not mb.any():
-                return empty
-            Va, Vb = V[ma], V[mb]
-            na, nb_ = _fold_norm(Va), _fold_norm(Vb)
-            ia_all, jb_all = ids[ma], ids[mb]
-            for i0 in range(0, Va.shape[0], block):
-                for j0 in range(0, Vb.shape[0], block):
-                    sa, sb = slice(i0, i0 + block), slice(j0, j0 + block)
-                    _emit(
-                        ia_all[sa], jb_all[sb], Va[sa], Vb[sb],
-                        na[sa], nb_[sb],
-                        np.ones((len(ia_all[sa]), len(jb_all[sb])), dtype=bool),
-                        out_a, out_b,
-                    )
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        )
-
-    return edges_fn
-
-
 def semantic_dedup(
     spark: SparkSession,
     embeddings: DataFrame,
@@ -336,16 +209,20 @@ def semantic_dedup(
       keep-the-outlier rule: extreme points carry more signal), ties
       to the lowest vec_id.
 
-    Plan shape: one pandas-UDF assignment pass (no shuffle) → bare
-    (id, cluster) self-join keyed on cluster (vectors re-attach by id
-    after pairing — the minhash rule) → O(log diameter) component
-    rounds → one window per component for the keeper pick. The
-    assigned frame is referenced four times downstream (centroid
-    cosine, both pair sides, final join-back), so it is materialized
-    ONCE via a tracked localCheckpoint — without it the assignment
-    UDF re-runs per reference (plan-audited: 4 ArrowEvalPython nodes
-    → 1). The returned frame carries ``_ckpt_ids`` for
+    Plan shape: one pandas-UDF assignment pass (no shuffle) → one
+    grouped cosine kernel keyed on (cluster, block pair)
+    (cosine.threshold_edges: every within-cluster pair is scored in
+    numpy, only the edges leave the worker) → connected_keepers → one
+    window per component for the keeper pick. The assigned frame is
+    referenced twice downstream (the edge kernel and the final
+    join-back), so it is materialized ONCE via a tracked
+    localCheckpoint — without it the assignment UDF re-runs per
+    reference. The returned frame carries ``_ckpt_ids`` for
     operators.dedup.release_result (the house pattern).
+
+    Degenerate inputs: a zero-norm or NaN vector has no edges (its
+    cosine to anything is not finite), so it is its own kept
+    component; a zero-norm vector's ``cos_centroid`` is null.
     """
     from .dedup import _ckpt_tracked, connected_keepers
 
@@ -369,59 +246,20 @@ def semantic_dedup(
     asg = asg.join(F.broadcast(cent), "cluster").withColumn(
         "cos_centroid",
         F.round(
-            _dot(F.col("_v"), F.col("_c"))
-            / (_norm(F.col("_v")) * _norm(F.col("_c"))),
+            F.try_divide(
+                _dot(F.col("_v"), F.col("_c")),
+                _norm(F.col("_v")) * _norm(F.col("_c")),
+            ),
             round_to,
         ),
     ).drop("_c")
 
-    # within-cluster edges via the Arrow kernel (r7): each cluster's
-    # rows group to one task and all pairs are scored/thresholded in
-    # numpy with the bit-exact fold order — the old bare-id self-join,
-    # the two vector re-attach joins and the HOF cosine over every
-    # pair are gone (at sf1.0 that pair table was ~26M rows, each
-    # carrying two 64-double arrays through two joins).
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = asg.schema["_id"].dataType
-    edge_schema = StructType(
-        [StructField("id_a", id_type), StructField("id_b", id_type)]
-    )
-    edges_fn = _make_cluster_edges_fn(threshold, round_to)
-    # block-pair parallelism (r7): one task per cluster capped the
-    # kernel at k-way parallelism (k=8 on a 32-core host → 3/4 idle).
-    # Rows are hash-assigned to nb deterministic blocks and replicated
-    # to every (block, block) task they participate in — k·nb(nb+1)/2
-    # tasks, same pair set, same per-pair arithmetic. nb is derived
-    # from the session parallelism (not a magic constant); nb=1
-    # degenerates to the per-cluster form.
-    k = max(len(centroids_micro), 1)
-    par = spark.sparkContext.defaultParallelism
-    nb = 1
-    while k * nb * (nb + 1) // 2 < par and nb < 8:
-        nb += 1
-    tasks = asg.select(
-        "cluster", "_id", "_v",
-        F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(nb))
-        .cast("int").alias("_blk"),
-    ).select(
-        "cluster", "_id", "_v", "_blk",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nb - 1)),
-                lambda x: F.struct(
-                    F.least(F.col("_blk"), x.cast("int")).alias("ta"),
-                    F.greatest(F.col("_blk"), x.cast("int")).alias("tb"),
-                ),
-            )
-        ).alias("_t"),
-    ).select("cluster", "_id", "_v", "_blk", "_t.ta", "_t.tb")
-    edges = (
-        tasks.groupBy("cluster", "ta", "tb")
-        .applyInPandas(
-            lambda key, pdf: edges_fn(pdf, int(key[1]), int(key[2])),
-            edge_schema,
-        )
+    # within-cluster edges: each cluster's rows are scored and
+    # thresholded in numpy by the exact cosine kernel, split into
+    # block-pair tasks so k clusters still fill the session's cores
+    edges = threshold_edges(
+        asg.select("cluster", "_id", "_v"), ["cluster"], threshold, round_to,
+        n_groups=max(len(centroids_micro), 1),
     )
 
     comp = connected_keepers(edges).select(

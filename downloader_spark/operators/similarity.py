@@ -1,13 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Dot products computed NATIVELY (zip_with + aggregate higher-order
-  functions, JVM-side); the queries side is broadcast so the scan of
-  the candidate table is the only big input (no shuffle of candidates).
-- ``lsh_topk``: the scale path — random-hyperplane LSH buckets
-  candidates; only same-bucket (or neighboring-band) pairs are scored.
-  At 100 TB the bucket join replaces the broadcast nested loop: shuffle
-  on the bucket key, score within buckets.
+  The query batch is collected and shipped to one mapInPandas pass over
+  the candidate scan (operators/cosine.py), so the candidate table is
+  the only big input and no (candidate × query) pair table is built.
+- ``ivf_topk`` / ``ivf2_topk``: inverted-file and two-level tree
+  probes; float indexes score through the same kernel with a
+  probe-membership mask, quantized indexes through _rank_tail.
+- ``lsh_topk``: random-hyperplane LSH — only same-bucket pairs are
+  admissible (a bucket-match mask on the same kernel).
+- ``embedding_near_dups``: all pairs at or above a cosine threshold,
+  scored per LSH bucket (or in one group for the exact path) by
+  cosine.threshold_edges.
 
 Hyperplanes are derived deterministically from xxhash64(vec_id-free
 seeds) so results are reproducible without RNG state.
@@ -19,7 +23,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cosine import collect_query_matrix, threshold_edges, topk_superset, topk_tail
 
+
+# Spark-side (higher-order-function) dot and norm, the JVM form of
+# cosine.fold_dots/fold_norms. Only the quantized rerank (_rank_tail)
+# and semdedup's cosine-to-centroid column use them: both score one
+# row against one vector, with no pair table to avoid.
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -51,16 +61,16 @@ def cosine_topk(
     queries: (query_id, embedding) — the broadcast-small side, shipped
     to the candidate scan in the kernel closure. One mapInPandas pass
     scores every (candidate batch × query) pair in numpy with the
-    bit-exact fold order (see the kernel comment block) and emits only
-    per-batch top-k supersets; the unchanged round + window-rank tail
-    then runs over ~batches × queries × k rows instead of the old
-    candidates × queries pair table (guide §2.3/§4.2)."""
+    bit-exact fold order (cosine.py) and emits only per-batch top-k
+    supersets; the round + window-rank tail then runs over
+    ~batches × queries × k rows. Pairs with a non-finite cosine
+    (zero-norm or NaN vectors) are never neighbours."""
     cand = embeddings.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
     )
     qry = queries.select(F.col("query_id"), F.col(vec_col).alias("qvec"))
-    superset = _kernel_topk_superset(cand, qry, k, round_to, vec_col="qvec")
-    return _topk_tail(superset, k, round_to)
+    superset = topk_superset(cand, qry, k, round_to)
+    return topk_tail(superset, k, round_to)
 
 
 def hyperplane_signature(
@@ -102,183 +112,6 @@ def hyperplane_signature(
 MAX_EXACT_ROWS = 50_000
 
 
-# ---------------------------------------------------------------------------
-# Arrow scoring kernel (r7 optimization round).
-#
-# Every top-k query path (brute force, IVF probe, tree probe, LSH)
-# used to materialize the full (candidate × query) pair table and
-# score it with higher-order-function fold expressions — at sf1.0
-# that is 4M+ rows each dragging two 64-float arrays through the plan
-# and a 4M-row window shuffle (guide §2.3/§4.2: the pairs exist only
-# to be ranked; the payload bytes and the per-element HOF interpreter
-# work dominate). The kernel replaces that with ONE mapInPandas pass
-# over the candidate table: each Arrow batch scores all queries at
-# once in numpy and emits only a per-batch top-k SUPERSET, so the
-# shuffle/window runs on ~batches × queries × k rows instead of
-# candidates × queries.
-#
-# Exactness contract (the oracle hashes pin every output bit):
-# - dot/norm are computed as the SAME IEEE-754 double sequence as the
-#   F.aggregate folds they replace: a Python loop over dimensions doing
-#   elementwise acc = acc + (c_d * q_d) — numpy elementwise ops are
-#   single correctly-rounded IEEE ops, so the result is bit-identical
-#   to the JVM's left-to-right fold (never np.dot/@, whose blocked
-#   summation reassociates).
-# - per-batch selection keeps every candidate within MARGIN = 2.5e-6
-#   (2.5 rounding quanta) of the batch's k-th best raw score. The
-#   final ranking is by (round(sim, 6) DESC, cand_id): if a candidate
-#   x is in the batch top-k under THAT order, any y ranked above x has
-#   round(y) >= round(x), hence raw y > raw x - 1.5 quanta, so x is
-#   never cut by the raw-score margin — the union of batch supersets
-#   contains the global top-k, and the unchanged F.round +
-#   per_key_topk tail reproduces the old output exactly.
-# ---------------------------------------------------------------------------
-
-
-def _collect_query_matrix(queries: DataFrame, vec_col: str):
-    """Driver-side (query_id list, float64 matrix) for the query batch.
-    The query side was already assumed broadcast-small by every path
-    here (F.broadcast(qry)); collecting it moves the same bytes once."""
-    import numpy as np
-
-    rows = queries.select("query_id", vec_col).collect()
-    qids = [r[0] for r in rows]
-    if not rows:
-        return qids, np.zeros((0, 1), dtype=np.float64)
-    Q = np.asarray(
-        [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-    )
-    return qids, Q
-
-
-def _fold_norms(M):
-    """sqrt of the left-to-right fold of squares per row — bit-equal to
-    _norm()'s aggregate expression."""
-    import numpy as np
-
-    acc = np.zeros(M.shape[0], dtype=np.float64)
-    for d in range(M.shape[1]):
-        c = M[:, d]
-        acc = acc + c * c
-    return np.sqrt(acc)
-
-
-def _fold_dot_and_norm(C, Q):
-    """(dots n×m, candidate norms n) with the exact fold order of
-    _dot()/_norm(): per dimension, one IEEE multiply then one IEEE add."""
-    import numpy as np
-
-    n = C.shape[0]
-    dots = np.zeros((n, Q.shape[0]), dtype=np.float64)
-    cn = np.zeros(n, dtype=np.float64)
-    for d in range(C.shape[1]):
-        c = C[:, d]
-        cn = cn + c * c
-        dots = dots + c[:, None] * Q[:, d][None, :]
-    return dots, np.sqrt(cn)
-
-
-def _kernel_topk_superset(
-    cand: DataFrame,
-    queries: DataFrame,
-    k: int,
-    round_to: int = 6,
-    vec_col: str = "embedding",
-    extra_cols: tuple = (),
-    mask_fn=None,
-    num_parts: int | None = None,
-    q_collected=None,
-) -> DataFrame:
-    """(query_id, cand_id, cosine<raw double>) containing, per Arrow
-    batch of the candidate scan, a superset of that batch's top-k by
-    (round(cosine, round_to) DESC, cand_id ASC) — see the module
-    comment above for the margin proof. ``mask_fn(pdf, cid, nq)``
-    returns a (len(pdf) × nq) bool matrix of admissible pairs (probe
-    membership, LSH bucket match); cand_id == query_id is always
-    excluded. Raw doubles are returned so the caller's unchanged
-    F.round + per_key_topk tail sees the same values as the HOF path."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    # q_collected: (qids, Q) when the caller already collected the query
-    # batch (probe-list derivation) — mask row order must match Q's
-    qids, Q = (
-        q_collected if q_collected is not None
-        else _collect_query_matrix(queries, vec_col)
-    )
-    schema = StructType(
-        [
-            StructField("query_id", queries.schema["query_id"].dataType),
-            StructField("cand_id", cand.schema["cand_id"].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-    spark = cand.sparkSession
-    if not qids:
-        return spark.createDataFrame([], schema)
-    qn = _fold_norms(Q)
-    nq = len(qids)
-    qid_arr = np.asarray(qids)
-    margin = 2.5 * (10.0 ** (-round_to))
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            cid = pdf["cand_id"].to_numpy()
-            dots, cn = _fold_dot_and_norm(C, Q)
-            sims = dots / (cn[:, None] * qn[None, :])
-            valid = cid[:, None] != qid_arr[None, :]
-            if mask_fn is not None:
-                valid &= mask_fn(pdf, cid, nq)
-            neg = np.where(valid, sims, -np.inf)
-            out_q, out_c, out_s = [], [], []
-            n = len(cid)
-            for j in range(nq):
-                col = neg[:, j]
-                n_valid = int(valid[:, j].sum())
-                if n_valid == 0:
-                    continue
-                if n_valid > k:
-                    kth = np.partition(col, n - k)[n - k]
-                    keep = col >= kth - margin
-                else:
-                    keep = valid[:, j]
-                idx = np.nonzero(keep)[0]
-                out_q.append(np.full(len(idx), qid_arr[j]))
-                out_c.append(cid[idx])
-                out_s.append(sims[idx, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "cand_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
-
-    if num_parts is None:
-        num_parts = spark.sparkContext.defaultParallelism
-    src = cand.select("cand_id", "cvec", *extra_cols)
-    return src.repartition(num_parts, "cand_id").mapInPandas(gen, schema)
-
-
-def _topk_tail(superset: DataFrame, k: int, round_to: int) -> DataFrame:
-    """F.round + per-query window rank — byte-identical to the tail the
-    HOF paths used, now over the tiny kernel superset."""
-    from .topk import per_key_topk
-
-    scored = superset.select(
-        "query_id", "cand_id", F.round(F.col("cosine"), round_to).alias("cosine")
-    )
-    return per_key_topk(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
-    ).select("query_id", "cand_id", "cosine", "rnk")
-
-
 def embedding_near_dups(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -293,16 +126,20 @@ def embedding_near_dups(
     """Near-duplicate pairs by embedding cosine ≥ threshold.
 
     Candidate generation:
-    - LSH (the DEFAULT): hyperplane-signature bucket join — the scale
-      path; pairs in different buckets are missed (recall<1), standard
-      for embedding dedup at 100 TB. ``dim`` is probed from the first
-      row when not given; ``n_tables`` > 1 OR-amplifies recall with L
-      independent tables (still one shuffle, keyed (table, signature)).
-    - exact (``exact=True``, opt-in): O(n²) theta self-join
-      (BroadcastNestedLoopJoin). This is the oracle/verify baseline
-      ONLY — it refuses inputs above MAX_EXACT_ROWS so the natural
-      entry point can never silently run a cartesian product at scale.
-    Returns (id_a, id_b, cosine) with id_a < id_b.
+    - LSH (the DEFAULT): rows are grouped by hyperplane signature and
+      every within-bucket pair is scored by cosine.threshold_edges —
+      the scale path; pairs in different buckets are missed (recall<1),
+      standard for embedding dedup at 100 TB. ``dim`` is probed from
+      the first row when not given; ``n_tables`` > 1 OR-amplifies
+      recall with L independent tables (still one shuffle, keyed
+      (table, signature)), and pairs found in several tables dedupe.
+    - exact (``exact=True``, opt-in): all rows form one group, split
+      into hash-block-pair tasks — O(n²) scoring. This is the
+      oracle/verify baseline ONLY — it refuses inputs above
+      MAX_EXACT_ROWS so the natural entry point can never silently run
+      an all-pairs scan at scale.
+    Returns (id_a, id_b, cosine) with id_a < id_b and cosine rounded to
+    ``round_to``. A zero-norm or NaN vector has no pairs.
     """
     base = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     if exact:
@@ -312,44 +149,20 @@ def embedding_near_dups(
                 f"exact=True is the O(n²) verify baseline; input has {n} rows "
                 f"(> {MAX_EXACT_ROWS}). Use the default LSH path at scale."
             )
-        l, r = base.alias("l"), base.alias("r")
-        paired = l.join(r, on=[F.col("l._id") < F.col("r._id")]).select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._v").alias("_va"),
-            F.col("r._v").alias("_vb"),
-        )
-    else:
-        if dim is None:
-            first = base.select(F.size("_v").alias("d")).first()
-            if first is None:
-                dim = 1  # empty input: any plane width yields zero pairs
-            else:
-                dim = int(first["d"])
-        # vectors never enter the bucket self-join (minhash rule): the
-        # L-table explode carries bare (_id, tbl, sig); pairs dedupe as
-        # ids only, then the two vectors re-attach by id
-        sigs = _exploded_sigs(base, ["_id"], F.col("_v"), dim, n_planes, n_tables)
-        l, r = sigs.alias("l"), sigs.alias("r")
-        pairs = l.join(
-            r,
-            on=[
-                F.col("l._tbl") == F.col("r._tbl"),
-                F.col("l._sig") == F.col("r._sig"),
-                F.col("l._id") < F.col("r._id"),
-            ],
-        ).select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        if n_tables > 1:
-            pairs = pairs.dropDuplicates(["id_a", "id_b"])
-        paired = pairs.join(
-            base.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va")), "id_a"
-        ).join(
-            base.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb")), "id_b"
-        )
-    sim = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
-    return paired.select(
-        "id_a", "id_b", F.round(sim, round_to).alias("cosine")
-    ).filter(F.col("cosine") >= threshold)
+        return threshold_edges(base, [], threshold, round_to, n_groups=1)
+    if dim is None:
+        first = base.select(F.size("_v").alias("d")).first()
+        if first is None:
+            dim = 1  # empty input: any plane width yields zero pairs
+        else:
+            dim = int(first["d"])
+    buckets = _exploded_sigs(
+        base, ["_id", "_v"], F.col("_v"), dim, n_planes, n_tables
+    )
+    edges = threshold_edges(buckets, ["_tbl", "_sig"], threshold, round_to)
+    # a pair sharing a bucket in several tables is found once per table
+    # (same arithmetic, same cosine)
+    return edges.dropDuplicates(["id_a", "id_b"]) if n_tables > 1 else edges
 
 
 def make_nearest_centroids_udf(centroids: list[list[float]], n: int = 1):
@@ -915,7 +728,7 @@ def ivf_probe(
         import numpy as np
 
         qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = _collect_query_matrix(qry, "qvec")
+        qids, Q = collect_query_matrix(qry)
         C = np.asarray(index.centroids, dtype=np.float64)
         cn = (C * C).sum(axis=1)
         n_lists = len(index.centroids)
@@ -935,14 +748,14 @@ def ivf_probe(
             probed = sorted({int(c) for row in lists for c in row})
             cand = cand.filter(F.col("_c").isin(probed))
 
-        def mask_fn(pdf, cid, nq):
+        def mask_fn(pdf, C):
             return probe_bool[:, pdf["_c"].to_numpy()].T
 
-        superset = _kernel_topk_superset(
-            cand, qry, k, round_to, vec_col="qvec",
-            extra_cols=("_c",), mask_fn=mask_fn, q_collected=(qids, Q),
+        superset = topk_superset(
+            cand, qry, k, round_to, extra_cols=("_c",), mask_fn=mask_fn,
+            q_collected=(qids, Q),
         )
-        return _topk_tail(superset, k, round_to)
+        return topk_tail(superset, k, round_to)
 
     probe = make_nearest_centroids_udf(index.centroids, nprobe)
     qry = queries.select(
@@ -1412,7 +1225,7 @@ def ivf2_probe(
         import numpy as np
 
         qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = _collect_query_matrix(qry, "qvec")
+        qids, Q = collect_query_matrix(qry)
         lists = _tree_probe_rows(
             Q, index.coarse, index.subs, index.n_sub, wprobe, nprobe
         ) if len(Q) else []
@@ -1425,14 +1238,14 @@ def ivf2_probe(
         if index.path is not None and len(probed) < n_lists:
             cand = cand.filter(F.col("_c").isin(probed))
 
-        def mask_fn(pdf, cid, nq):
+        def mask_fn(pdf, C):
             return probe_bool[:, pdf["_c"].to_numpy()].T
 
-        superset = _kernel_topk_superset(
-            cand, qry, k, round_to, vec_col="qvec",
-            extra_cols=("_c",), mask_fn=mask_fn, q_collected=(qids, Q),
+        superset = topk_superset(
+            cand, qry, k, round_to, extra_cols=("_c",), mask_fn=mask_fn,
+            q_collected=(qids, Q),
         )
-        return _topk_tail(superset, k, round_to)
+        return topk_tail(superset, k, round_to)
 
     probe = make_tree_probe_udf(
         index.coarse, index.subs, index.n_sub, wprobe, nprobe
@@ -1602,15 +1415,12 @@ def lsh_topk(
 
     W = _hyperplane_weight_matrix(dim, n_planes, n_tables)
     qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-    qids, Q = _collect_query_matrix(qry, "qvec")
+    qids, Q = collect_query_matrix(qry)
     qsig = _pack_signatures(Q, W, n_planes, n_tables) if len(Q) else None
 
-    def mask_fn(pdf, cid, nq):
-        C = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-        )
+    def mask_fn(pdf, C):
         csig = _pack_signatures(C, W, n_planes, n_tables)
-        m = np.zeros((len(cid), nq), dtype=bool)
+        m = np.zeros((len(C), len(qsig)), dtype=bool)
         for t in range(n_tables):
             m |= csig[:, t][:, None] == qsig[:, t][None, :]
         return m
@@ -1618,8 +1428,7 @@ def lsh_topk(
     cand = embeddings.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
     )
-    superset = _kernel_topk_superset(
-        cand, qry, k, round_to, vec_col="qvec",
-        mask_fn=mask_fn, q_collected=(qids, Q),
+    superset = topk_superset(
+        cand, qry, k, round_to, mask_fn=mask_fn, q_collected=(qids, Q),
     )
-    return _topk_tail(superset, k, round_to)
+    return topk_tail(superset, k, round_to)

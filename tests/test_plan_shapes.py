@@ -117,14 +117,18 @@ def test_ivf_probe_is_kernel_scored_no_pair_join(spark):
 
 
 def test_exact_near_dup_guard_means_lsh_default_no_nested_loop(spark):
-    """The DEFAULT embedding_near_dups path must be the LSH bucket join
-    — a nested-loop only appears in the opt-in exact verify path."""
+    """The DEFAULT embedding_near_dups path must be the LSH bucket
+    kernel: rows grouped by (table, signature) and scored in one
+    grouped pandas node. Neither path plans a nested-loop join."""
     from downloader_spark.operators.similarity import embedding_near_dups
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     plan = explain_str(embedding_near_dups(emb, threshold=0.9, n_planes=8))
     assert "NestedLoop" not in plan
-    assert "Join" in plan  # sig-bucket equi-join present
+    assert "FlatMapGroupsInPandas" in plan  # sig-bucket grouped kernel
+    assert "_tbl" in plan and "_sig" in plan
+    exact = explain_str(embedding_near_dups(emb, threshold=0.9, exact=True))
+    assert "NestedLoop" not in exact
 
 
 def test_bucketed_pages_join_skips_pages_side_shuffle(spark):

@@ -143,3 +143,28 @@ def test_semantic_dedup_seeded_corpus_recall(spark):
         len(same_cluster),
         len(clone_src),
     )
+
+
+def test_semantic_dedup_string_ids_and_zero_norm(spark):
+    """String ids run end to end (the edge kernel keeps the id type),
+    and a zero-norm vector has no edges: it is its own kept component,
+    with a null cosine to its centroid."""
+    rows = [
+        ("a", [1.0, 0.0, 0.0, 0.0]),
+        ("b", [1.0, 0.01, 0.0, 0.0]),  # farther from the centroid
+        ("y", [0.0, 0.0, 0.0, 0.0]),
+        ("z", [0.0, 0.0, 0.0, 0.0]),
+        ("w", [0.0, 1.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    cents = quantize_centroids([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]])
+    by_id = {
+        r["vec_id"]: r
+        for r in semantic_dedup(spark, df, cents, threshold=0.99).collect()
+    }
+    assert set(by_id) == {"a", "b", "y", "z", "w"}
+    assert by_id["a"]["component"] == by_id["b"]["component"] == "a"
+    assert [i for i in "ab" if by_id[i]["keep"]] == ["b"]
+    for i in "yzw":
+        assert by_id[i]["component"] == i and by_id[i]["keep"]
+    assert by_id["y"]["cos_centroid"] is None

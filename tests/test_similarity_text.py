@@ -118,7 +118,7 @@ def test_embedding_near_dups_default_is_lsh_and_exact_is_guarded(spark, vecs):
     exact_pairs = {(r["id_a"], r["id_b"]) for r in exact.collect()}
     assert lsh_pairs <= exact_pairs  # LSH can only miss, never invent
 
-    # exact plan is a nested loop — must refuse above the size guard
+    # exact path scores all pairs — must refuse above the size guard
     old = similarity.MAX_EXACT_ROWS
     similarity.MAX_EXACT_ROWS = 2
     try:
@@ -628,3 +628,46 @@ def test_kernel_paths_handle_empty_query_batch(spark, vecs):
     assert ivf_probe(idx, empty_q, k=3, nprobe=2).count() == 0
     idx2 = build_ivf2_index(df, n_coarse=2, n_sub=2, iters=1, persist=False)
     assert ivf2_probe(idx2, empty_q, k=3, wprobe=2, nprobe=2).count() == 0
+
+
+def test_cosine_topk_skips_degenerate_candidates(spark, vecs):
+    """Zero-norm and NaN candidates have no finite cosine, so they are
+    never neighbours — and a batch holding >= k of them must still rank
+    its finite candidates: the result equals top-k over the finite rows."""
+    df, _ = vecs
+    zero = [(100 + i, [0.0] * 8) for i in range(40)]
+    nan = [(200 + i, [float("nan")] * 8) for i in range(10)]
+    degenerate = spark.createDataFrame(
+        zero + nan, "vec_id long, embedding array<float>"
+    )
+    queries = df.filter(F.col("vec_id").isin(0, 5, 20)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def topk(cands):
+        rows = cosine_topk(cands, queries, k=5).collect()
+        return sorted(tuple(r) for r in rows)
+
+    assert len(topk(df)) == 15
+    assert topk(df.unionByName(degenerate)) == topk(df)
+
+
+def test_embedding_near_dups_degenerate_vectors_have_no_pairs(spark):
+    """Two zero vectors (and two NaN vectors) have no finite cosine:
+    neither the exact nor the LSH path emits a pair for them."""
+    from downloader_spark.operators.similarity import embedding_near_dups
+
+    rows = [
+        (1, [0.0, 0.0, 0.0]),
+        (2, [0.0, 0.0, 0.0]),
+        (3, [float("nan"), 1.0, 0.0]),
+        (4, [float("nan"), 1.0, 0.0]),
+        (5, [0.3, 0.4, 0.5]),
+        (6, [0.3, 0.4, 0.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = [(5, 6, 1.0)]
+    exact = embedding_near_dups(df, threshold=0.9, exact=True).collect()
+    assert [tuple(r) for r in exact] == want
+    lsh = embedding_near_dups(df, threshold=0.9, dim=3, n_planes=4).collect()
+    assert [tuple(r) for r in lsh] == want
