@@ -1,4 +1,4 @@
-"""The engine's only two vectorized UDFs (SURVEY §2.10).
+"""The engine's vectorized URL and page UDFs (SURVEY §2.10).
 
 Everything else is native Spark SQL; these cross the JVM↔Python
 boundary once per Arrow batch (input_hint: "no per-row Python").
@@ -7,6 +7,12 @@ boundary once per Arrow batch (input_hint: "no per-row Python").
   crawl payload (reference content_converter.py:441-552 + D1/D2 flags).
 - ``canonicalize_udf(url) → struct(...)`` — P1+P2 validation +
   canonical frontier key (reference validation.py:28-268).
+- ``canonical_urls(df, url_col)`` — the same canonicalizer as a row
+  filter: one mapInPandas pass that keeps only the valid rows. Every
+  crawl call site that drops invalid urls uses it; the
+  ``select(canonicalize_udf).filter("c.valid")`` form plans the UDF
+  twice (once per referencing projection) and pays the Arrow/worker
+  boundary twice per row.
 
 Return types are built as explicit ``StructType`` (not DDL strings) so
 the module imports without an active SparkSession.
@@ -14,7 +20,9 @@ the module imports without an active SparkSession.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -129,3 +137,22 @@ def canonicalize_udf(url: pd.Series) -> pd.DataFrame:
         c = canonicalize_url(u)
         rows.append((c.url, c.host, c.valid, c.reason))
     return pd.DataFrame(rows, columns=_CANON_COLS)
+
+
+def canonical_urls(df: DataFrame, url_col: str) -> DataFrame:
+    """``df``'s rows whose ``url_col`` canonicalizes as valid, plus
+    ``url_canonical`` and ``host`` columns (``df`` must have neither).
+    The canonicalizer runs once per row, in one mapInPandas node;
+    invalid rows never leave Python."""
+    schema = StructType(df.schema.fields + CANON_SCHEMA.fields[:2])
+
+    def canon(batches):
+        for pdf in batches:
+            checks = [canonicalize_url(u) for u in pdf[url_col]]
+            keep = np.array([c.valid for c in checks], dtype=bool)
+            valid = [c for c in checks if c.valid]
+            yield pdf[keep].assign(
+                url_canonical=[c.url for c in valid], host=[c.host for c in valid]
+            )
+
+    return df.mapInPandas(canon, schema=schema)

@@ -808,20 +808,32 @@ def _rank_tail(
     for a quantized index with ``rerank_from`` — the FAISS refine step:
     keep k·factor survivors per query on the approximate score and
     re-rank ONLY them against full precision (the survivor set is
-    n_queries × k·factor rows and broadcasts into the id join)."""
-    sim = _dot(F.col("cvec"), F.col("qvec")) / (
-        _norm(F.col("cvec")) * _norm(F.col("qvec"))
-    )
+    n_queries × k·factor rows and broadcasts into the id join).
+    cosine.py's degenerate rule holds on both passes: a pair whose
+    cosine is not finite (zero-norm or NaN vector) is never a
+    neighbour."""
     from .topk import per_key_topk
+
+    def cosine(a: str, b: str):
+        # try_divide: a zero norm gives null instead of ANSI DIVIDE_BY_ZERO
+        return F.try_divide(_dot(F.col(a), F.col(b)), _norm(F.col(a)) * _norm(F.col(b)))
+
+    def finite(c: str):
+        # Spark orders NaN above +inf, and null compares to null
+        return F.abs(F.col(c)) < F.lit(float("inf"))
+
+    paired = paired.select(
+        "query_id", "cand_id", cosine("cvec", "qvec").alias("_sim")
+    ).filter(finite("_sim"))
 
     if quantized and rerank_from is not None:
         # approximate pass keeps k·factor survivors per query at full
         # float precision (rounding here would merge near-ties the
         # exact pass must separate)
         surv = per_key_topk(
-            paired.select("query_id", "cand_id", sim.alias("_approx")),
+            paired,
             ["query_id"],
-            [F.desc("_approx"), F.asc("cand_id")],
+            [F.desc("_sim"), F.asc("cand_id")],
             k=k * rerank_factor,
         ).select("query_id", "cand_id")
         exact = (
@@ -837,18 +849,17 @@ def _rank_tail(
                 ["query_id"],
             )
         )
-        esim = _dot(F.col("_fvec"), F.col("qvec")) / (
-            _norm(F.col("_fvec")) * _norm(F.col("qvec"))
-        )
-        scored = exact.select(
-            "query_id", "cand_id", F.round(esim, round_to).alias("cosine")
+        scored = (
+            exact.select("query_id", "cand_id", cosine("_fvec", "qvec").alias("_sim"))
+            .filter(finite("_sim"))
+            .select("query_id", "cand_id", F.round("_sim", round_to).alias("cosine"))
         )
         return per_key_topk(
             scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
         ).select("query_id", "cand_id", "cosine", "rnk")
 
     scored = paired.select(
-        "query_id", "cand_id", F.round(sim, round_to).alias("cosine")
+        "query_id", "cand_id", F.round("_sim", round_to).alias("cosine")
     )
     return per_key_topk(
         scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k

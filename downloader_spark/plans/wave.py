@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonicalize_udf, make_crawl_extract_udf
+from ..functions.udfs import canonical_urls, make_crawl_extract_udf
 from ..sources.snapshots import SnapshotWarehouse
 from .bloom import bloom_maybe_seen, bloom_maybe_seen_cogroup, build_bloom, merge_blooms
 from .crawlconfig import CrawlConfig
@@ -44,21 +44,6 @@ FRONTIER_SCHEMA = (
     "custom_headers map<string,string>"
 )
 SEEN_SCHEMA = "url string"
-
-_RESULT_COLS = [
-    "wave",
-    "url",
-    "host",
-    "depth",
-    "rank",
-    "status",
-    "text",
-    "markdown",
-    "needs_render",
-    "needs_js_render",
-    "n_links",
-    "custom_headers",
-]
 
 
 @dataclass
@@ -156,7 +141,6 @@ class CrawlEngine:
         BatchURLRequest.custom_headers, models/responses.py:37).
         Invalid seeds are recorded as results rows with status
         'invalid' (reference validate→400 analog, download.py:137-148)."""
-        cfg = self.cfg
         rows = [
             (i, s, None)
             if isinstance(s, str)
@@ -166,16 +150,22 @@ class CrawlEngine:
         seed_df = self.spark.createDataFrame(
             rows, "seed_idx long, url string, custom_headers map<string,string>"
         )
-        canon = seed_df.withColumn("c", canonicalize_udf("url")).select(
-            "seed_idx", "url", "custom_headers", "c.*"
-        )
+        # valid seeds, canonicalized once: the frontier write and the
+        # invalid-seed anti-join both read this cache
+        canon = canonical_urls(seed_df, "url").persist()
+        try:
+            self._commit_seeds(seed_df, canon, len(seeds))
+        finally:
+            canon.unpersist()
+
+    def _commit_seeds(self, seed_df: DataFrame, canon: DataFrame, n_seeds: int) -> None:
+        cfg = self.cfg
         # seeds that canonicalize to the same url dedupe FIRST-WINS by
         # original seed order (min_by seed_idx) — the simulator's rule;
         # dropDuplicates would keep an arbitrary row and diverge on
         # same-url seeds that differ in custom_headers
         valid = (
-            canon.filter("valid")
-            .groupBy(F.col("url_canonical").alias("url"))
+            canon.groupBy(F.col("url_canonical").alias("url"))
             .agg(
                 F.min_by("host", "seed_idx").alias("host"),
                 F.min_by("custom_headers", "seed_idx").alias("custom_headers"),
@@ -189,7 +179,7 @@ class CrawlEngine:
                 "custom_headers",
             )
         )
-        invalid = canon.filter("NOT valid").select(
+        invalid = seed_df.join(canon.select("seed_idx"), "seed_idx", "left_anti").select(
             F.lit(0).alias("wave"),
             F.col("url"),
             F.lit("").alias("host"),
@@ -204,7 +194,7 @@ class CrawlEngine:
             F.col("custom_headers"),
         )
         frontier = valid.repartition(
-            self._n_shuffle(len(seeds)),
+            self._n_shuffle(n_seeds),
             F.pmod(F.xxhash64("host"), F.lit(cfg.num_host_buckets)),
         )
         self.wh.commit(frontier, "frontier", wave=0)
@@ -383,10 +373,12 @@ class CrawlEngine:
         self._bloom_bc = (snap, bc)
         return bc
 
-    def _filter_unseen(self, df: DataFrame) -> DataFrame:
+    def _filter_unseen(self, df: DataFrame, keep=None) -> DataFrame:
         """Drop rows whose url is in the seen set: Bloom prefilter
         (definitely-unseen rows skip the shuffle), exact anti-join only
-        for the maybe-seen residue."""
+        for the maybe-seen residue. ``keep`` (a wave's cache hook)
+        persists the probed rows so both branches read one probe pass;
+        pass it only for wave-output-sized input, never the frontier."""
         total = self._seen_total()
         if total == 0:
             return df
@@ -413,6 +405,8 @@ class CrawlEngine:
                 probed = bloom_maybe_seen(
                     df, None, bitmap_bc=self._bloom_bitmap(), **self._bloom_geometry()
                 )
+            if keep is not None:
+                probed = keep(probed)
             definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
             maybes = probed.filter("maybe_seen").drop("maybe_seen")
             return definite.unionByName(maybes.join(seen, "url", "left_anti"))
@@ -469,9 +463,33 @@ class CrawlEngine:
 
     # -- one wave --------------------------------------------------------------
     def run_wave(self, wave: int) -> WaveMetrics:
+        """Run one wave and commit results → seen → filter → frontier →
+        metrics (the marker, strictly last).
+
+        Wave-scoped caches — each relation is built once and every
+        branch that needs it reads the cache: ``pol`` (seen-filtered
+        frontier + politeness), ``selected`` (this wave's fetch set),
+        ``extracted`` (the one fetch+extract pass), ``terminal`` (the
+        urls the wave appends to seen), ``discovered`` (the deduped
+        out-links) and, when the Bloom filter is live, the probed
+        discovered rows (one probe pass for both branches of the seen
+        split). All are released when the wave returns or raises;
+        nothing frontier-sized beyond ``pol`` is cached."""
+        cached: list[DataFrame] = []
+        try:
+            return self._run_wave(wave, cached)
+        finally:
+            for df in cached:
+                df.unpersist()
+
+    def _run_wave(self, wave: int, cached: list[DataFrame]) -> WaveMetrics:
         from pyspark.sql import Observation
 
         cfg, spark, wh = self.cfg, self.spark, self.wh
+
+        def keep(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
 
         frontier = wh.read(spark, "frontier")
         n_frontier_in = wh.snapshots("frontier")[-1]["n_rows"]
@@ -504,10 +522,9 @@ class CrawlEngine:
         if cfg.pagerank_every:
             unseen = self._with_rank_score(unseen)
         obs_unseen = Observation(f"unseen-{wave}")
-        pol = (
+        pol = keep(
             with_politeness(unseen, robots, cfg)
             .observe(obs_unseen, F.count(F.lit(1)).alias("n"))
-            .persist()
         )
         denied = pol.filter(~F.col("allowed"))
         allowed = pol.filter("allowed")
@@ -536,15 +553,13 @@ class CrawlEngine:
             # cut rows fall into `deferred` automatically
             selected = selected.orderBy(*order).limit(cfg.max_urls_per_wave)
         # _pr is consumed by the ordering above; drop is a no-op when absent
-        selected = selected.drop("_pr").persist()
+        selected = keep(selected.drop("_pr"))
 
         # 4. fetch = join pages ONCE (S1 stand-in); oversized payloads
         #    are MARKED as data and the extract UDF receives NULL html
         #    for them — the size guard still keeps oversized bytes out
         #    of Python (reference 50 MB DoS guard, config.py:208-213)
-        #    while ok/missing/too_large/terminal all read ONE persisted
-        #    relation (a separate too_large branch re-ran the pages
-        #    join inside every commit that referenced it).
+        #    while every outcome reads ONE persisted relation.
         fetched = selected.join(self.pages, "url", "left").withColumn(
             "_too_large",
             F.col("html").isNotNull() & (F.length("html") > cfg.max_content_bytes),
@@ -553,64 +568,59 @@ class CrawlEngine:
             F.when(F.col("_too_large"), F.lit(None).cast("binary"))
             .otherwise(F.col("html"))
         )
-        extracted = fetched.withColumn(
-            "ex", self._extract_udf("url", extract_in, "content_type")
-        ).persist()
+        extracted = keep(
+            fetched.withColumn("ex", self._extract_udf("url", extract_in, "content_type"))
+        )
         extracted.count()  # materialize: ONE extract pass feeds all branches
         n_unseen = int(obs_unseen.get["n"])  # observed by the job above
+        # width of the wave's outputs — estimate: deferred bounded by
+        # frontier_in; discovery bounded by ok-pages × links/page
+        n_out = self._n_shuffle(n_frontier_in + n_frontier_in // 2 + 64)
 
-        too_large = extracted.filter("_too_large").select(
-            "url", "host", "depth", "rank", "custom_headers"
+        # 5. one outcome pass: each fetched row's status is a CASE over
+        #    the extracted relation — too_large, then a missing page
+        #    (retried while attempt + 1 < max_attempts, else failed),
+        #    then ok. Only ok rows carry text, render flags and links.
+        outcome = extracted.withColumn(
+            "status",
+            F.when(F.col("_too_large"), "too_large")
+            .when(
+                F.col("html").isNull() & (F.col("attempt") + 1 < cfg.max_attempts),
+                "missing_retry",
+            )
+            .when(F.col("html").isNull(), "failed")
+            .otherwise("ok"),
         )
-        ok = extracted.filter(F.col("html").isNotNull() & ~F.col("_too_large")).select(
+        is_ok = F.col("status") == "ok"
+        results = outcome.select(
             F.lit(wave).alias("wave"),
             "url",
             "host",
             "depth",
             "rank",
-            F.lit("ok").alias("status"),
-            F.col("ex.text").alias("text"),
-            F.col("ex.markdown").alias("markdown"),
-            F.col("ex.needs_render").alias("needs_render"),
-            F.col("ex.needs_js_render").alias("needs_js_render"),
-            F.size("ex.links").alias("n_links"),
-            F.col("custom_headers"),
-            F.col("ex.links").alias("links"),
-        )
-        missing = extracted.filter(F.col("html").isNull()).select(
-            "url", "host", "depth", "score", "rank", "attempt", "custom_headers"
-        )
-        retry = missing.filter(F.col("attempt") + 1 < cfg.max_attempts)
-        failed = missing.filter(F.col("attempt") + 1 >= cfg.max_attempts)
-
-        def as_result(df: DataFrame, status: str) -> DataFrame:
-            return df.select(
+            "status",
+            F.when(is_ok, F.col("ex.text")).alias("text"),
+            F.when(is_ok, F.col("ex.markdown")).alias("markdown"),
+            F.when(is_ok, F.col("ex.needs_render")).otherwise(False).alias("needs_render"),
+            F.when(is_ok, F.col("ex.needs_js_render")).otherwise(False).alias("needs_js_render"),
+            F.when(is_ok, F.size("ex.links")).otherwise(0).alias("n_links"),
+            "custom_headers",
+        ).unionByName(
+            denied.select(
                 F.lit(wave).alias("wave"),
                 "url",
                 "host",
                 "depth",
-                F.col("rank") if "rank" in df.columns else F.lit(None).cast("int").alias("rank"),
-                F.lit(status).alias("status"),
+                F.lit(None).cast("int").alias("rank"),
+                F.lit("robots_denied").alias("status"),
                 F.lit(None).cast("string").alias("text"),
                 F.lit(None).cast("string").alias("markdown"),
                 F.lit(False).alias("needs_render"),
                 F.lit(False).alias("needs_js_render"),
                 F.lit(0).alias("n_links"),
-                F.col("custom_headers"),
+                "custom_headers",
             )
-
-        denied_res = as_result(denied.withColumn("rank", F.lit(None).cast("int")), "robots_denied")
-        retry_res = as_result(retry, "missing_retry")
-        failed_res = as_result(failed, "failed")
-        too_large_res = as_result(too_large, "too_large")
-        results = (
-            ok.drop("links")
-            .unionByName(denied_res)
-            .unionByName(retry_res)
-            .unionByName(failed_res)
-            .unionByName(too_large_res)
         )
-
         # per-status counts observed DURING the write (one pass — the
         # reference's per-job progress counters A2, with no read-back)
         obs_status = Observation(f"status-{wave}")
@@ -622,15 +632,72 @@ class CrawlEngine:
             F.sum((F.col("status") == "failed").cast("int")).alias("n_failed"),
             F.sum((F.col("status") == "too_large").cast("int")).alias("n_too_large"),
         )
+        ok_links = outcome.filter(is_ok).select("url", "depth", F.col("ex.links").alias("links"))
+        retry = outcome.filter(F.col("status") == "missing_retry")
+        # seen ∪= terminal outcomes (ok, denied, failed, too_large)
+        terminal = keep(
+            outcome.filter(F.col("status") != "missing_retry")
+            .select("url")
+            .unionByName(denied.select("url"))
+        )
+
+        # 6. discover links → canonical, valid, depth-bounded; dedupe
+        #    within the wave by url (min depth → max score, same rule as
+        #    the simulator's in-wave merge)
+        discovered = canonical_urls(
+            ok_links.select("depth", F.explode("links").alias("raw_url"))
+            .filter(F.col("depth") + 1 <= cfg.max_depth),
+            "raw_url",
+        )
+        if cfg.url_filter:
+            # RefinedWeb-style pre-frontier URL gate (native columns;
+            # simulator mirror: urlquality.url_keep_py — invariant 2)
+            from ..functions.urlquality import (
+                domain_blocked_col,
+                url_spam_score,
+            )
+
+            domains, weights, block_at = cfg.resolved_url_filter()
+            discovered = discovered.filter(
+                ~domain_blocked_col(F.col("host"), domains)
+                & (
+                    url_spam_score(F.col("url_canonical"), weights)
+                    < F.lit(block_at)
+                )
+            )
+        # read by the frontier chain and by the HLL register agg. A
+        # cached plan keeps its final shuffle's width (AQE may not
+        # coalesce it), so the dedupe shuffle is sized to the data here
+        discovered = keep(
+            discovered.select(
+                F.col("url_canonical").alias("url"),
+                "host",
+                (F.col("depth") + 1).alias("depth"),
+            )
+            .repartition(n_out, "url")
+            .groupBy("url")
+            .agg(F.first("host").alias("host"), F.min("depth").alias("depth"))
+            .withColumn(
+                "score",
+                F.greatest(
+                    F.lit(0), F.lit(cfg.score_base) - F.lit(cfg.score_decay) * F.col("depth")
+                ).cast("int"),
+            )
+            .withColumn("attempt", F.lit(0))
+            .withColumn(
+                "custom_headers", F.lit(None).cast("map<string,string>")
+            )
+        )
+
         # results commit OVERLAPS the seen→bloom→frontier chain below:
-        # the two job trees are independent (both read only the
-        # materialized pol/extracted/selected caches and write different
-        # tables), so submitting them from separate threads lets the
-        # scheduler interleave their stages — measured ~1 s/wave of pure
-        # fixed cost back. The metrics commit (the wave's COMMIT MARKER)
-        # joins the thread first and stays strictly last; a failure on
-        # either side aborts the wave before the marker, so recovery
-        # semantics are unchanged regardless of which commits landed.
+        # the two job trees are independent (both read only the wave's
+        # caches and write different tables), so submitting them from
+        # separate threads lets the scheduler interleave their stages —
+        # measured ~1 s/wave of pure fixed cost back. The metrics commit
+        # (the wave's COMMIT MARKER) joins the thread first and stays
+        # strictly last; a failure on either side aborts the wave before
+        # the marker, so recovery semantics are unchanged regardless of
+        # which commits landed.
         import threading
 
         results_err: list[BaseException] = []
@@ -647,9 +714,9 @@ class CrawlEngine:
         results_thread.start()
         try:
             return self._finish_wave(
-                wave, results_thread, results_err, obs_status, ok, denied,
-                failed, too_large, retry, allowed, selected, pol, extracted,
-                n_frontier_in, n_unseen,
+                wave, keep, results_thread, results_err, obs_status, ok_links,
+                retry, allowed, selected, terminal, discovered,
+                n_frontier_in, n_unseen, n_out,
             )
         finally:
             # the results commit must never be left in flight when the
@@ -660,78 +727,30 @@ class CrawlEngine:
             results_thread.join()
 
     def _finish_wave(
-        self, wave, results_thread, results_err, obs_status, ok, denied,
-        failed, too_large, retry, allowed, selected, pol, extracted,
-        n_frontier_in, n_unseen,
+        self, wave, keep, results_thread, results_err, obs_status, ok_links,
+        retry, allowed, selected, terminal, discovered,
+        n_frontier_in, n_unseen, n_out,
     ) -> "WaveMetrics":
+        import threading
+
         from pyspark.sql import Observation
 
         cfg, spark, wh = self.cfg, self.spark, self.wh
-        # 5. discover links → canonical, valid, depth-bounded; dedupe
-        #    within the wave by url (min depth → max score, same rule as
-        #    the simulator's in-wave merge)
-        discovered = (
-            ok.select("depth", F.explode("links").alias("raw_url"))
-            .filter(F.col("depth") + 1 <= cfg.max_depth)
-            .withColumn("c", canonicalize_udf("raw_url"))
-            .filter("c.valid")
-        )
-        if cfg.url_filter:
-            # RefinedWeb-style pre-frontier URL gate (native columns;
-            # simulator mirror: urlquality.url_keep_py — invariant 2)
-            from ..functions.urlquality import (
-                domain_blocked_col,
-                url_spam_score,
-            )
 
-            domains, weights, block_at = cfg.resolved_url_filter()
-            discovered = discovered.filter(
-                ~domain_blocked_col(F.col("c.host"), domains)
-                & (
-                    url_spam_score(F.col("c.url_canonical"), weights)
-                    < F.lit(block_at)
-                )
-            )
-        discovered = (
-            discovered.select(
-                F.col("c.url_canonical").alias("url"),
-                F.col("c.host").alias("host"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .groupBy("url")
-            .agg(F.first("host").alias("host"), F.min("depth").alias("depth"))
-            .withColumn(
-                "score",
-                F.greatest(
-                    F.lit(0), F.lit(cfg.score_base) - F.lit(cfg.score_decay) * F.col("depth")
-                ).cast("int"),
-            )
-            .withColumn("attempt", F.lit(0))
-            .withColumn(
-                "custom_headers", F.lit(None).cast("map<string,string>")
-            )
-        )
-
-        # 6. seen ∪= terminal outcomes (ok, denied, failed) — APPENDED as
-        #    a new snapshot + incremental filter merge (never a rewrite),
-        #    OVERLAPPED with the frontier computation below: the
-        #    discovered-link filter is constructed against the PRE-WAVE
-        #    seen/filter snapshots (wh.read resolves snapshot paths at
-        #    plan construction, so the concurrent append can't shift it)
-        #    and this wave's terminals are excluded by an explicit
-        #    anti-join — set-identical to filtering against the updated
-        #    seen table: (discovered − seen_pre) − terminal ≡
+        # 7. seen ∪= terminal — APPENDED as a new snapshot + incremental
+        #    filter merge (never a rewrite), OVERLAPPED with the frontier
+        #    computation below: the discovered-link filter is
+        #    constructed against the PRE-WAVE seen/filter snapshots
+        #    (wh.read resolves snapshot paths at plan construction, so
+        #    the concurrent append can't shift it) and this wave's
+        #    terminals are excluded by an explicit anti-join —
+        #    set-identical to filtering against the updated seen table:
+        #    (discovered − seen_pre) − terminal ≡
         #    discovered − (seen_pre ∪ terminal). Both threads write
         #    DISJOINT tables (seen/bloom/cuckoo vs frontier); the wave's
         #    metrics commit marker still joins every thread first, so a
         #    crash anywhere keeps recovery semantics unchanged (rollback
         #    is per-table above the marker, order-independent).
-        terminal = (
-            ok.select("url")
-            .unionByName(denied.select("url"))
-            .unionByName(failed.select("url"))
-            .unionByName(too_large.select("url"))
-        )
 
         # (opt-in) append this wave's link edges — the PageRank input.
         # DISTINCT (src, dst): a url is fetched once ever (seen set), so
@@ -740,21 +759,17 @@ class CrawlEngine:
         # cfg.pagerank_every waves.
         if cfg.pagerank_every:
             links_df = (
-                ok.select(F.col("url").alias("src"), F.explode("links").alias("raw"))
-                .withColumn("c", canonicalize_udf("raw"))
-                .filter("c.valid")
-                .select("src", F.col("c.url_canonical").alias("dst"))
+                canonical_urls(
+                    ok_links.select(F.col("url").alias("src"), F.explode("links").alias("raw")),
+                    "raw",
+                )
+                .select("src", F.col("url_canonical").alias("dst"))
                 .distinct()
             )
             wh.commit(links_df, "links", wave=wave)
-        if cfg.hll_metrics_m:
-            # two consumers when the distinct-discovered sketch is on
-            # (the frontier chain below + the register agg after it);
-            # the frontier job populates the cache, the sketch reads it
-            discovered = discovered.persist()
         obs_disc = Observation(f"disc-{wave}")
         discovered_new = (
-            self._filter_unseen(discovered)  # pre-wave snapshots
+            self._filter_unseen(discovered, keep)  # pre-wave snapshots
             .join(terminal, "url", "left_anti")
             .observe(obs_disc, F.count(F.lit(1)).alias("n"))
         )
@@ -768,14 +783,12 @@ class CrawlEngine:
             except BaseException as e:  # re-raised on the main thread
                 seen_err.append(e)
 
-        import threading
-
         seen_thread = threading.Thread(
             target=_commit_seen, name=f"seen-commit-{wave}", daemon=True
         )
         seen_thread.start()
 
-        # 7. next frontier = deferred ∪ retries ∪ (discovered − seen),
+        # 8. next frontier = deferred ∪ retries ∪ (discovered − seen),
         #    deduped by url (min depth → max score; max attempt wins).
         #    n_discovered observed during the frontier write.
         # deferred ≡ unseen − selected − denied ≡ allowed − selected
@@ -802,10 +815,7 @@ class CrawlEngine:
                     F.first("custom_headers", ignorenulls=True).alias("custom_headers"),
                 )
                 .repartition(
-                    # estimate: deferred bounded by frontier_in; discovery
-                    # bounded by ok-pages × links/page
-                    self._n_shuffle(n_frontier_in + n_frontier_in // 2 + 64),
-                    F.pmod(F.xxhash64("host"), F.lit(cfg.num_host_buckets)),
+                    n_out, F.pmod(F.xxhash64("host"), F.lit(cfg.num_host_buckets))
                 )
             )
             wh.commit(frontier_out, "frontier", wave=wave)
@@ -845,7 +855,6 @@ class CrawlEngine:
                 discovered, F.col("url"), m=cfg.hll_metrics_m
             ).collect():
                 hll_regs[int(r["register_id"])] = int(r["max_rho"])
-            discovered.unpersist()
 
         metrics = WaveMetrics(
             wave=wave,
@@ -880,10 +889,6 @@ class CrawlEngine:
         if cfg.snapshot_keep_last:
             wh.expire_snapshots("frontier", cfg.snapshot_keep_last)
             wh.expire_snapshots(cfg.seen_filter, cfg.snapshot_keep_last)
-
-        pol.unpersist()
-        selected.unpersist()
-        extracted.unpersist()
         return metrics
 
     # -- loop ----------------------------------------------------------------

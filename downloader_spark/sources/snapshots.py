@@ -14,7 +14,10 @@ Semantics preserved (reference analogs):
   job_manager.py:210-273: last-commit-wins pointer swap);
 - resume-from-any-snapshot (read_snapshot(table, k));
 - per-partition row counts recorded per snapshot (the north rule's
-  "per-partition lineage + metrics").
+  "per-partition lineage + metrics");
+- the written schema recorded per snapshot, so a read plans from the
+  log alone (Iceberg reads its schema from table metadata too) and
+  launches no Parquet schema-inference job.
 
 Swapping in real Iceberg is a config change: the call sites use only
 ``commit`` / ``read`` / ``current_id``.
@@ -27,7 +30,21 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the form Parquet reads every column back in."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _as_nullable(dt.valueType), True)
+    return dt
 
 
 class SnapshotWarehouse:
@@ -69,22 +86,18 @@ class SnapshotWarehouse:
         df: DataFrame,
         table: str,
         wave: int | None = None,
-        partition_cols: list[str] | None = None,
         extra: dict | None = None,
     ) -> int:
         """Write df as the table's next snapshot; returns snapshot id.
 
-        Lineage: per-output-partition row counts via
-        ``spark_partition_id()`` observed during the SAME write pass
-        (count-after-write would rescan)."""
+        Lineage: per-output-partition row counts from the written
+        files' footers (count-after-write would rescan). The entry
+        records the schema as ``read`` will see it (all nullable)."""
         meta = self._load_meta(table)
         snap_id = (meta["current"] + 1) if meta["current"] is not None else 0
         path = self._snap_dir(table, snap_id)
 
-        writer = df.write.mode("errorifexists")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        df.write.mode("errorifexists").parquet(path)
 
         # lineage from the parquet FOOTERS (pyarrow metadata read — no
         # Spark job, no data scan; one output file ≙ one partition)
@@ -97,6 +110,7 @@ class SnapshotWarehouse:
             "n_rows": n_rows,
             "n_partitions": len(partitions),
             "partitions": partitions,
+            "schema": _as_nullable(df.schema).json(),
             "committed_at": time.time(),
         }
         if extra:
@@ -129,10 +143,14 @@ class SnapshotWarehouse:
             snap_id = meta["current"]
         if snap_id is None:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        known = {s["id"] for s in meta["snapshots"]}
-        if snap_id not in known:
+        entry = next((s for s in meta["snapshots"] if s["id"] == snap_id), None)
+        if entry is None:
             raise FileNotFoundError(f"table {table} has no snapshot {snap_id}")
-        return spark.read.parquet(self._snap_dir(table, snap_id))
+        path = self._snap_dir(table, snap_id)
+        if "schema" not in entry:  # written before schemas were recorded
+            return spark.read.parquet(path)
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        return spark.read.schema(schema).parquet(path)
 
     def rollback_above(self, table: str, wave: int) -> list[int]:
         """Drop every snapshot committed for a wave LATER than ``wave``

@@ -57,7 +57,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonicalize_udf, make_crawl_extract_udf
+from ..functions.udfs import canonical_urls, canonicalize_udf, make_crawl_extract_udf
 from ..plans.crawlconfig import CrawlConfig
 from ..plans.politeness import build_robots_dim, with_politeness
 
@@ -107,11 +107,9 @@ def streaming_crawl(
 
     # seed file: canonicalize driver-side via one tiny job (depth 0)
     seeds_df = (
-        spark.createDataFrame([(s,) for s in seeds], "raw string")
-        .select(canonicalize_udf("raw").alias("c"))
-        .filter("c.valid")
+        canonical_urls(spark.createDataFrame([(s,) for s in seeds], "raw string"), "raw")
         .select(
-            F.col("c.url_canonical").alias("url"),
+            F.col("url_canonical").alias("url"),
             F.lit(0).alias("depth"),
             F.lit(False).alias("requeued"),
         )
@@ -194,14 +192,12 @@ def streaming_crawl(
                     os.path.join(results_dir, f"b{bid}")
                 )
                 if max_depth > 0:
-                    disc = (
-                        out.filter(F.col("depth") < F.lit(max_depth))
-                        .select(
+                    disc = canonical_urls(
+                        out.filter(F.col("depth") < F.lit(max_depth)).select(
                             F.explode("_links").alias("raw"),
                             (F.col("depth") + 1).alias("depth"),
-                        )
-                        .select(canonicalize_udf("raw").alias("c"), "depth")
-                        .filter("c.valid")
+                        ),
+                        "raw",
                     )
                     if cfg.url_filter:
                         # same pre-frontier URL gate as the wave engine
@@ -213,16 +209,16 @@ def streaming_crawl(
 
                         domains, weights, block_at = cfg.resolved_url_filter()
                         disc = disc.filter(
-                            ~domain_blocked_col(F.col("c.host"), domains)
+                            ~domain_blocked_col(F.col("host"), domains)
                             & (
                                 url_spam_score(
-                                    F.col("c.url_canonical"), weights
+                                    F.col("url_canonical"), weights
                                 )
                                 < F.lit(block_at)
                             )
                         )
                     discovered = (
-                        disc.groupBy(F.col("c.url_canonical").alias("url"))
+                        disc.groupBy(F.col("url_canonical").alias("url"))
                         .agg(F.min("depth").alias("depth"))
                         .withColumn("requeued", F.lit(False))
                     )

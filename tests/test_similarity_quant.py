@@ -369,3 +369,38 @@ def test_pq_probe_recall_with_rerank(spark, emb, tmp_path):
     }
     raw_recall = len(exact & raw) / len(exact)
     assert raw_recall >= 0.4, f"pq reconstruction-only recall {raw_recall}"
+
+
+def test_sq8_rerank_skips_zero_vector(spark, emb, tmp_path):
+    """A zero-norm vector has no cosine: as an index candidate (through
+    the rerank) or as a query it is never a neighbour, and the probe
+    neither raises DIVIDE_BY_ZERO under ANSI nor emits a non-finite
+    score."""
+    zero_id = 10**6
+    dim = len(emb.select("embedding").first()[0])
+    small = emb.filter(F.col("vec_id") < 60).select("vec_id", "embedding")
+    zero = spark.createDataFrame(
+        [(zero_id, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    corpus = small.unionByName(zero)
+    index = build_ivf_index(
+        corpus, n_centroids=4, iters=2, path=str(tmp_path / "ivf_zero"),
+        quantize="sq8",
+    )
+    qry = corpus.filter((F.col("vec_id") % 10 == 0) | (F.col("vec_id") == zero_id)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    # nprobe = every list and a factor past the corpus size: the zero
+    # vector survives the approximate pass and reaches the rerank
+    rows = ivf_probe(
+        index, qry, k=3, nprobe=4, rerank_from=corpus, rerank_factor=100
+    ).collect()
+    assert rows
+    assert all(math.isfinite(r["cosine"]) for r in rows)
+    assert zero_id not in {r["cand_id"] for r in rows}
+    assert zero_id not in {r["query_id"] for r in rows}
+    per_query = {}
+    for r in rows:
+        per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + 1
+    assert set(per_query.values()) == {3}
+    assert len(per_query) == qry.count() - 1

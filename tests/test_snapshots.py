@@ -66,3 +66,49 @@ def test_meta_is_atomic_json(spark, wh):
         meta = json.load(f)
     assert meta["current"] == 0
     assert not os.path.exists(meta_path + ".tmp")
+
+
+def _job_ids(spark, group):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_of_stored_schema_launches_no_job(spark, wh):
+    wh.commit(_df(spark, 10), "t", wave=1)
+    sc = spark.sparkContext
+    group = "snapshot-read-no-job"
+    sc.setJobGroup(group, "snapshot read")
+    try:
+        before = _job_ids(spark, group)
+        df = wh.read(spark, "t")
+        after = _job_ids(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before  # no Parquet schema-inference job
+    assert {r["id"] for r in df.collect()} == set(range(10))
+
+
+def test_stored_schema_is_the_parquet_schema(spark, wh):
+    df = spark.createDataFrame(
+        [(1, [1.0], {"k": "v"}, ("a", 2))],
+        "id long not null, xs array<double>, m map<string,string>, "
+        "s struct<a:string not null, b:int>",
+    )
+    wh.commit(df, "t", wave=1)
+    written = spark.read.parquet(wh._snap_dir("t", 0)).schema
+    assert wh.read(spark, "t").schema == written
+
+
+def test_entry_without_schema_still_reads(spark, wh):
+    """Warehouses written before snapshot entries carried a schema
+    fall back to Parquet schema inference."""
+    wh.commit(_df(spark, 5), "t", wave=1)
+    meta_path = os.path.join(wh.root, "t", "_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["snapshots"][0]["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    got = wh.read(spark, "t")
+    assert got.schema == spark.read.parquet(wh._snap_dir("t", 0)).schema
+    assert {r["id"] for r in got.collect()} == set(range(5))
