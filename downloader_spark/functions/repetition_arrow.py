@@ -1,16 +1,14 @@
-"""Arrow fast path for the Gopher repetition pack — a pandas-UDF
-recompute of functions/text.with_repetition that is VALUE-IDENTICAL to
-the native interpreted-HOF implementation (pinned bit-for-bit by
-tests/test_repetition_arrow.py over a crafted battery AND the sf0.01
-corpus), at a fraction of its per-document constant (the r5 verdict's
-named "2-5× lever": the native path's per-row cost is ~10 ms/doc of
-interpreted HOF evaluation; a Python dict/Counter pass over the same
-token arrays is ~10-20× cheaper per row and arrives Arrow-batched).
+"""The Gopher repetition pack (Rae et al. 2021 §A1.1, Table A1) as one
+Arrow-batched pandas UDF: a Python dict/Counter pass per document is
+~10-20× cheaper per row than the same rules as interpreted
+higher-order-function column expressions (~10 ms/doc).
 
-The NATIVE implementation remains the semantic reference — the DuckDB
+``repetition_features_py`` is the semantic definition. The DuckDB
 oracles (gopher_quality / webtext_pipeline*, CLAUDE.md invariant 8)
-recompute ITS definition relationally, and this module's contract is
-equality with it, expression by expression:
+recompute the same definition relationally, and
+tests/test_repetition_arrow.py pins its values bit-for-bit (a crafted
+battery, null text and an sf0.01 corpus hash). The arithmetic contract
+the oracle SQL must follow, expression by expression:
 
 - tokens: split(trim(lower(text)), '\\s+') — Java semantics exactly:
   trim strips ONLY ASCII spaces (0x20), \\s is the ASCII class
@@ -30,9 +28,7 @@ equality ≡ joined-string equality — CLAUDE.md invariant 8), and the
 count-≥-2 guard applies to top-n-gram char fractions.
 
 Scale design: row-parallel, zero shuffle, one ArrowEvalPython node;
-the per-batch work is pure CPython over small per-doc lists. At 100 TB
-this is the same embarrassingly parallel shape as the native path —
-the lever is the per-doc constant, not the plan.
+the per-batch work is pure CPython over small per-doc lists.
 """
 
 from __future__ import annotations
@@ -74,10 +70,10 @@ def _toks_py(text: str) -> list[str]:
 
 
 def _cover_from_starts_py(toks: list[str], starts: list[int], n: int) -> int:
-    """Exact mirror of text._cover_from_starts: union coverage of
-    [s, s+n) token windows in the collapsed text — per window, chars of
-    the not-yet-covered suffix + its internal spaces + a boundary space
-    when the window overlaps previous coverage."""
+    """Union coverage of [s, s+n) token windows (``starts`` ascending)
+    in the whitespace-collapsed text, overlap counted once — per
+    window, chars of the not-yet-covered suffix + its internal spaces +
+    a boundary space when the window overlaps previous coverage."""
     end = 0
     cov = 0
     for s in starts:
@@ -94,16 +90,12 @@ def repetition_features_py(
     text: str | None, wanted: list[str]
 ) -> list[float | None]:
     """All requested repetition features for ONE document, in ``wanted``
-    order — the exact-arithmetic mirror of the native column
-    expressions (None text → all-None, like the native path's
-    null-propagating splits)."""
+    order, in exact integer arithmetic up to the final division."""
     if text is None:
-        # mirror the native null semantics exactly: line/para features
-        # propagate null (size(split(null)) is null), but the gram
-        # features come out 0.0 — size(null) >= n is null, so
-        # _gram_structs takes its empty-array branch, the run-max/
-        # coverage aggregates yield 0, and greatest(length(null), 1)
-        # skips the null → 0 / 1 = 0.0
+        # null text: line/para features are null (the SQL form of a
+        # split of null), gram features 0.0 (no grams, and the char
+        # denominator greatest(length(null), 1) is 1) — pinned by
+        # tests/test_repetition_arrow.py and the DuckDB oracles
         return [
             None if f.startswith(("dup_line", "dup_para")) else 0.0
             for f in wanted
@@ -160,10 +152,32 @@ def repetition_features_py(
 
 
 def with_repetition_arrow(df, text_col: str = "text", features=None):
-    """Drop-in replacement for text.with_repetition (same columns, same
-    values, same subset semantics): one Arrow-batched pandas UDF
-    computes the feature struct per row; flags and the composite
-    ``repetition_pass`` stay native expressions over its fields."""
+    """Append the Gopher repetition features, one ``*_heavy`` flag per
+    feature (feature > its GOPHER_REPETITION_THRESHOLDS bound) and the
+    composite ``repetition_pass`` to ``df``. One Arrow-batched pandas
+    UDF computes the feature struct per row; flags and the composite
+    stay native expressions over its fields. All ratios are rounded to
+    6 dp over exact integer numerators, so the DuckDB oracle recomputes
+    them bit-equal.
+
+    ``features`` selects a subset (default: all 13); unrequested
+    features are not computed. ``repetition_pass`` is emitted only for
+    the full pack (a subset pass would silently mean less).
+
+    Paragraphs split on a blank line (\\n\\n); lines on \\n. Duplicate
+    fractions count occurrences beyond the first (total − distinct);
+    char fractions weight those occurrences by length over total text
+    chars. Top-n-gram char fraction is count·len of the most
+    character-covering REPEATED n-gram (count ≥ 2 — otherwise the
+    single longest n-gram trips the threshold on short documents; the
+    public implementations guard count > 1 the same way) over total
+    text chars (sliding grams overlap, so a pathological doc can exceed
+    1 — thresholds only test the upper side, as in the published
+    rule-set). Dup-{5..10}-gram char fractions are the characters
+    covered by the UNION of all n-gram occurrences whose gram appears
+    ≥ 2 times, overlap counted ONCE (Rae et al. count "characters
+    contained within all duplicate n-grams"), measured in the
+    whitespace-collapsed text over the same char denominator."""
     wanted = (
         list(features) if features is not None else list(REPETITION_FEATURES)
     )

@@ -39,11 +39,6 @@ def lang_scores_of_tokens(toks: Column) -> dict[str, Column]:
     return out
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language stopword-hit counts (with multiplicity) over tokens."""
-    return lang_scores_of_tokens(_tokens(text))
-
-
 def detect_lang_from_tokens(toks: Column) -> Column:
     """argmax over lang_scores_of_tokens — see detect_lang."""
     scores = lang_scores_of_tokens(toks)
@@ -59,8 +54,8 @@ def detect_lang_from_tokens(toks: Column) -> Column:
 
 
 def detect_lang(text: Column) -> Column:
-    """argmax over lang_scores, ties broken alphabetically (first lang);
-    'und' when nothing matches."""
+    """argmax over lang_scores_of_tokens, ties broken alphabetically
+    (first lang); 'und' when nothing matches."""
     return detect_lang_from_tokens(_tokens(text))
 
 
@@ -235,8 +230,10 @@ def gopher_flags(
 # Published Gopher repetition thresholds (Rae et al. 2021 §A1.1, Table
 # A1 — the within-document half of the rule-pack; drop_repeated_spans
 # is the cross-document complement). Fractions over the WHOLE document:
-# duplicate lines/paragraphs by occurrence and by character mass, and
-# the character mass covered by the single most-repeated word n-gram.
+# duplicate lines/paragraphs by occurrence and by character mass, the
+# character mass of the most-covering repeated word 2/3/4-gram, and the
+# character mass covered by all repeated word 5..10-grams. The pack is
+# computed by functions/repetition_arrow.with_repetition_arrow.
 GOPHER_REPETITION_THRESHOLDS = {
     "max_dup_line_frac": 0.30,
     "max_dup_para_frac": 0.30,
@@ -286,271 +283,6 @@ REPETITION_FLAGS = [
 ]
 
 
-def _sum_lengths(arr: Column) -> Column:
-    """Σ len(element) over a string array — exact long arithmetic; the
-    lambdas reference only their own variables (no outer-expression
-    capture, so no per-element re-inline hazard)."""
-    return F.aggregate(
-        F.transform(arr, lambda x: F.length(x).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
-
-def _max_run_cover(sorted_grams: Column, n: int) -> Column:
-    """max over REPEATED grams g (count ≥ 2) of count(g)·len(g),
-    computed as ONE aggregate pass over the SORTED ``(g, p)`` struct
-    array (equal grams are adjacent; a run's cover grows
-    monotonically, so updating the best at every step ≥ 2 equals the
-    per-distinct-gram maximum). len(g) is the space-joined char length
-    (_gram_chars), evaluated LAZILY only on run elements ≥ 2 — a clean
-    document never pays it. Grams occurring once contribute 0 —
-    otherwise the single LONGEST n-gram's own length trips the
-    threshold on short documents, which is not what the published rule
-    measures (the public implementations guard count > 1 the same
-    way). The accumulator lambda touches only (acc, x) — safe from the
-    inline-HOF recompute hazard; the collection argument is evaluated
-    once regardless."""
-    zero = F.struct(
-        F.array().cast("array<array<string>>").alias("pg"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-    )
-
-    def step(acc, x):
-        same = (F.size(acc["pg"]) > 0) & (F.element_at(acc["pg"], 1) == x["g"])
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        cover = F.when(run >= 2, run * _gram_chars(x["g"], n)).otherwise(
-            F.lit(0).cast("long")
-        )
-        return F.struct(
-            F.array(x["g"]).alias("pg"),
-            run.alias("run"),
-            F.greatest(acc["best"], cover).alias("best"),
-        )
-
-    return F.aggregate(sorted_grams, zero, step, lambda acc: acc["best"])
-
-
-def _gram_structs(toks: Column, n: int) -> Column:
-    """Word n-grams as ``struct(g: array<string>, p: int)`` — the gram
-    is the raw TOKEN SLICE, never a concatenated string: tokens cannot
-    contain whitespace (they come from a \\s+ split), so slice equality
-    ≡ joined-string equality, and skipping the per-gram concat_ws is
-    the single biggest cost cut in this interpreted per-row path
-    (measured: string-gram build + string sort dominated the v1
-    dup-n-gram wall). ``p`` is the 0-based start position. ``toks``
-    must be a materialized column (lambda-body reference)."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.struct(F.slice(toks, i, n).alias("g"), (i - 1).alias("p")),
-        ),
-    ).otherwise(F.array().cast("array<struct<g: array<string>, p: int>>"))
-
-
-def _gram_chars(g: Column, n: int) -> Column:
-    """Char length of the space-joined gram: Σ token lengths + (n-1)."""
-    return (
-        F.aggregate(
-            F.transform(g, lambda w: F.length(w).cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        + F.lit(n - 1).cast("long")
-    )
-
-
-def _dup_positions(sorted_grams: Column) -> Column:
-    """Ascending start positions of grams occurring ≥ 2 times, from the
-    SORTED ``(g, p)`` struct array (equal grams adjacent; within a run
-    positions ascend). One aggregate pass appending positions only for
-    run elements — a clean document appends nothing — then one sort of
-    the (small) position array to restore document order across runs."""
-    zero = F.struct(
-        F.array().cast("array<array<string>>").alias("pg"),
-        F.lit(0).alias("pp"),
-        F.lit(0).alias("run"),
-        F.array().cast("array<int>").alias("out"),
-    )
-
-    def step(acc, x):
-        same = F.size(acc["pg"]) > 0
-        same = same & (F.element_at(acc["pg"], 1) == x["g"])
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1))
-        out = (
-            F.when(
-                same & (run == 2),
-                F.array_append(F.array_append(acc["out"], acc["pp"]), x["p"]),
-            )
-            .when(same, F.array_append(acc["out"], x["p"]))
-            .otherwise(acc["out"])
-        )
-        return F.struct(
-            F.array(x["g"]).alias("pg"),
-            x["p"].alias("pp"),
-            run.alias("run"),
-            out.alias("out"),
-        )
-
-    return F.array_sort(F.aggregate(sorted_grams, zero, step, lambda a: a["out"]))
-
-
-def _cover_from_starts(toks: Column, starts: Column, n: int) -> Column:
-    """Characters of the whitespace-collapsed text covered by the
-    UNION of [s, s+n) token windows (``starts`` ascending, one window
-    per dup-gram position) — overlap counted once, per the published
-    dup-n-gram rule. Scans the STARTS (not the tokens): per window,
-    chars = Σ token lengths over the not-yet-covered suffix
-    [max(s, end), s+n) + its internal spaces + the boundary space when
-    the window overlaps previous coverage (lo > s ⟹ this window spans
-    lo-1 and lo). A clean document (no dup grams) does ZERO work; a
-    pathological one does O(total window length). Both ``toks`` and
-    ``starts`` must be MATERIALIZED columns (lambda-body references)."""
-    zero = F.struct(F.lit(0).alias("end"), F.lit(0).cast("long").alias("cov"))
-
-    def step(acc, s):
-        lo = F.greatest(s, acc["end"])
-        hi = s + n
-        seg_chars = F.aggregate(
-            F.transform(
-                F.slice(toks, lo + 1, F.greatest(hi - lo, F.lit(0))),
-                lambda w: F.length(w).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        add = F.when(
-            hi > lo,
-            seg_chars
-            + (hi - lo - 1).cast("long")
-            + F.when(lo > s, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-        ).otherwise(F.lit(0).cast("long"))
-        return F.struct(
-            F.greatest(acc["end"], hi).alias("end"),
-            (acc["cov"] + add).alias("cov"),
-        )
-
-    return F.when(F.size(starts) == 0, F.lit(0).cast("long")).otherwise(
-        F.aggregate(starts, zero, step, lambda a: a["cov"])
-    )
-
-
-def with_repetition(df, text_col: str = "text", features: list[str] | None = None):
-    """Append the Gopher repetition features + per-rule flags + the
-    composite ``repetition_pass`` to ``df`` — a DataFrame-level API
-    (unlike the pure-column content pack) because the token/line/
-    paragraph arrays must be MATERIALIZED in their own projection
-    before any HOF lambda references them (CollapseProject keeps
-    multiply-referenced non-cheap expressions separate; an inline
-    split would re-evaluate per array element — the measured 3.7-14×
-    class). All ratios rounded to 6 dp; numerators are exact integer
-    sums, so the DuckDB oracle recomputes them bit-equal.
-
-    ``features`` selects a subset (default: all 7). Unrequested
-    features skip their array builds entirely — a gate that only tests
-    dup-line/dup-para/top-2-gram (webtext_pipeline) shouldn't pay for
-    two extra gram sorts per row. ``repetition_pass`` is emitted only
-    for the full pack (a subset pass would silently mean less).
-
-    Paragraphs split on a blank line (\\n\\n); lines on \\n. Duplicate
-    fractions count occurrences beyond the first (total − distinct);
-    char fractions weight those occurrences by length over total text
-    chars. Top-n-gram char fraction is count·len of the most
-    character-covering REPEATED n-gram (count ≥ 2; see _max_run_cover)
-    over total text chars (sliding grams overlap, so a pathological
-    doc can exceed 1 — thresholds only test the upper side, as in the
-    published rule-set). Dup-{5..10}-gram char fractions are the
-    section's third family: characters covered by the UNION of all
-    n-gram occurrences whose gram appears ≥ 2 times, overlap counted
-    ONCE (Rae et al. count "characters contained within all duplicate
-    n-grams"), measured in the whitespace-collapsed text and divided
-    by the same original-text char denominator as the top-n-gram
-    rules — see _cover_from_starts for the starts-driven scan."""
-    wanted = list(features) if features is not None else list(REPETITION_FEATURES)
-    unknown = set(wanted) - set(REPETITION_FEATURES)
-    if unknown:
-        raise ValueError(f"unknown repetition features: {sorted(unknown)}")
-    t = F.col(text_col)
-    need_lines = any(f.startswith("dup_line") for f in wanted)
-    need_paras = any(f.startswith("dup_para") for f in wanted)
-    gram_ns = [n for n in (2, 3, 4) if f"top_{n}gram_char_frac" in wanted]
-    dup_ns = [n for n in (5, 6, 7, 8, 9, 10) if f"dup_{n}gram_char_frac" in wanted]
-    base = df
-    if need_lines:
-        base = base.withColumn("_rl", F.split(t, "\n"))
-    if need_paras:
-        base = base.withColumn("_rp", F.split(t, "\n\n"))
-    if gram_ns or dup_ns:
-        base = base.withColumn("_rt", _tokens(t))
-    # n-gram features share one representation per n: struct(token
-    # SLICE, position) — no gram strings are ever concatenated — built
-    # and SORTED in separate projections (each is a lambda-body
-    # reference downstream). Top-n features run the run-max aggregate
-    # over the sorted array; dup-n features extract the (usually
-    # empty) dup-position array and pay coverage costs only on
-    # repetitive documents.
-    dup_tmp: list[str] = []
-    for n in sorted(set(gram_ns) | set(dup_ns)):
-        base = base.withColumn(f"_gp{n}", _gram_structs(F.col("_rt"), n))
-        base = base.withColumn(f"_sp{n}", F.array_sort(F.col(f"_gp{n}")))
-        dup_tmp += [f"_gp{n}", f"_sp{n}"]
-        if n in dup_ns:
-            base = base.withColumn(f"_st{n}", _dup_positions(F.col(f"_sp{n}")))
-            dup_tmp.append(f"_st{n}")
-    nchars = F.greatest(F.length(t), F.lit(1)).cast("double")
-    lines, paras, toks = F.col("_rl"), F.col("_rp"), F.col("_rt")
-    n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    n_paras = F.greatest(F.size(paras), F.lit(1)).cast("double")
-    exprs = {
-        "dup_line_frac": lambda: F.round(
-            (F.size(lines) - F.size(F.array_distinct(lines))) / n_lines, 6
-        ),
-        "dup_para_frac": lambda: F.round(
-            (F.size(paras) - F.size(F.array_distinct(paras))) / n_paras, 6
-        ),
-        "dup_line_char_frac": lambda: F.round(
-            (_sum_lengths(lines) - _sum_lengths(F.array_distinct(lines))) / nchars, 6
-        ),
-        "dup_para_char_frac": lambda: F.round(
-            (_sum_lengths(paras) - _sum_lengths(F.array_distinct(paras))) / nchars, 6
-        ),
-        **{
-            f"top_{n}gram_char_frac": (
-                lambda n=n: F.round(
-                    _max_run_cover(F.col(f"_sp{n}"), n) / nchars, 6
-                )
-            )
-            for n in (2, 3, 4)
-        },
-        **{
-            f"dup_{n}gram_char_frac": (
-                lambda n=n: F.round(
-                    _cover_from_starts(toks, F.col(f"_st{n}"), n) / nchars, 6
-                )
-            )
-            for n in (5, 6, 7, 8, 9, 10)
-        },
-    }
-    feats = base.withColumns({f: exprs[f]() for f in wanted}).drop(
-        "_rl", "_rp", "_rt", *dup_tmp
-    )
-    th = GOPHER_REPETITION_THRESHOLDS
-    flags = {
-        flag: F.col(feat) > F.lit(th[f"max_{feat}"])
-        for feat, flag in zip(REPETITION_FEATURES, REPETITION_FLAGS)
-        if feat in wanted
-    }
-    out = feats.withColumns(flags)
-    if set(wanted) != set(REPETITION_FEATURES):
-        return out
-    rep_fail = None
-    for flag in REPETITION_FLAGS:
-        rep_fail = F.col(flag) if rep_fail is None else (rep_fail | F.col(flag))
-    return out.withColumn("repetition_pass", ~rep_fail)
-
-
 def tokens_of(text: Column) -> Column:
     """Whitespace token array (lower, trim, split on \\s+) — the split
     fingerprint64_of_words expects. Materialize in its OWN projection
@@ -577,13 +309,6 @@ def fingerprint64_of_words(toks: Column, k: int = 8) -> Column:
         idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, k)))
     )
     return F.xxhash64(F.concat_ws(",", F.transform(shingle_hashes, lambda h: h.cast("string"))))
-
-
-def fingerprint64(text: Column, k: int = 8) -> Column:
-    """Compat/spec form over raw text (carries the inline-lambda
-    recompute); hot paths must split once via tokens_of and call
-    fingerprint64_of_words — same output, ~3.7× faster at sf0.1."""
-    return fingerprint64_of_words(_tokens(text), k)
 
 
 # PII patterns kept to the Java-regex ∩ RE2 common dialect (no \b, no

@@ -9,6 +9,7 @@ verify step runs within buckets.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -60,13 +61,6 @@ def shingles_of_words(w: Column, k: int = 5) -> Column:
     )).otherwise(F.array(F.concat_ws(" ", w)))  # == the trimmed normalized text
 
 
-def shingles(text: Column, k: int = 5) -> Column:
-    """Word k-shingles as an array<string> — native, no Python.
-    Compat/spec form over raw text; hot paths split first and use
-    shingles_of_words (see its docstring for the 14× inline penalty)."""
-    return shingles_of_words(words_of(text), k)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -97,87 +91,6 @@ def minhash_signatures(
     ]
     return grams.groupBy("_id").agg(*mins).select(
         "_id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig")
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text: Column,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding, verified by estimated
-    Jaccard = fraction of matching minhash components.
-
-    Plan shape (scale-critical): signatures computed map-side; explode
-    to ``bands`` rows per doc; shuffle ONCE on (band, band_hash);
-    self-join within buckets (bucket sizes are collision-bounded);
-    estimated-Jaccard filter needs only the two signatures. Returns
-    (id_a, id_b, est_jaccard) with id_a < id_b, deduped across bands.
-    """
-    if bands <= 0 or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}); "
-            "otherwise trailing signature components are silently dropped "
-            "(and bands > num_hashes degenerates to an all-pairs join)"
-        )
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text, num_hashes, shingle_k)
-    banded = sig.select(
-        "_id",
-        "_sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("_sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "_sig", "bk.band", "bk.bhash")
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bhash") == F.col("r.bhash"),
-                F.col("l._id") < F.col("r._id"),
-            ],
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._sig").alias("sig_a"),
-            F.col("r._sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(float(num_hashes))
-    return (
-        pairs.withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -275,7 +188,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_df: int = 1000,
-    persist_grams: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over word k-grams for candidate pairs that share at
     least one k-gram (inverted-index join on the gram — no cross join).
@@ -292,20 +204,16 @@ def ngram_jaccard_pairs(
     base = df.select(F.col(id_col).alias("_id"), words_of(text).alias("_w")).select(
         "_id", shingles_of_words(F.col("_w"), k).alias("_gs")
     )
-    grams = cached_grams = base.select("_id", F.explode("_gs").alias("_g")).select(
-        "_id", F.xxhash64("_g").alias("gram")
+    # the exploded grams feed FOUR consumers (stop-gram df-agg,
+    # anti-join, per-doc counts, self-join); without a cache the
+    # shingle+explode scan recomputes per consumer (measured 3.3×
+    # slower — Catalyst does not ReusedExchange across these legs).
+    # MEMORY_AND_DISK, spill-safe; released before return (below).
+    grams = cached_grams = (
+        base.select("_id", F.explode("_gs").alias("_g"))
+        .select("_id", F.xxhash64("_g").alias("gram"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist_grams:
-        # the exploded grams feed FOUR consumers (stop-gram df-agg,
-        # anti-join, per-doc counts, self-join); without a cache the
-        # shingle+explode scan recomputes per consumer (measured 3.3×
-        # slower — Catalyst does not ReusedExchange across these legs).
-        # MEMORY_AND_DISK, spill-safe; scoped to this invocation's plan
-        # and evicted LRU. Callers preferring recompute over cache
-        # memory at very large inputs pass persist_grams=False.
-        from pyspark import StorageLevel
-
-        grams = cached_grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     hot = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -332,19 +240,18 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if persist_grams:
-        # RELEASE the gram cache before returning (ADVICE r3: persists
-        # with no release hook accumulate executor cache across
-        # invocations — LRU eviction saves correctness, not memory
-        # pressure). The pair list above threshold is tiny relative to
-        # the gram explosion, so eagerly materializing it as a TRACKED
-        # localCheckpoint lets the cache serve all four consumers and
-        # free immediately; the result's own blocks are exposed via
-        # release_result (ADVICE r4: an untracked checkpoint can never
-        # be freed by the caller — unpersist is a no-op on it).
-        out, out_ids = _ckpt_tracked(out)
-        out._ckpt_ids = out_ids
-        cached_grams.unpersist()
+    # RELEASE the gram cache before returning (ADVICE r3: persists with
+    # no release hook accumulate executor cache across invocations —
+    # LRU eviction saves correctness, not memory pressure). The pair
+    # list above threshold is tiny relative to the gram explosion, so
+    # eagerly materializing it as a TRACKED localCheckpoint lets the
+    # cache serve all four consumers and free immediately; the result's
+    # own blocks are exposed via release_result (ADVICE r4: an untracked
+    # checkpoint can never be freed by the caller — unpersist is a no-op
+    # on it).
+    out, out_ids = _ckpt_tracked(out)
+    out._ckpt_ids = out_ids
+    cached_grams.unpersist()
     return out
 
 
@@ -652,7 +559,6 @@ def repeated_ngram_stats(
     text: Column,
     n: int = 3,
     min_df: int = 2,
-    persist_grams: bool = True,
 ) -> DataFrame:
     """Cross-document repeated word-n-gram detection — the span-level
     dedup primitive LLM pipelines run besides document-level near-dup
@@ -683,20 +589,16 @@ def repeated_ngram_stats(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     # split ONCE in its own projection — inline words re-inline into the
-    # transform lambda per gram (see shingles_of_words: measured 14×)
-    occ = df.select(F.col(id_col).alias("doc_id"), words_of(text).alias("_w")).select(
-        "doc_id", F.explode(gram_hashes).alias("g")
-    )
-    # two consumers (doc-frequency agg + occurrence re-join) — without a
+    # transform lambda per gram (see shingles_of_words: measured 14×).
+    # Two consumers (doc-frequency agg + occurrence re-join) — without a
     # cache the split+explode scan runs twice (same reasoning, and the
     # same spill-safe level, as ngram_jaccard_pairs' gram cache);
-    # released before return (see below), persist_grams=False opts into
-    # recompute instead of cache memory at very large inputs
-    cached_occ = None
-    if persist_grams:
-        from pyspark import StorageLevel
-
-        occ = cached_occ = occ.persist(StorageLevel.MEMORY_AND_DISK)
+    # released before return (see below)
+    occ = (
+        df.select(F.col(id_col).alias("doc_id"), words_of(text).alias("_w"))
+        .select("doc_id", F.explode(gram_hashes).alias("g"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     doc_freq = (
         occ.distinct()
         .groupBy("g")
@@ -721,14 +623,13 @@ def repeated_ngram_stats(
             F.coalesce("n_rep_grams", F.lit(0)).alias("n_rep_grams"),
         )
     )
-    if cached_occ is not None:
-        # release the gram cache (ADVICE r3): the per-doc counts (3
-        # longs/doc) are orders of magnitude smaller than the gram
-        # explosion — TRACKED checkpoint (freeable via release_result,
-        # ADVICE r4) and free the cache before returning
-        out, out_ids = _ckpt_tracked(out)
-        out._ckpt_ids = out_ids
-        cached_occ.unpersist()
+    # release the gram cache (ADVICE r3): the per-doc counts (3 longs/
+    # doc) are orders of magnitude smaller than the gram explosion —
+    # TRACKED checkpoint (freeable via release_result, ADVICE r4) and
+    # free the cache before returning
+    out, out_ids = _ckpt_tracked(out)
+    out._ckpt_ids = out_ids
+    occ.unpersist()
     return out
 
 

@@ -459,10 +459,9 @@ def q_gopher_quality(spark, sf_dir):
     )
     feats = gopher_features(F.col("text"), F.col("_gtoks"), F.col("_glines"))
     return (
-        # Arrow fast path — bit-exact vs functions/text.with_repetition
-        # (the oracle's semantic reference), pinned corpus-wide by
-        # tests/test_repetition_arrow.py; measured 4.5x on this query's
-        # per-doc constant
+        # the Arrow repetition pack — the oracle SQL recomputes
+        # repetition_features_py, whose values are pinned bit-for-bit
+        # by tests/test_repetition_arrow.py
         with_repetition_arrow(seeded)
         .select(
             "doc_id",
@@ -1153,8 +1152,9 @@ def q_embedding_knn_lsh(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 # Exact word-3-gram Jaccard ≥ 0.5 over all document pairs sharing a
-# gram — mirrors shingles() in operators/dedup.py (lowercase, collapse
-# whitespace, distinct k-grams, whole-text fallback below k words).
+# gram — mirrors shingles_of_words(words_of(text)) in operators/dedup.py
+# (lowercase, collapse whitespace, distinct k-grams, whole-text
+# fallback below k words).
 _JACCARD_ORACLE = """
     WITH norm AS (
       SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
@@ -1739,8 +1739,8 @@ def _webtext_gate(spark, corpus):
     )
     fl = gopher_flags(F.col("text"), F.col("_gtoks"), F.col("_glines"))
     return (
-        # Arrow fast path, bit-exact vs text.with_repetition (pinned by
-        # tests/test_repetition_arrow.py) — the oracle SQL is unchanged
+        # the Arrow repetition pack (values pinned bit-for-bit by
+        # tests/test_repetition_arrow.py; the oracle SQL recomputes it)
         with_repetition_arrow(
             corpus.withColumn("_fl", fl),
             features=["dup_line_frac", "dup_para_frac", "top_2gram_char_frac"],
@@ -2660,7 +2660,7 @@ def q_pii_redact(spark, sf_dir):
     """,
 )
 def q_fingerprint_groups(spark, sf_dir):
-    """DuckDB-checkable invariant for fingerprint64: the grouping it
+    """DuckDB-checkable invariant for fingerprint64_of_words: the grouping it
     induces must equal grouping by exact text (identical text → same
     fingerprint by construction; distinct texts collide with prob
     ~n²/2⁶⁴). Every 25th doc is unioned back verbatim so groups with

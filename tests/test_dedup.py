@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 
 from downloader_spark.operators.dedup import (
     exact_dup_groups,
-    minhash_lsh_pairs,
     minhash_signatures,
+    minhash_verified_pairs,
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
@@ -57,16 +57,17 @@ def test_minhash_signature_properties(docs):
 
 
 def test_minhash_lsh_finds_planted_pair(docs):
-    pairs = minhash_lsh_pairs(
+    # multi-row bands (8 bands × 4 rows)
+    pairs = minhash_verified_pairs(
         docs, "doc_id", F.col("text"), num_hashes=32, bands=8, shingle_k=3,
-        jaccard_threshold=0.5,
+        threshold=0.5,
     ).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in found
     assert (1, 3) in found or (2, 3) in found
     assert not any(4 in p for p in found)
     exact = [r for r in pairs if (r["id_a"], r["id_b"]) == (1, 2)]
-    assert exact[0]["est_jaccard"] == 1.0
+    assert exact[0]["jaccard"] == 1.0
 
 
 def test_simhash_near_dups(docs):
@@ -307,15 +308,6 @@ def test_gram_operators_release_cache(spark, docs):
     assert n_persistent() <= before2 + 1
     release_result(stats)
     assert n_persistent() <= before2
-
-    # opt-out path: no cache at all, plan fully lazy
-    before3 = n_persistent()
-    lazy = repeated_ngram_stats(
-        docs, "doc_id", F.col("text"), n=3, min_df=2, persist_grams=False
-    )
-    assert n_persistent() == before3
-    assert lazy.count() == docs.count()
-    assert n_persistent() == before3
 
 
 def test_connected_keepers_releases_cache(spark):

@@ -52,13 +52,13 @@ class TestHostileRobots:
 
 class TestMinhashGeometry:
     def test_bands_must_divide(self, spark):
-        from downloader_spark.operators.dedup import minhash_lsh_pairs
+        from downloader_spark.operators.dedup import minhash_band_candidates
 
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(ValueError):
-            minhash_lsh_pairs(df, "doc_id", F.col("text"), num_hashes=64, bands=10)
+            minhash_band_candidates(df, "doc_id", F.col("text"), num_hashes=64, bands=10)
         with pytest.raises(ValueError):
-            minhash_lsh_pairs(df, "doc_id", F.col("text"), num_hashes=8, bands=16)
+            minhash_band_candidates(df, "doc_id", F.col("text"), num_hashes=8, bands=16)
 
 
 class TestDuplicatePages:

@@ -221,12 +221,12 @@ def test_round4_text_operators_stay_native(spark):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-    # gopher_quality opted into the r6 Arrow repetition fast path
-    # (bit-exact vs the native reference, tests/test_repetition_arrow):
-    # exactly ONE ArrowEvalPython node, still no row-at-a-time Python
-    # and no nested loop. (webtext_pipeline uses the same fast path in
-    # its gate, but the gate is checkpoint-materialized, so its final
-    # plan shows zero Python — asserted above.)
+    # gopher_quality runs the Arrow repetition pack (values pinned by
+    # tests/test_repetition_arrow.py): exactly ONE ArrowEvalPython
+    # node, still no row-at-a-time Python and no nested loop.
+    # (webtext_pipeline uses the same pack in its gate, but the gate is
+    # checkpoint-materialized, so its final plan shows zero Python —
+    # asserted above.)
     import re
 
     plan = explain_str(Q["gopher_quality"](spark, SF_ORACLE))

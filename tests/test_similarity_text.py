@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 
 from downloader_spark.functions.text import (
     detect_lang,
-    fingerprint64,
+    fingerprint64_of_words,
     quality_score,
     subword_estimate,
     token_count,
+    tokens_of,
 )
 from downloader_spark.operators.similarity import cosine_topk, lsh_topk
 
@@ -90,18 +91,21 @@ def test_quality_and_fingerprint(spark):
     good = "the quality of this document is high and the words are plain"
     digits = "1234 5678 9999 0000 1111 2222 3333 4444 5555 6666 7777 8888"
     df = spark.createDataFrame([(1, good), (2, digits)], "id long, text string")
+    # the fingerprint_groups form: tokens materialized in their own
+    # projection, then fingerprinted
+    toks = df.select("id", "text", tokens_of(F.col("text")).alias("_toks"))
     got = {
         r["id"]: (r["q"], r["f"])
-        for r in df.select(
+        for r in toks.select(
             "id",
             quality_score(F.col("text")).alias("q"),
-            fingerprint64(F.col("text")).alias("f"),
+            fingerprint64_of_words(F.col("_toks")).alias("f"),
         ).collect()
     }
     assert got[1][0] > got[2][0]  # stopword-rich beats digit flood
     assert got[1][1] != got[2][1]
     # fingerprint is deterministic
-    again = df.select(fingerprint64(F.col("text")).alias("f")).collect()
+    again = toks.select(fingerprint64_of_words(F.col("_toks")).alias("f")).collect()
     assert {r["f"] for r in again} == {got[1][1], got[2][1]}
 
 
@@ -406,10 +410,8 @@ def test_gopher_repetition_features_and_flags(spark):
     a brute-force Python recompute, and varied prose passes all."""
     from collections import Counter
 
-    from downloader_spark.functions.text import (
-        REPETITION_FEATURES,
-        with_repetition,
-    )
+    from downloader_spark.functions.repetition_arrow import with_repetition_arrow
+    from downloader_spark.functions.text import REPETITION_FEATURES
 
     prose = (
         "the quick brown fox jumps over the lazy dog while seven wild "
@@ -426,7 +428,7 @@ def test_gopher_repetition_features_and_flags(spark):
             + "tail of unique closing words drifting past the quiet harbor"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in with_repetition(df).collect()}
+    got = {r["doc_id"]: r.asDict() for r in with_repetition_arrow(df).collect()}
 
     def brute(text):
         import re

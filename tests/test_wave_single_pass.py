@@ -5,6 +5,7 @@ wave-scoped caches are released whether the wave returns or raises."""
 import re
 
 import pytest
+from pyspark import StorageLevel
 
 from downloader_spark.functions.udfs import canonical_urls
 from downloader_spark.functions.urlnorm import canonicalize_url
@@ -21,8 +22,16 @@ def _engine(spark, path, **cfg):
     return CrawlEngine(spark, path, pages, CrawlConfig(**{**base, **cfg}))
 
 
-def _n_persistent(spark):
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+def _persistent_ids(spark):
+    """Ids of the session's persistent RDDs. A leak shows as a new id
+    (ids are never reused); the count alone is not a stable baseline,
+    because RDDs left unreachable by earlier work can drop out of the
+    map at any GC, including one during the wave being measured."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    out = set()
+    while it.hasNext():
+        out.add(int(it.next()))
+    return out
 
 
 def test_wave_snapshot_reads_match_parquet_schema(spark, tmp_path):
@@ -50,9 +59,11 @@ def test_run_wave_releases_its_caches(spark, tmp_path):
     with eng:
         eng.init(SEEDS)
         eng.run_wave(1)  # materializes the engine's deduped-pages cache
-        before = _n_persistent(spark)
+        before = _persistent_ids(spark)
         eng.run_wave(2)
-        assert _n_persistent(spark) == before
+        assert _persistent_ids(spark) - before == set()
+        # the engine-owned pages cache outlives the wave
+        assert eng._pages_base.storageLevel != StorageLevel.NONE
 
         # a wave that raises (here: at the metrics marker) releases too
         commit = eng.wh.commit
@@ -65,7 +76,8 @@ def test_run_wave_releases_its_caches(spark, tmp_path):
         eng.wh.commit = failing_commit
         with pytest.raises(RuntimeError, match="injected"):
             eng.run_wave(3)
-        assert _n_persistent(spark) == before
+        assert _persistent_ids(spark) - before == set()
+        assert eng._pages_base.storageLevel != StorageLevel.NONE
 
 
 def test_canonical_urls_is_one_python_node(spark):
