@@ -295,9 +295,10 @@ def _wave_scale_curve(
     (120k pages / 2k hosts at the defaults): the scale claim is that
     wave wall-clock tracks WAVE OUTPUT (selected+discovered), not total
     corpus or accumulated seen-set size — the O(wave-output) design.
-    Runs the default config (bloom_probe='auto'); ``cfg_overrides``
-    flips evidence variants (seen_filter='cuckoo', pagerank_every=1 —
-    the per-wave dict then splits out rank_refresh_sec)."""
+    Runs the default config (geometry picks the Bloom probe path);
+    ``cfg_overrides`` flips evidence variants (seen_filter='cuckoo',
+    pagerank_every=1 — the per-wave dict then splits out
+    rank_refresh_sec)."""
     import tempfile
 
     from downloader_spark.plans.crawlconfig import CrawlConfig

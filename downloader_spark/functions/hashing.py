@@ -86,9 +86,3 @@ def xxh64_str(s: str, seed: int = SPARK_SEED) -> int:
     """xxh64 of a string's UTF-8 bytes — matches ``F.xxhash64(col)`` on a
     StringType column with Spark's default seed 42."""
     return xxh64(s.encode("utf-8"), seed)
-
-
-def host_bucket(host: str, num_buckets: int) -> int:
-    """Frontier partition key: ``pmod(xxhash64(host), P)`` (north rule:
-    salted-by-host-hash partitioning; SURVEY §4.1)."""
-    return xxh64_str(host) % num_buckets

@@ -139,15 +139,6 @@ def hll_estimate_by(
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Lossless union of two same-m sketches: elementwise register max."""
-    return (
-        a.unionByName(b)
-        .groupBy("register_id")
-        .agg(F.max("max_rho").cast("int").alias("max_rho"))
-    )
-
-
 def hll_estimate(registers: DataFrame, m: int = 256) -> DataFrame:
     """One row (harmonic_s, n_zero_registers, est_distinct). The
     harmonic denominator S = Σ 2^(33 - rho) (empty register → 2^33) is

@@ -132,10 +132,6 @@ class Element(Node):
         idx = self.children.index(ref)
         self.children.insert(idx + 1, node)
 
-    def remove_child(self, node: Node) -> None:
-        self.children.remove(node)
-        node.parent = None
-
     def replace_child(self, old: Node, new: Node) -> None:
         idx = self.children.index(old)
         new.parent = self

@@ -154,14 +154,3 @@ def multi_format_results(
             F.col("_fmt.error_type").alias("error_type"),
         )
     )
-
-
-def format_error_map(fanout: DataFrame) -> DataFrame:
-    """Per-url ``errors {mime: error_type}`` map — the reference's
-    errors dict (content_processor.py:520-538)."""
-    errs = fanout.filter(F.col("error_type").isNotNull())
-    return errs.groupBy("url").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("mime", "error_type")))
-        ).alias("errors")
-    )

@@ -32,13 +32,12 @@ n_shards >> executor count (thousands at 100 TB) so each window
 partition is executor-sized — the per-shard sort is the same sort the
 shard write needs anyway. No driver collect, no all-pairs, no UDF in
 the packing itself (token counts arrive as a column; the BPE counter
-upstream is the one Arrow UDF). The writer buckets output by shard_id
-so a training loader reads one directory per shard in order.
+upstream is the one Arrow UDF).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.sketch import md5_60bit
@@ -110,37 +109,4 @@ def pack_token_shards(
         (hi - lo).cast("long").alias("n_tokens"),
         (lo == F.col("_before")).alias("is_doc_start"),
         (hi == F.col("_before") + F.col("_nt")).alias("is_doc_end"),
-    )
-
-
-def shard_manifest(packed: DataFrame, seq_len: int) -> DataFrame:
-    """Per-shard summary a training launcher consumes: sequence count,
-    token count, and whether the final sequence is partial. One
-    hash-agg over the packed rows."""
-    return (
-        packed.groupBy("shard_id")
-        .agg(
-            (F.max("seq_id") + 1).cast("long").alias("n_seqs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.count_distinct("doc_id").cast("long").alias("n_docs"),
-        )
-        .withColumn(
-            "last_seq_partial",
-            (F.col("n_tokens") % F.lit(seq_len)) != 0,
-        )
-    )
-
-
-def write_packed_shards(packed: DataFrame, path: str) -> None:
-    """Bucketed shard output: one directory per shard_id, rows sorted
-    by (seq_id, start_offset) within each file so a loader streams a
-    shard in training order without a post-read sort. repartition on
-    shard_id keeps one writer task per shard (no tiny-file spray);
-    sortWithinPartitions provides the in-file order."""
-    (
-        packed.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "seq_id", "start_offset")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(path)
     )

@@ -39,18 +39,14 @@ class CrawlConfig:
     bloom_bits_per_bucket: int = 1 << 17  # 16 KiB per bucket
     bloom_num_hashes: int = 5
     bloom_num_buckets: int = 16
-    use_bloom: bool = True
-    # 'broadcast': bitmaps collected once per snapshot and shipped per
-    # executor — right while the filter fits comfortably in driver +
-    # executor memory. 'cogroup': bucket-local probe (bloom.py), no
-    # driver collect — REQUIRED at 10^10-URL geometry where the filter
-    # is multi-GB. Same probe arithmetic, identical outputs.
-    # 'auto' (the default): pick by geometry — cogroup once the bitmap
-    # (num_buckets × bits_per_bucket / 8) exceeds bloom_broadcast_max
-    # bytes, so a multi-GB filter can never reach the driver because
-    # someone forgot a flag.
-    bloom_probe: str = "auto"
-    bloom_broadcast_max: int = 256 * 1024 * 1024  # auto-mode budget
+    # Bloom probe path, chosen by geometry: while the bitmap
+    # (num_buckets × bits_per_bucket / 8 = bloom_bitmap_bytes()) fits
+    # this budget it is collected once per snapshot and broadcast to
+    # executors; above it the probe is bucket-local (cogroup, bloom.py)
+    # with no driver collect — the only path at 10^10-URL geometry,
+    # where the filter is multi-GB. Same probe arithmetic, identical
+    # outputs.
+    bloom_broadcast_max: int = 256 * 1024 * 1024
     # which approximate seen-filter accelerates the anti-join (north
     # rule: "bloom/cuckoo"). 'bloom': OR-mergeable bitmaps — the
     # default (cheapest maintenance). 'cuckoo': 16-bit-fingerprint
@@ -65,7 +61,8 @@ class CrawlConfig:
     dedupe_pages: bool = True  # drop duplicate url captures (latest wins)
     # below this seen-set size the exact broadcast anti-join beats the
     # Bloom probe's extra Python pass; at crawl scale (≫ this) the Bloom
-    # path is the only one that avoids shuffling the whole frontier
+    # path is the only one that avoids shuffling the whole frontier.
+    # Above the seen size no approximate filter is built or probed.
     bloom_min_seen: int = 100_000
     seen_compact_every: int = 16  # compact the append-only seen table
     snapshot_keep_last: int = 1000  # TTL analog (T8)
@@ -117,13 +114,6 @@ class CrawlConfig:
         return domains, weights, block_at
 
     def __post_init__(self) -> None:
-        if self.bloom_probe not in ("auto", "broadcast", "cogroup"):
-            raise ValueError(
-                f"bloom_probe={self.bloom_probe!r} — must be 'auto', "
-                "'broadcast' or 'cogroup' (a typo here would silently "
-                "fall back to the broadcast path, which is unusable at "
-                "multi-GB filter geometry)"
-            )
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(
                 f"seen_filter={self.seen_filter!r} — must be 'bloom' or 'cuckoo'"
@@ -146,16 +136,6 @@ class CrawlConfig:
 
     def bloom_bitmap_bytes(self) -> int:
         return self.bloom_num_buckets * self.bloom_bits_per_bucket // 8
-
-    def resolved_bloom_probe(self) -> str:
-        """'auto' → geometry decision: the broadcast probe collects the
-        whole bitmap to the driver once per snapshot, so it is only
-        allowed while the bitmap fits the broadcast budget."""
-        if self.bloom_probe != "auto":
-            return self.bloom_probe
-        if self.bloom_bitmap_bytes() > self.bloom_broadcast_max:
-            return "cogroup"
-        return "broadcast"
 
     def score_for_depth(self, depth: int) -> int:
         return max(0, self.score_base - self.score_decay * depth)

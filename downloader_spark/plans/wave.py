@@ -384,18 +384,14 @@ class CrawlEngine:
             return df
         cfg = self.cfg
         seen = self.read_seen()
-        if (
-            cfg.use_bloom
-            and total >= cfg.bloom_min_seen
-            and self._filter_covered() == total
-        ):
+        if total >= cfg.bloom_min_seen and self._filter_covered() == total:
             if cfg.seen_filter == "cuckoo":
                 # cuckoo has no broadcast mode: the bucket-local probe
                 # is its only (and scale-correct) path
                 probed = cuckoo_maybe_seen_cogroup(
                     df, self.wh.read(self.spark, "cuckoo"), **self._cuckoo_geometry()
                 )
-            elif cfg.resolved_bloom_probe() == "cogroup":
+            elif cfg.bloom_bitmap_bytes() > cfg.bloom_broadcast_max:
                 # bucket-local path: no driver collect — the only probe
                 # that works once the filter is multi-GB (10^10 URLs)
                 probed = bloom_maybe_seen_cogroup(
@@ -428,7 +424,7 @@ class CrawlEngine:
         total_before = self._seen_total()
         wh.commit(terminal, "seen", wave=wave)
         total_after = self._seen_total()
-        if cfg.use_bloom and total_after >= cfg.bloom_min_seen:
+        if total_after >= cfg.bloom_min_seen:
             incremental = self._filter_covered() == total_before
             if cfg.seen_filter == "cuckoo":
                 geo = self._cuckoo_geometry()

@@ -2750,8 +2750,9 @@ def q_event_daily(spark, sf_dir):
     """,
 )
 def q_windowed_counts(spark, sf_dir):
-    """Tumbling-window agg — same function the streaming path uses
-    (streaming/events.windowed_event_counts), run on a bounded input."""
+    """Tumbling 6-hour window counts and value sums per event_type
+    (native ``F.window``, T7) on the bounded events table; the DuckDB
+    mirror buckets with ``time_bucket``."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "6 hours").alias("win"), "event_type")
@@ -2850,8 +2851,8 @@ def q_batch_validate(spark, sf_dir):
     """,
 )
 def q_user_sessions(spark, sf_dir):
-    """Gap-based sessionization (streaming/events.sessionize run on a
-    bounded input — native session_window, T7): a session extends while
+    """Gap-based sessionization on the bounded events table (native
+    ``F.session_window``, T7): a session extends while
     events arrive within the 30-min gap; end = last event + gap. The
     DuckDB mirror derives the same sessions via lag + cumulative sum —
     a hard check that session_window's [start, last+gap) semantics

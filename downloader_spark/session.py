@@ -56,7 +56,7 @@ def get_spark(
         # to STDOUT by default — they would corrupt the one-JSON-line
         # contract bench.py has with the driver; route them to stderr
         .config("spark.driver.extraJavaOptions", "-Xlog:all=warning:stderr:uptime")
-        # saveAsTable target (bucketed pages corpus, sources/bucketed.py)
+        # saveAsTable target (e.g. a url-bucketed pages table)
         # — keep managed-table files out of the repo working directory
         .config(
             "spark.sql.warehouse.dir",

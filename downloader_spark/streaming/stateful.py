@@ -1,60 +1,20 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Streaming URL-seen filters via ``applyInPandasWithState``.
 
-The rebuild's stand-in for the reference's per-job progress counters
-(job_manager.py:193-273 — monotonic processed/successful/failed counts
-under optimistic concurrency): per-key running totals maintained in the
-streaming state store, updated once per micro-batch, emitted as the
-current snapshot. State survives across triggers via the checkpoint —
-tested by draining a source in two AvailableNow runs and comparing the
-final totals to a batch groupBy (tests/test_scheduler_streaming.py).
+The batch engine's approximate seen filters (plans/bloom.py,
+plans/cuckoo.py) re-expressed as stateful streams: the state store
+holds one Bloom bitmap or one cuckoo table per url bucket, updated once
+per micro-batch, and each input url is emitted with ``first_seen``.
+State survives restarts via the checkpoint. The streaming crawl
+(streaming/crawl.py) runs them at frontier intake; tests drain a source
+in two AvailableNow runs across a restart
+(tests/test_formats_stateful.py).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id long, n_events long, sum_value double"
-STATE_SCHEMA = "n_events long, sum_value double"
-
-
-def _update_totals(
-    key: tuple[Any, ...],
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    # full precision lives in the STATE; rounding only at emission —
-    # rounding the stored value would compound error per micro-batch
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "sum_value": [round(total, 6)]}
-    )
-
-
-def running_user_totals(stream: DataFrame) -> DataFrame:
-    """Per-user running (n_events, sum_value) across ALL micro-batches."""
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _update_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming URL-seen filter (the crawl frontier as a stream)
-# ---------------------------------------------------------------------------
-
-SEEN_FILTER_OUTPUT = "url string, first_seen boolean"
 
 
 def _passthrough_schema(stream: DataFrame, url_col: str) -> tuple[str, list[str]]:

@@ -2,11 +2,11 @@
 """One-off 10×-scale crawl evidence run (round-2 VERDICT #6).
 
 Generates a ~1M-page web graph (10,000 hosts × ~100 pages Zipf) and
-runs 5 waves with the default config (bloom_probe='auto'), recording
-per-wave wall-clock and frontier throughput. Results are transcribed
-into BASELINE.md ("10×-scale crawl evidence"); the per-round bench
-carries the smaller always-run variant (bench._wave_scale_curve at
-120k pages).
+runs 5 waves with the default config (Bloom probe path chosen by
+bitmap geometry), recording per-wave wall-clock and frontier
+throughput. Results are transcribed into BASELINE.md ("10×-scale crawl
+evidence"); the per-round bench carries the smaller always-run variant
+(bench._wave_scale_curve at 120k pages).
 
 Round-6 variant (VERDICT r5 #8): ``--cuckoo`` switches the seen filter
 to the deletable cuckoo tables, ``--pagerank`` enables rank-informed

@@ -35,8 +35,6 @@ def main() -> None:
     ap.add_argument("--max-depth", type=int, default=3)
     ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
                     help="approximate seen-filter backend (cuckoo = deletable)")
-    ap.add_argument("--bloom-probe", choices=["auto", "broadcast", "cogroup"],
-                    default="auto", help="bloom probe mode (auto picks by geometry)")
     ap.add_argument("--pagerank-every", type=int, default=0,
                     help="refresh link-graph PageRank every k waves and rank "
                          "the frontier by it (0 = off)")
@@ -71,7 +69,7 @@ def main() -> None:
     )
     cfg = CrawlConfig(
         wave_seconds=args.wave_seconds, max_depth=args.max_depth,
-        seen_filter=args.seen_filter, bloom_probe=args.bloom_probe,
+        seen_filter=args.seen_filter,
         pagerank_every=args.pagerank_every,
         url_filter=args.url_filter or bool(blocklist),
         url_blocklist=blocklist,

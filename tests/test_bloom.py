@@ -87,9 +87,10 @@ def test_cogroup_probe_equals_broadcast_probe(spark):
 
 
 def test_engine_cogroup_probe_mode_equals_broadcast_mode(spark, tmp_path):
-    """CrawlConfig.bloom_probe='cogroup' must crawl EXACTLY like the
-    broadcast mode: same statuses, same seen set, same wave metrics —
-    the probe path is an implementation detail of the seen filter."""
+    """The cogroup probe (forced with a zero broadcast budget) must crawl
+    EXACTLY like the default broadcast probe: same statuses, same seen
+    set, same wave metrics — the probe path is an implementation detail
+    of the seen filter."""
     from downloader_spark.plans.crawlconfig import CrawlConfig
     from downloader_spark.plans.wave import CrawlEngine
     from downloader_spark.sources.pagegen import generate_web_graph
@@ -97,11 +98,12 @@ def test_engine_cogroup_probe_mode_equals_broadcast_mode(spark, tmp_path):
     pages = generate_web_graph(spark, n_hosts=6, pages_per_host=10, seed=5)
     seeds = [f"http://site{h:04d}.example/p/0" for h in range(6)]
     runs = {}
-    for mode in ("broadcast", "cogroup"):
+    budgets = {"broadcast": {}, "cogroup": {"bloom_broadcast_max": 0}}
+    for mode, budget in budgets.items():
         cfg = CrawlConfig(
             wave_seconds=10, max_per_host_per_wave=4, max_depth=2,
             bloom_min_seen=1, bloom_num_buckets=4,
-            bloom_bits_per_bucket=1 << 14, bloom_probe=mode,
+            bloom_bits_per_bucket=1 << 14, **budget,
         )
         eng = CrawlEngine(spark, str(tmp_path / f"wh_{mode}"), pages, cfg)
         eng.init(seeds)
@@ -112,30 +114,24 @@ def test_engine_cogroup_probe_mode_equals_broadcast_mode(spark, tmp_path):
         }
         seen = {r["url"] for r in eng.read_seen().collect()}
         runs[mode] = (res, seen, [vars(m) for m in metrics])
+        # which probe ran: only the broadcast path collects the bitmap
+        assert (eng._bloom_bc is None) == (mode == "cogroup"), mode
         eng.close()
     assert runs["broadcast"] == runs["cogroup"]
 
 
 def test_bloom_probe_validation_and_auto_geometry():
-    """CrawlConfig rejects typo'd probe modes (ADVICE r2) and 'auto'
-    resolves by bitmap geometry: past the broadcast budget the engine
-    must never collect bitmaps to the driver."""
-    import pytest as _pytest
-
+    """The probe path is chosen by bitmap geometry: the default filter
+    fits the broadcast budget, and past the budget the engine must never
+    collect bitmaps to the driver (cogroup)."""
     from downloader_spark.plans.crawlconfig import CrawlConfig
 
-    with _pytest.raises(ValueError, match="bloom_probe"):
-        CrawlConfig(bloom_probe="co-group")
-
     small = CrawlConfig()  # default geometry: 16 × 16 KiB = 256 KiB
-    assert small.bloom_probe == "auto"
-    assert small.resolved_bloom_probe() == "broadcast"
+    assert small.bloom_bitmap_bytes() == 256 * 1024
+    assert small.bloom_bitmap_bytes() <= small.bloom_broadcast_max
 
     big = CrawlConfig(
         bloom_num_buckets=1024, bloom_bits_per_bucket=1 << 25
     )  # 4 GiB bitmap
     assert big.bloom_bitmap_bytes() == 4 * 1024**3
-    assert big.resolved_bloom_probe() == "cogroup"
-
-    forced = CrawlConfig(bloom_probe="broadcast")
-    assert forced.resolved_bloom_probe() == "broadcast"
+    assert big.bloom_bitmap_bytes() > big.bloom_broadcast_max

@@ -220,7 +220,8 @@ def test_duplicate_seed_headers_first_wins(spark, web, tmp_path_factory):
 
 
 def test_accelerator_flags_never_change_semantics(spark, tmp_path_factory):
-    """use_bloom=False (pure exact anti-join) and broadcast_robots=False
+    """No approximate filter (bloom_min_seen above any seen size: pure
+    exact anti-join) and broadcast_robots=False
     (shuffle robots join) must crawl EXACTLY like the defaults: these
     flags pick physical strategies, never semantics — the same contract
     the bloom-probe-mode and cuckoo-mode tests pin for their axes."""
@@ -228,21 +229,23 @@ def test_accelerator_flags_never_change_semantics(spark, tmp_path_factory):
     seeds = [f"http://site{h:04d}.example/p/0" for h in range(6)]
     variants = {
         "default": {},
-        "no_filter": {"use_bloom": False},
+        "no_filter": {"bloom_min_seen": 10**12},
         "shuffle_robots": {"broadcast_robots": False},
     }
     runs = {}
     for name, overrides in variants.items():
-        cfg = CrawlConfig(
-            wave_seconds=10, max_per_host_per_wave=4, max_depth=2,
-            bloom_min_seen=1, bloom_num_buckets=4,
-            bloom_bits_per_bucket=1 << 14, **overrides,
-        )
+        cfg = CrawlConfig(**{
+            "wave_seconds": 10, "max_per_host_per_wave": 4, "max_depth": 2,
+            "bloom_min_seen": 1, "bloom_num_buckets": 4,
+            "bloom_bits_per_bucket": 1 << 14, **overrides,
+        })
         eng = CrawlEngine(
             spark, str(tmp_path_factory.mktemp(f"wh_{name}")), pages, cfg
         )
         eng.init(seeds)
         metrics = eng.run(max_waves=3)
+        # the variant is real: only no_filter builds no Bloom table
+        assert bool(eng.wh.snapshots("bloom")) == (name != "no_filter"), name
         runs[name] = (
             {r["url"]: (r["status"], r["wave"]) for r in eng.all_results().collect()},
             {r["url"] for r in eng.read_seen().collect()},

@@ -1,14 +1,10 @@
-"""Multi-format fan-out (C7) semantics + stateful streaming totals."""
+"""Multi-format fan-out (C7) semantics + stateful streaming seen filters."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from downloader_spark.functions.udfs import extract_udf
-from downloader_spark.operators.formats import (
-    FORMAT_TO_MIME,
-    format_error_map,
-    multi_format_results,
-)
+from downloader_spark.operators.formats import FORMAT_TO_MIME, multi_format_results
 
 
 def _extracted(spark):
@@ -44,81 +40,10 @@ def test_fanout_payloads(spark):
         assert r["mime"] == FORMAT_TO_MIME[fmt]
 
 
-def test_error_map(spark):
-    ex = _extracted(spark).withColumn(
-        "formats", F.array(F.lit("text"), F.lit("pdf"))
-    )
-    fanout = multi_format_results(ex)
-    errs = format_error_map(fanout).collect()
-    assert len(errs) == 1
-    assert errs[0]["errors"] == {"application/pdf": "unsupported_format"}
-
-
 def test_requested_subset_only(spark):
     ex = _extracted(spark).withColumn("formats", F.array(F.lit("text")))
     rows = multi_format_results(ex).collect()
     assert [r["format"] for r in rows] == ["text"]
-
-
-class TestStatefulTotals:
-    def test_state_survives_across_triggers(self, spark, tmp_path):
-        """Drain in two AvailableNow runs; final totals == batch groupBy
-        (the job-progress-counter analog, monotonic across batches)."""
-        from downloader_spark.streaming.stateful import running_user_totals
-
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(400)
-        first, second = ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        first.write.mode("append").parquet(src)
-
-        emitted: dict = {}
-
-        def drain():
-            stream = spark.readStream.schema(ev.schema).parquet(src)
-
-            def sink(batch_df, _bid):
-                for r in batch_df.collect():
-                    emitted[r["user_id"]] = (r["n_events"], r["sum_value"])
-
-            q = (
-                running_user_totals(stream)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-            return dict(emitted)
-
-        drain()
-        second.write.mode("append").parquet(src)
-        got = drain()  # second run: state resumed from checkpoint
-
-        want = {
-            r["user_id"]: (r["n"], r["s"])
-            for r in ev.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 6).alias("s"),
-            )
-            .collect()
-        }
-        # memory sink in update mode keeps all emitted rows; the LAST
-        # emission per user is the final state — compare users updated
-        # in run 2 plus untouched run-1 users via max n_events
-        assert set(got) <= set(want)
-        for uid, (n, s) in want.items():
-            assert got[uid][0] <= n
-        # users present in both halves must show the FULL totals
-        both = {
-            r["user_id"]
-            for r in first.select("user_id").intersect(second.select("user_id")).collect()
-        }
-        for uid in both:
-            assert got[uid] == want[uid], uid
 
 
 def test_parse_accepts_mapping(spark):

@@ -3,7 +3,7 @@ key — crawl ordering in the oracle/simulator depends on this)."""
 
 from pyspark.sql import functions as F
 
-from downloader_spark.functions.hashing import host_bucket, xxh64, xxh64_str
+from downloader_spark.functions.hashing import xxh64, xxh64_str
 
 
 def test_known_vectors_spark_parity(spark):
@@ -26,8 +26,3 @@ def test_known_vectors_spark_parity(spark):
 
 def test_bytes_and_str_agree():
     assert xxh64(b"hello") == xxh64_str("hello")
-
-
-def test_host_bucket_range():
-    for h in ("example.com", "a.org", "b.net"):
-        assert 0 <= host_bucket(h, 64) < 64

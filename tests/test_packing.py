@@ -7,11 +7,7 @@ partitioning/order."""
 import pytest
 from pyspark.sql import functions as F
 
-from downloader_spark.operators.packing import (
-    pack_token_shards,
-    shard_manifest,
-    write_packed_shards,
-)
+from downloader_spark.operators.packing import pack_token_shards
 
 L = 10
 N_SHARDS = 3
@@ -91,20 +87,21 @@ def test_layout_independent_of_input_partitioning(spark, packed):
     assert a == b
 
 
-def test_manifest_and_writer(spark, packed, tmp_path):
+def test_manifest_and_writer(packed):
+    """Per-shard totals: the shards' token sums add up to the input
+    total, and a shard of n tokens holds exactly ceil(n / L) sequences."""
     out, counts = packed
-    man = {r["shard_id"]: r for r in shard_manifest(out, L).collect()}
-    total = sum(counts.values())
-    assert sum(r["n_tokens"] for r in man.values()) == total
-    for s, r in man.items():
-        assert r["n_seqs"] == (r["n_tokens"] + L - 1) // L
-        assert r["last_seq_partial"] == (r["n_tokens"] % L != 0)
-    path = str(tmp_path / "shards")
-    write_packed_shards(out, path)
-    back = spark.read.parquet(path)
-    assert back.count() == out.count()
-    # bucketed layout: one directory per shard id
-    assert back.select("shard_id").distinct().count() == len(man)
+    per_shard = (
+        out.groupBy("shard_id")
+        .agg(
+            (F.max("seq_id") + 1).alias("n_seqs"),
+            F.sum("n_tokens").alias("n_tokens"),
+        )
+        .collect()
+    )
+    assert sum(r["n_tokens"] for r in per_shard) == sum(counts.values())
+    for r in per_shard:
+        assert r["n_seqs"] == (r["n_tokens"] + L - 1) // L, r
 
 
 def test_validation():

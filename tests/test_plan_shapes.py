@@ -141,16 +141,21 @@ def test_bucketed_pages_join_skips_pages_side_shuffle(spark):
 
     from pyspark.sql import functions as F
 
-    from downloader_spark.sources.bucketed import (
-        read_bucketed_pages,
-        write_bucketed_pages,
-    )
     from downloader_spark.sources.pagegen import pages_from_documents
 
     pages = pages_from_documents(spark, SF_ORACLE).select("url", "html")
-    write_bucketed_pages(pages, table="t_pages_bucketed", buckets=8)
+    # the deployment recipe: write the corpus once bucketed (and sorted)
+    # by url, read it back through the catalog, which carries the
+    # bucket spec (a plain parquet read of the same files would not)
+    (
+        pages.write.mode("overwrite")
+        .bucketBy(8, "url")
+        .sortBy("url")
+        .format("parquet")
+        .saveAsTable("t_pages_bucketed")
+    )
     try:
-        bucketed = read_bucketed_pages(spark, "t_pages_bucketed")
+        bucketed = spark.table("t_pages_bucketed")
         frontier = spark.range(200).select(
             F.concat(
                 F.lit("http://src"), (F.col("id") % 20).cast("string"),

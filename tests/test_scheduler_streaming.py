@@ -1,128 +1,5 @@
-"""Cron wave scheduler (T1/T2) + Structured Streaming surface tests."""
-
-from datetime import datetime, timezone
-
-import pytest
-
-from downloader_spark.plans.scheduler import (
-    Cron,
-    CronError,
-    ScheduleState,
-    due_waves,
-)
-
-
-def _dt(*args):
-    return datetime(*args, tzinfo=timezone.utc)
-
-
-class TestCron:
-    def test_parse_and_next(self):
-        c = Cron.parse("*/15 * * * *")
-        assert c.next_fire(_dt(2026, 1, 1, 10, 0)) == _dt(2026, 1, 1, 10, 15)
-        assert c.next_fire(_dt(2026, 1, 1, 10, 14)) == _dt(2026, 1, 1, 10, 15)
-
-    def test_daily(self):
-        c = Cron.parse("30 6 * * *")
-        assert c.next_fire(_dt(2026, 1, 1, 7, 0)) == _dt(2026, 1, 2, 6, 30)
-
-    def test_dow(self):
-        c = Cron.parse("0 0 * * 1")  # Mondays
-        nxt = c.next_fire(_dt(2026, 1, 1, 0, 0))  # Thursday
-        assert nxt == _dt(2026, 1, 5, 0, 0)
-        assert nxt.isoweekday() == 1
-
-    def test_dom_dow_or_rule(self):
-        c = Cron.parse("0 0 15 * 1")  # 15th OR Monday
-        nxt = c.next_fire(_dt(2026, 1, 9, 1, 0))
-        assert nxt == _dt(2026, 1, 12, 0, 0)  # Monday before the 15th
-
-    def test_ranges_and_lists(self):
-        c = Cron.parse("5,35 9-17 * * 1-5")
-        nxt = c.next_fire(_dt(2026, 1, 2, 16, 40))  # Friday
-        assert nxt == _dt(2026, 1, 2, 17, 5)
-
-    @pytest.mark.parametrize(
-        "bad", ["* * * *", "61 * * * *", "* 25 * * *", "x * * * *", "*/0 * * * *", "1-99 * * * *"]
-    )
-    def test_invalid(self, bad):
-        with pytest.raises(CronError):
-            Cron.parse(bad if len(bad) >= 9 else bad + "      ")
-
-    def test_length_bounds(self):
-        with pytest.raises(CronError):
-            Cron.parse("* * * * *".ljust(101))
-
-
-class TestDueWaves:
-    def test_coalesce_missed_runs(self):
-        s = ScheduleState("s1", "*/10 * * * *", last_fire=_dt(2026, 1, 1, 10, 0))
-        due, misfired = due_waves([s], _dt(2026, 1, 1, 11, 0, 30), grace_seconds=60)
-        # missed 10:10..11:00 → coalesced to the latest (11:00), in grace
-        assert due == [("s1", _dt(2026, 1, 1, 11, 0))]
-        assert misfired == []
-
-    def test_misfire_beyond_grace(self):
-        s = ScheduleState("s1", "0 * * * *", last_fire=_dt(2026, 1, 1, 10, 0))
-        due, misfired = due_waves([s], _dt(2026, 1, 1, 12, 30), grace_seconds=60)
-        assert due == []
-        assert misfired == [("s1", _dt(2026, 1, 1, 12, 0))]
-
-    def test_disabled_skipped(self):
-        s = ScheduleState("s1", "* * * * *", enabled=False)
-        due, misfired = due_waves([s], _dt(2026, 1, 1, 12, 0), grace_seconds=3600)
-        assert due == [] and misfired == []
-
-
-class TestStreaming:
-    def test_windowed_counts_stream_equals_batch(self, spark, tmp_path):
-        from downloader_spark.streaming.events import (
-            read_events_stream,
-            run_available_now,
-            windowed_event_counts,
-        )
-
-        src = str(tmp_path / "events_src")
-        ckpt = str(tmp_path / "ckpt")
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        ev.write.parquet(src)
-
-        stream = read_events_stream(spark, src, ev.schema)
-        assert stream.isStreaming
-        agg = windowed_event_counts(stream, window="6 hours", watermark="1 hour")
-        q = run_available_now(agg, ckpt)
-        got = {
-            (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-            for r in spark.sql("SELECT * FROM stream_out").collect()
-        }
-        q.stop()
-
-        batch = windowed_event_counts(ev, window="6 hours", watermark="1 hour")
-        want = {
-            (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-            for r in batch.collect()
-        }
-        assert got == want
-
-    def test_sessionize_runs(self, spark, tmp_path):
-        from downloader_spark.streaming.events import (
-            read_events_stream,
-            run_available_now,
-            sessionize,
-        )
-
-        src = str(tmp_path / "events_src2")
-        ckpt = str(tmp_path / "ckpt2")
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(200)
-        ev.write.parquet(src)
-        stream = read_events_stream(spark, src, ev.schema)
-        q = run_available_now(sessionize(stream, gap="1 hour"), ckpt)
-        rows = spark.sql("SELECT * FROM stream_out").collect()
-        q.stop()
-        assert len(rows) > 0
-        for r in rows:
-            assert r["session_end"] >= r["session_start"]
-            assert r["n_events"] >= 1
+"""Multimodal plumbing: media features, frame sampling and the resize
+path, each checked against a pure-Python or numpy recompute."""
 
 
 class TestMultimodal:

@@ -549,7 +549,8 @@ def test_redact_pii_crafted(spark):
 
 def test_hll_sketch_accuracy_merge_and_recompute(spark):
     """HLL: (a) estimate within ~3σ of truth at 20k distinct items
-    (σ ≈ 1.04/√256 ≈ 6.5%); (b) merge(a, b) ≡ sketch(a ∪ b) exactly;
+    (σ ≈ 1.04/√256 ≈ 6.5%); (b) merge(a, b) ≡ sketch(a ∪ b) exactly,
+    with the per-register max that q_hll_wave_merge runs;
     (c) md5-hasher registers equal a pure-python recompute; (d) m
     validation."""
     import hashlib
@@ -558,7 +559,6 @@ def test_hll_sketch_accuracy_merge_and_recompute(spark):
 
     from downloader_spark.functions.sketch import (
         hll_estimate,
-        hll_merge,
         hll_registers,
         md5_60bit,
     )
@@ -575,9 +575,11 @@ def test_hll_sketch_accuracy_merge_and_recompute(spark):
     b = spark.range(2000, 6000).select(F.concat(F.lit("u"), F.col("id").cast("string")).alias("s"))
     merged = {
         r["register_id"]: r["max_rho"]
-        for r in hll_merge(
-            hll_registers(a, F.col("s")), hll_registers(b, F.col("s"))
-        ).collect()
+        for r in hll_registers(a, F.col("s"))
+        .unionByName(hll_registers(b, F.col("s")))
+        .groupBy("register_id")
+        .agg(F.max("max_rho").cast("int").alias("max_rho"))
+        .collect()
     }
     union = {
         r["register_id"]: r["max_rho"]
