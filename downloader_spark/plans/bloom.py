@@ -4,30 +4,32 @@ The seen TABLE (exact) is the source of truth; the Bloom filter is the
 accelerator that lets most frontier candidates skip the exact anti-join
 shuffle (SURVEY §4.2 "Bloom-before-anti-join"):
 
-    candidates ──bucket-join bitmap──► maybe-seen ──exact anti-join──►
-               └────────────── definitely-unseen ────────────────────┘
+    candidates ──probe filter──► maybe-seen ──exact anti-join──►
+               └─────────── definitely-unseen ─────────────────┘
 
 Layout: ``bloom(bucket int, bits binary)`` — one bitmap per
-``pmod(xxhash64(url), num_buckets)`` bucket, built distributed via
-``applyInPandas`` (numpy bit ops per bucket) and OR-mergeable across
-waves (fixed geometry). Probe positions use the double-hashing scheme
-h_i = h1 + i·h2 (Kirsch–Mitzenmacher), with h1/h2 from seeded
-``xxhash64`` computed NATIVELY before the probe UDF — the Python side
-only does vectorized numpy bit tests.
+``pmod(xxhash64(url), num_buckets)`` bucket, OR-mergeable across waves
+of one geometry. This module is the numpy kernel plus the public entry
+points, each one call into the Spark skeleton in plans/seenfilter.py
+(which also owns the sizing rule). Probe positions use the
+double-hashing scheme h_i = h1 + i·h2 (Kirsch–Mitzenmacher) with
+h1 = xxhash64(url), h2 = xxhash64(url + "\\x01"), computed natively.
 
 No false negatives by construction; false-positive rate bounded by the
-usual (1-e^{-kn/m})^k — tested in tests/test_bloom.py.
+usual (1-e^{-kn/m})^k — tested in tests/test_bloom.py and, for the
+sizing rule, tests/test_seenfilter_sizing.py.
 """
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.hashing import xxh64_str
-
+from . import seenfilter
 
 def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
     """(n, k) probe positions; uint64 wrap-around is part of the scheme
@@ -36,194 +38,91 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
     return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
 
 
-def _hash_cols(url_col: str):
-    """h1/h2 from single-arg xxhash64 on suffixed strings — Spark's
-    multi-arg xxhash64 CHAINS hashes (seed = previous hash), which the
-    pure-Python oracle can't reproduce with a plain seeded XXH64; the
-    suffix construction keeps both sides trivially identical."""
-    return (
-        F.xxhash64(F.col(url_col)).alias("_h1"),
-        F.xxhash64(F.concat(F.col(url_col), F.lit("\x01"))).alias("_h2"),
-    )
+@dataclass(frozen=True)
+class BloomKernel:
+    """Bloom numpy kernel at one geometry; a bucket's state is its
+    uint8 bitmap."""
+
+    num_buckets: int = 16
+    bits_per_bucket: int = 1 << 17
+    num_hashes: int = 5
+    suffixes = ("", "\x01")
+    columns = ("bits",)
+
+    def _bits(self, h1, h2):
+        pos = _positions(h1, h2, self.num_hashes, self.bits_per_bucket)
+        return (pos >> np.uint64(3)).astype(np.int64), (1 << (pos & np.uint64(7))).astype(np.uint8)
+
+    def empty(self):
+        return np.zeros(self.bits_per_bucket // 8, dtype=np.uint8)
+
+    def load(self, values):
+        return np.frombuffer(values[0], dtype=np.uint8).copy()
+
+    def dump(self, bits):
+        return (bits.tobytes(),)
+
+    def insert(self, bits, h1, h2):
+        byte, mask = self._bits(h1, h2)
+        np.bitwise_or.at(bits, byte.ravel(), mask.ravel())
+
+    def contains(self, bits, h1, h2):
+        byte, mask = self._bits(h1, h2)
+        return ((bits[byte] & mask) != 0).all(axis=1)
+
+    def merge(self, bits, other):
+        bits |= other
+
+    def fill(self, bits):
+        """Estimated members n̂ = −(m/k)·ln(1 − set/m) over the bucket's
+        capacity at the target FP rate."""
+        m, set_bits = self.bits_per_bucket, int(np.unpackbits(bits).sum(dtype=np.int64))
+        capacity = m * math.log(2) ** 2 / -math.log(seenfilter.FP_RATE)
+        if set_bits >= m:
+            return math.inf
+        return -(m / self.num_hashes) * math.log1p(-set_bits / m) / capacity
 
 
 def build_bloom(
-    seen: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    bits_per_bucket: int = 1 << 17,
-    num_hashes: int = 5,
+    seen: DataFrame, url_col: str = "url",
+    num_buckets: int = 16, bits_per_bucket: int = 1 << 17, num_hashes: int = 5,
 ) -> DataFrame:
     """seen urls → bloom(bucket, bits). One shuffle on the bucket key."""
-    m, k = bits_per_bucket, num_hashes
-    hashed = seen.select(
-        F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int").alias("bucket"),
-        *_hash_cols(url_col),
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        if len(pdf):
-            h1 = pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
-            h2 = pdf["_h2"].to_numpy(dtype=np.int64).view(np.uint64)
-            pos = _positions(h1, h2, k, m).ravel()
-            np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
-        bucket = int(pdf["bucket"].iloc[0]) if len(pdf) else -1
-        return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()]})
-
-    return hashed.groupBy("bucket").applyInPandas(
-        build, schema="bucket int, bits binary"
-    )
+    kern = BloomKernel(num_buckets, bits_per_bucket, num_hashes)
+    return seenfilter.build(kern, seen, url_col)
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two same-geometry bloom tables (cross-wave accumulation)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf["bits"]:
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            acc = arr.copy() if acc is None else (acc | arr)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "bits": [acc.tobytes()]})
-
-    return (
-        a.unionByName(b)
-        .groupBy("bucket")
-        .applyInPandas(merge, schema="bucket int, bits binary")
-    )
+def merge_blooms(
+    a: DataFrame, b: DataFrame,
+    num_buckets: int = 16, bits_per_bucket: int = 1 << 17, num_hashes: int = 5,
+) -> DataFrame:
+    """OR-merge two same-geometry bloom tables (cross-wave accumulation).
+    Takes build_bloom's geometry keywords so one geometry dict drives
+    every call."""
+    return seenfilter.merge(BloomKernel(num_buckets, bits_per_bucket, num_hashes), a, b)
 
 
 def bloom_maybe_seen(
-    candidates: DataFrame,
-    bloom: DataFrame | None,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    bits_per_bucket: int = 1 << 17,
-    num_hashes: int = 5,
+    candidates: DataFrame, bloom: DataFrame | None, url_col: str = "url",
+    num_buckets: int = 16, bits_per_bucket: int = 1 << 17, num_hashes: int = 5,
     bitmap_bc=None,
 ) -> DataFrame:
-    """candidates + ``maybe_seen`` boolean column.
-
-    The bitmaps ship ONCE PER EXECUTOR as a Spark broadcast variable and
-    the probe is a fully vectorized numpy bit-test inside mapInPandas —
-    never join the bitmap blobs onto the candidate rows (a per-row
-    512 KB blob through Arrow turns a 2M-row probe into a 1 TB
-    transfer; measured 100× slower). When the filter outgrows broadcast
-    size (multi-GB), use bloom_maybe_seen_cogroup — bucket-local probe,
-    same arithmetic, no driver collect. Rows with maybe_seen=false are
-    DEFINITELY unseen.
-    """
-    m, k = bits_per_bucket, num_hashes
-    if bitmap_bc is not None:
-        bc = bitmap_bc  # caller-managed (reused across probes, destroyed on supersede)
-    else:
-        spark = candidates.sparkSession
-        bitmap = {int(r["bucket"]): bytes(r["bits"]) for r in bloom.collect()}
-        bc = spark.sparkContext.broadcast(bitmap)
-
-    h1c, h2c = _hash_cols(url_col)
-    with_keys = (
-        candidates.withColumn(
-            "_bucket", F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int")
-        )
-        .withColumn("_h1", h1c)
-        .withColumn("_h2", h2c)
-    )
-    out_fields = [
-        f for f in with_keys.schema.fields if f.name not in ("_bucket", "_h1", "_h2")
-    ]
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-    out_schema += ", maybe_seen boolean"
-    keep = [f.name for f in out_fields]
-
-    def probe(batches):
-        blobs = bc.value
-        arrays = {b: np.frombuffer(blob, dtype=np.uint8) for b, blob in blobs.items()}
-        for pdf in batches:
-            n = len(pdf)
-            res = np.zeros(n, dtype=bool)
-            if n:
-                h1 = pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
-                h2 = pdf["_h2"].to_numpy(dtype=np.int64).view(np.uint64)
-                pos = _positions(h1, h2, k, m)
-                buckets = pdf["_bucket"].to_numpy()
-                for b in np.unique(buckets):
-                    bits = arrays.get(int(b))
-                    if bits is None:
-                        continue
-                    idxs = np.flatnonzero(buckets == b)
-                    p = pos[idxs]  # (g, k)
-                    hit = (
-                        bits[(p >> np.uint64(3)).astype(np.int64)]
-                        & (1 << (p & np.uint64(7))).astype(np.uint8)
-                    ) != 0
-                    res[idxs] = hit.all(axis=1)
-            out = pdf[keep].copy()
-            out["maybe_seen"] = res
-            yield out
-
-    return with_keys.mapInPandas(probe, schema=out_schema)
+    """candidates + ``maybe_seen``, probing a broadcast copy of the
+    bitmaps (``bitmap_bc``: a caller-managed broadcast of
+    ``seenfilter.collect(bloom)``, else collected here). Rows with
+    maybe_seen=false are DEFINITELY unseen."""
+    kern = BloomKernel(num_buckets, bits_per_bucket, num_hashes)
+    return seenfilter.probe_broadcast(kern, candidates, bloom, url_col, bitmap_bc)
 
 
 def bloom_maybe_seen_cogroup(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    bits_per_bucket: int = 1 << 17,
-    num_hashes: int = 5,
+    candidates: DataFrame, bloom: DataFrame, url_col: str = "url",
+    num_buckets: int = 16, bits_per_bucket: int = 1 << 17, num_hashes: int = 5,
 ) -> DataFrame:
-    """Bucket-local probe — the scale path past broadcast size.
-
-    At 10^10 seen URLs a useful filter is 10+ GB: too big to collect to
-    the driver and broadcast (bloom_maybe_seen's pattern). Here the
-    candidates shuffle ONCE on their bucket key and each bucket's
-    bitmap arrives in the task EXACTLY ONCE via cogroup — per-task
-    memory is a single bucket's bitmap, and total bitmap bytes moved is
-    one copy of the filter regardless of candidate count (never join
-    the blob per candidate row — the 44×-slower failure mode,
-    BASELINE.md "frontier planning"). Probe arithmetic is shared with
-    the broadcast path (_positions); outputs are identical —
-    tests/test_bloom.py asserts equality on a multi-bucket geometry.
-    """
-    m, k = bits_per_bucket, num_hashes
-    h1c, h2c = _hash_cols(url_col)
-    with_keys = (
-        candidates.withColumn(
-            "_bucket", F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int")
-        )
-        .withColumn("_h1", h1c)
-        .withColumn("_h2", h2c)
-    )
-    out_fields = [
-        f for f in with_keys.schema.fields if f.name not in ("_bucket", "_h1", "_h2")
-    ]
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-    out_schema += ", maybe_seen boolean"
-    keep = [f.name for f in out_fields]
-
-    def probe(cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(cand_pdf)
-        res = np.zeros(n, dtype=bool)
-        if n and len(bloom_pdf):
-            bits = np.frombuffer(bloom_pdf["bits"].iloc[0], dtype=np.uint8)
-            h1 = cand_pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
-            h2 = cand_pdf["_h2"].to_numpy(dtype=np.int64).view(np.uint64)
-            pos = _positions(h1, h2, k, m)
-            hit = (
-                bits[(pos >> np.uint64(3)).astype(np.int64)]
-                & (1 << (pos & np.uint64(7))).astype(np.uint8)
-            ) != 0
-            res = hit.all(axis=1)
-        out = cand_pdf[keep].copy()
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        with_keys.groupBy("_bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    """Bucket-local probe — the scale path past broadcast size; outputs
+    equal bloom_maybe_seen's (tests/test_bloom.py)."""
+    kern = BloomKernel(num_buckets, bits_per_bucket, num_hashes)
+    return seenfilter.probe_cogroup(kern, candidates, bloom, url_col)
 
 
 def bloom_contains_py(

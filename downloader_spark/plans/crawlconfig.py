@@ -36,16 +36,13 @@ class CrawlConfig:
     max_content_bytes: int = 50 * 1024 * 1024
     salt_buckets: int = 8  # two-phase top-k salt for hot hosts
     num_host_buckets: int = 64  # frontier partitioning pmod(xxhash64(host), P)
-    bloom_bits_per_bucket: int = 1 << 17  # 16 KiB per bucket
-    bloom_num_hashes: int = 5
-    bloom_num_buckets: int = 16
-    # Bloom probe path, chosen by geometry: while the bitmap
-    # (num_buckets × bits_per_bucket / 8 = bloom_bitmap_bytes()) fits
-    # this budget it is collected once per snapshot and broadcast to
-    # executors; above it the probe is bucket-local (cogroup, bloom.py)
-    # with no driver collect — the only path at 10^10-URL geometry,
-    # where the filter is multi-GB. Same probe arithmetic, identical
-    # outputs.
+    # seen-filter probe path, chosen by the filter snapshot's size (its
+    # geometry comes from plans/seenfilter.py's sizing rule, either
+    # kind): while the filter fits this budget it is collected once per
+    # snapshot and broadcast to executors; above it the probe is
+    # bucket-local (cogroup) with no driver collect — the only path at
+    # 10^10-URL scale, where the filter is multi-GB. Same probe
+    # arithmetic, identical outputs.
     bloom_broadcast_max: int = 256 * 1024 * 1024
     # which approximate seen-filter accelerates the anti-join (north
     # rule: "bloom/cuckoo"). 'bloom': OR-mergeable bitmaps — the
@@ -55,14 +52,13 @@ class CrawlConfig:
     # retracted. Both are accelerators only: the exact seen table
     # stays the source of truth, so crawl semantics are identical.
     seen_filter: str = "bloom"
-    cuckoo_table_rows: int = 1 << 14  # per-bucket rows (power of two)
-    cuckoo_slots_per_row: int = 4
     broadcast_robots: bool = True  # flip off beyond ~10^7 hosts
     dedupe_pages: bool = True  # drop duplicate url captures (latest wins)
     # below this seen-set size the exact broadcast anti-join beats the
-    # Bloom probe's extra Python pass; at crawl scale (≫ this) the Bloom
-    # path is the only one that avoids shuffling the whole frontier.
-    # Above the seen size no approximate filter is built or probed.
+    # filter probe's extra Python pass; at crawl scale (≫ this) the
+    # filter path is the only one that avoids shuffling the whole
+    # frontier. Above the seen size no approximate filter is built or
+    # probed.
     bloom_min_seen: int = 100_000
     seen_compact_every: int = 16  # compact the append-only seen table
     snapshot_keep_last: int = 1000  # TTL analog (T8)
@@ -118,8 +114,6 @@ class CrawlConfig:
             raise ValueError(
                 f"seen_filter={self.seen_filter!r} — must be 'bloom' or 'cuckoo'"
             )
-        if self.cuckoo_table_rows & (self.cuckoo_table_rows - 1):
-            raise ValueError("cuckoo_table_rows must be a power of two")
         if self.pagerank_every < 0 or self.pagerank_iters < 1:
             raise ValueError(
                 "pagerank_every must be >= 0 (0 disables) and "
@@ -133,9 +127,6 @@ class CrawlConfig:
             raise ValueError(
                 "url_score_block must be >= 0 (0 = urlquality module default)"
             )
-
-    def bloom_bitmap_bytes(self) -> int:
-        return self.bloom_num_buckets * self.bloom_bits_per_bucket // 8
 
     def score_for_depth(self, depth: int) -> int:
         return max(0, self.score_base - self.score_decay * depth)

@@ -7,51 +7,37 @@ filter fundamentally cannot).
 Design (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
 CoNEXT 2014 — public paper, re-expressed over Spark primitives):
 
-- Same partitioned layout as bloom.py: one filter per
-  ``pmod(xxhash64(url), num_buckets)`` partition, built distributed via
-  ``applyInPandas`` (numpy per bucket) — row schema
-  ``cuckoo(bucket int, table binary, stash binary)``.
-- Per-partition table: ``table_rows`` (power of two) rows ×
+- Same partitioned layout as bloom.py — row schema
+  ``cuckoo(bucket int, table binary, stash binary)``; this module is the
+  numpy kernel plus the public entry points, each one call into the
+  Spark skeleton in plans/seenfilter.py.
+- Per-bucket table: ``table_rows`` (power of two) rows ×
   ``slots_per_row`` 16-bit fingerprint slots (0 = empty; fingerprints
   are mapped to 1..65535). Insert tries row i1 = h(url) % rows and its
   XOR-partner i2 = i1 ^ (tag_hash(fp) % rows), then cuckoo-kicks up to
-  ``max_kicks``; anything still homeless goes to the per-partition
+  ``max_kicks``; anything still homeless goes to the per-bucket
   STASH so the structure NEVER false-negatives (lookups check i1, i2,
-  stash).
-- All url hashing is NATIVE Spark ``xxhash64`` on suffixed strings
-  (multi-arg xxhash64 chains — CLAUDE.md invariant 4), identical to the
-  pure-Python oracle ``cuckoo_contains_py``; only vectorized numpy
-  slot tests run in Python.
-- Probe mirrors bloom's two modes: bucket-local cogroup (scale path,
-  no driver collect) is implemented here; a broadcast variant would be
-  the same arithmetic (bloom_maybe_seen shows the pattern).
+  stash). The url hashes use suffixes distinct from bloom.py's, so a
+  url's bloom and cuckoo probes are independent.
 
-The kicking loop is sequential per partition — that is the structural
+The kicking loop is sequential per bucket — that is the structural
 cost of cuckoo insertion; it runs once per wave over the WAVE's new
-urls only (O(wave output)), and partitions are independent so the
-build parallelizes across buckets exactly like the Bloom build.
+urls only (O(wave output)), and buckets are independent so the build
+parallelizes across buckets exactly like the Bloom build.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.hashing import xxh64_str
+from . import seenfilter
 
 _MASK64 = (1 << 64) - 1
 _TAG_MULT = 0x5BD1E995  # multiply-hash for the XOR partner index
-
-
-def _hash_cols(url_col: str):
-    """Native h_index / h_fingerprint columns (suffixes distinct from
-    bloom.py's so a url's bloom and cuckoo probes are independent)."""
-    return (
-        F.xxhash64(F.concat(F.col(url_col), F.lit("\x02"))).alias("_hi"),
-        F.xxhash64(F.concat(F.col(url_col), F.lit("\x03"))).alias("_hf"),
-    )
 
 
 def _fp_and_rows(hi: np.ndarray, hf: np.ndarray, rows: int):
@@ -99,216 +85,144 @@ def _insert_all(
             stash.append(cur_fp)
 
 
+@dataclass(frozen=True)
+class CuckooKernel:
+    """Cuckoo numpy kernel at one geometry; a bucket's state is
+    (table, stash): a (rows, slots) uint16 array and a list of
+    homeless fingerprints."""
+
+    num_buckets: int = 16
+    table_rows: int = 1 << 14
+    slots_per_row: int = 4
+    max_kicks: int = 200
+    suffixes = ("\x02", "\x03")
+    columns = ("table", "stash")
+
+    def __post_init__(self):
+        if self.table_rows & (self.table_rows - 1):
+            raise ValueError("table_rows must be a power of two (XOR partner indexing)")
+
+    def empty(self):
+        return np.zeros((self.table_rows, self.slots_per_row), dtype=np.uint16), []
+
+    def load(self, values):
+        table = np.frombuffer(values[0], dtype=np.uint16).copy()
+        stash = list(np.frombuffer(values[1], dtype=np.uint16))
+        return table.reshape(self.table_rows, self.slots_per_row), stash
+
+    def dump(self, state):
+        return state[0].tobytes(), np.array(sorted(state[1]), dtype=np.uint16).tobytes()
+
+    def _unique(self, hi, hf):
+        # one entry per distinct url: dedup on the full 128-bit (hi, hf)
+        # pair, NOT on (fp, i1) — distinct urls that collide on
+        # (fingerprint, primary row) keep SEPARATE slot copies, so
+        # deleting one cannot evict the other's only copy, and a url
+        # listed twice is inserted or deleted once (Fan et al. store
+        # per-item duplicates to make deletion safe)
+        uniq = np.unique(np.stack([hi, hf]), axis=1)
+        return _fp_and_rows(uniq[0], uniq[1], self.table_rows)
+
+    def insert(self, state, hi, hf):
+        fp, i1, _ = self._unique(hi, hf)
+        _insert_all(*state, fp, i1, self.table_rows, self.max_kicks)
+
+    def contains(self, state, hi, hf):
+        table, stash = state
+        fp, i1, i2 = _fp_and_rows(hi, hf, self.table_rows)
+        res = (table[i1] == fp[:, None]).any(axis=1) | (table[i2] == fp[:, None]).any(axis=1)
+        if stash:
+            res |= np.isin(fp, np.array(stash, dtype=np.uint16))
+        return res
+
+    def merge(self, state, other):
+        """A stored fingerprint's row is its i1 or its i2, and insertion
+        needs only ONE valid start row (the kick loop reaches the
+        partner via the XOR involution), so ``other``'s (fp, row)
+        entries re-insert without the urls; stashes union."""
+        rows, slots = np.nonzero(other[0])
+        fps = other[0][rows, slots]
+        _insert_all(*state, fps, rows.astype(np.int64), self.table_rows, self.max_kicks)
+        state[1].extend(other[1])
+
+    def remove(self, state, hi, hf):
+        """Clear ONE matching fingerprint per url from its i1/i2 rows, or
+        the stash (deleting a non-member can evict a colliding member)."""
+        table, stash = state
+        for f, r1, r2 in zip(*(a.tolist() for a in self._unique(hi, hf))):
+            for row in (r1, r2):
+                slots = np.flatnonzero(table[row] == f)
+                if len(slots):
+                    table[row, slots[0]] = 0
+                    break
+            else:
+                if f in stash:
+                    stash.remove(f)
+
+    def fill(self, state):
+        """Occupied slots plus stash over the capacity (CUCKOO_LOAD of
+        the slots)."""
+        table, stash = state
+        return (np.count_nonzero(table) + len(stash)) / (seenfilter.CUCKOO_LOAD * table.size)
+
+
 def build_cuckoo(
-    seen: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    table_rows: int = 1 << 14,
-    slots_per_row: int = 4,
-    max_kicks: int = 200,
+    seen: DataFrame, url_col: str = "url", num_buckets: int = 16,
+    table_rows: int = 1 << 14, slots_per_row: int = 4, max_kicks: int = 200,
 ) -> DataFrame:
     """seen urls → cuckoo(bucket, table, stash). One shuffle on the
-    bucket key; capacity per partition = table_rows × slots_per_row
-    (size for ≤ ~95% load — the classic 4-slot cuckoo bound; overflow
-    degrades gracefully into the stash, never into false negatives)."""
-    if table_rows & (table_rows - 1):
-        raise ValueError("table_rows must be a power of two (XOR partner indexing)")
-    hashed = seen.select(
-        F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int").alias("bucket"),
-        *_hash_cols(url_col),
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        table = np.zeros((table_rows, slots_per_row), dtype=np.uint16)
-        stash: list[int] = []
-        bucket = int(pdf["bucket"].iloc[0]) if len(pdf) else -1
-        if len(pdf):
-            hi = pdf["_hi"].to_numpy(dtype=np.int64).view(np.uint64)
-            hf = pdf["_hf"].to_numpy(dtype=np.int64).view(np.uint64)
-            # duplicate URLS insert once (sets, like the seen table) —
-            # dedup on the full 128-bit (hi, hf) pair, NOT on (fp, i1):
-            # distinct urls that collide on (fingerprint, primary row)
-            # must keep SEPARATE slot copies so deleting one cannot
-            # evict the other's only copy (Fan et al. store per-item
-            # duplicates to make deletion safe; r3 collapsed them and
-            # broke the no-false-negative-after-deletion contract).
-            uniq = np.unique(np.stack([hi, hf]), axis=1)
-            fp, i1, _ = _fp_and_rows(uniq[0], uniq[1], table_rows)
-            _insert_all(table, stash, fp, i1, table_rows, max_kicks)
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "table": [table.tobytes()],
-                "stash": [np.array(sorted(stash), dtype=np.uint16).tobytes()],
-            }
-        )
-
-    return hashed.groupBy("bucket").applyInPandas(
-        build, schema="bucket int, table binary, stash binary"
-    )
+    bucket key; overflow past the table goes to the stash, never into
+    false negatives."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row, max_kicks)
+    return seenfilter.build(kern, seen, url_col)
 
 
 def merge_cuckoos(
-    a: DataFrame,
-    b: DataFrame,
-    table_rows: int = 1 << 14,
-    slots_per_row: int = 4,
-    max_kicks: int = 200,
+    a: DataFrame, b: DataFrame, table_rows: int = 1 << 14, slots_per_row: int = 4,
+    max_kicks: int = 200, num_buckets: int = 16,
 ) -> DataFrame:
     """Merge two same-geometry cuckoo tables (cross-wave accumulation,
-    the analog of bloom.merge_blooms). A stored fingerprint's row is
-    either its i1 or its i2 — and insertion only needs ONE valid start
-    row (the kick loop reaches the partner via the XOR involution) — so
-    b's (fp, row) entries re-insert into a without knowing the urls;
-    stashes union. One shuffle on the bucket key."""
+    the analog of bloom.merge_blooms): b's fingerprints re-insert into
+    a. One shuffle on the bucket key."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row, max_kicks)
+    return seenfilter.merge(kern, a, b)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        table = np.frombuffer(pdf["table"].iloc[0], dtype=np.uint16).reshape(
-            table_rows, slots_per_row
-        ).copy()
-        stash: list[int] = list(np.frombuffer(pdf["stash"].iloc[0], dtype=np.uint16))
-        for j in range(1, len(pdf)):
-            other = np.frombuffer(pdf["table"].iloc[j], dtype=np.uint16).reshape(
-                table_rows, slots_per_row
-            )
-            rows, _slots = np.nonzero(other)
-            fps = other[rows, _slots]
-            _insert_all(table, stash, fps, rows.astype(np.int64), table_rows, max_kicks)
-            stash.extend(np.frombuffer(pdf["stash"].iloc[j], dtype=np.uint16).tolist())
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "table": [table.tobytes()],
-                "stash": [np.array(sorted(stash), dtype=np.uint16).tobytes()],
-            }
-        )
 
-    return (
-        a.unionByName(b)
-        .groupBy("bucket")
-        .applyInPandas(merge, schema="bucket int, table binary, stash binary")
-    )
+def cuckoo_maybe_seen(
+    candidates: DataFrame, cuckoo: DataFrame | None, url_col: str = "url",
+    num_buckets: int = 16, table_rows: int = 1 << 14, slots_per_row: int = 4,
+    bitmap_bc=None,
+) -> DataFrame:
+    """candidates + ``maybe_seen``, probing a broadcast copy of the
+    tables (``bitmap_bc``: a caller-managed broadcast of
+    ``seenfilter.collect(cuckoo)``, else collected here) — the analog
+    of bloom.bloom_maybe_seen. No false negatives."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row)
+    return seenfilter.probe_broadcast(kern, candidates, cuckoo, url_col, bitmap_bc)
 
 
 def cuckoo_maybe_seen_cogroup(
-    candidates: DataFrame,
-    cuckoo: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    table_rows: int = 1 << 14,
-    slots_per_row: int = 4,
+    candidates: DataFrame, cuckoo: DataFrame, url_col: str = "url",
+    num_buckets: int = 16, table_rows: int = 1 << 14, slots_per_row: int = 4,
 ) -> DataFrame:
     """candidates + ``maybe_seen`` — bucket-local probe (the scale
-    path, mirrors bloom_maybe_seen_cogroup: candidates shuffle once on
-    the bucket key, each partition's table reaches its task exactly
-    once, per-task memory = one partition's table). No false negatives;
-    rows with maybe_seen=false are DEFINITELY unseen."""
-    hic, hfc = _hash_cols(url_col)
-    with_keys = (
-        candidates.withColumn(
-            "_bucket", F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int")
-        )
-        .withColumn("_hi", hic)
-        .withColumn("_hf", hfc)
-    )
-    out_fields = [
-        f for f in with_keys.schema.fields if f.name not in ("_bucket", "_hi", "_hf")
-    ]
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-    out_schema += ", maybe_seen boolean"
-    keep = [f.name for f in out_fields]
-
-    def probe(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(cand_pdf)
-        res = np.zeros(n, dtype=bool)
-        if n and len(filt_pdf):
-            table = np.frombuffer(filt_pdf["table"].iloc[0], dtype=np.uint16).reshape(
-                table_rows, slots_per_row
-            )
-            stash = np.frombuffer(filt_pdf["stash"].iloc[0], dtype=np.uint16)
-            hi = cand_pdf["_hi"].to_numpy(dtype=np.int64).view(np.uint64)
-            hf = cand_pdf["_hf"].to_numpy(dtype=np.int64).view(np.uint64)
-            fp, i1, i2 = _fp_and_rows(hi, hf, table_rows)
-            hit1 = (table[i1] == fp[:, None]).any(axis=1)
-            hit2 = (table[i2] == fp[:, None]).any(axis=1)
-            res = hit1 | hit2
-            if len(stash):
-                res |= np.isin(fp, stash)
-        out = cand_pdf[keep].copy()
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        with_keys.groupBy("_bucket")
-        .cogroup(cuckoo.groupBy("bucket"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    path). No false negatives; rows with maybe_seen=false are
+    DEFINITELY unseen."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row)
+    return seenfilter.probe_cogroup(kern, candidates, cuckoo, url_col)
 
 
 def cuckoo_remove(
-    cuckoo: DataFrame,
-    removals: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    table_rows: int = 1 << 14,
-    slots_per_row: int = 4,
+    cuckoo: DataFrame, removals: DataFrame, url_col: str = "url",
+    num_buckets: int = 16, table_rows: int = 1 << 14, slots_per_row: int = 4,
 ) -> DataFrame:
-    """Delete members — the cuckoo capability Bloom lacks. Each removal
-    clears ONE matching fingerprint from its i1/i2 rows (or the stash):
-    removing a url that was inserted restores the pre-insert state for
-    it (standard cuckoo deletion semantics — only delete urls known to
-    be members, same contract as the paper; deleting a non-member can
-    evict a colliding member's fingerprint). One shuffle on the bucket
-    key; partitions without removals pass through untouched."""
-    hashed = removals.select(
-        F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int").alias("bucket"),
-        *_hash_cols(url_col),
-    )
-
-    def remove(filt_pdf: pd.DataFrame, rem_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(filt_pdf):
-            return pd.DataFrame(
-                {"bucket": pd.Series([], dtype="int32"), "table": [], "stash": []}
-            )
-        bucket = int(filt_pdf["bucket"].iloc[0])
-        table = np.frombuffer(filt_pdf["table"].iloc[0], dtype=np.uint16).reshape(
-            table_rows, slots_per_row
-        ).copy()
-        stash = list(np.frombuffer(filt_pdf["stash"].iloc[0], dtype=np.uint16))
-        if len(rem_pdf):
-            hi = rem_pdf["_hi"].to_numpy(dtype=np.int64).view(np.uint64)
-            hf = rem_pdf["_hf"].to_numpy(dtype=np.int64).view(np.uint64)
-            # dedup repeated removal urls on the SAME 128-bit pair the
-            # build dedups inserts on: a url stored once must delete
-            # exactly once — a duplicated removal row would clear a
-            # SECOND copy, i.e. another url's colliding fingerprint
-            # (deleting a non-member, the contract violation Fan et al.
-            # warn about)
-            uniq = np.unique(np.stack([hi, hf]), axis=1)
-            fp, i1, i2 = _fp_and_rows(uniq[0], uniq[1], table_rows)
-            for f, r1, r2 in zip(fp.tolist(), i1.tolist(), i2.tolist()):
-                for row in (r1, r2):
-                    slots = np.flatnonzero(table[row] == f)
-                    if len(slots):
-                        table[row, slots[0]] = 0
-                        break
-                else:
-                    if f in stash:
-                        stash.remove(f)
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "table": [table.tobytes()],
-                "stash": [np.array(sorted(stash), dtype=np.uint16).tobytes()],
-            }
-        )
-
-    return (
-        cuckoo.groupBy("bucket")
-        .cogroup(hashed.groupBy("bucket"))
-        .applyInPandas(remove, schema="bucket int, table binary, stash binary")
-    )
+    """Delete members — the cuckoo capability Bloom lacks. Removing a
+    url that was inserted restores the pre-insert state for it
+    (standard cuckoo deletion semantics — only delete urls known to be
+    members, same contract as the paper). One shuffle on the bucket
+    key; buckets without removals pass through untouched."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row)
+    return seenfilter.remove(kern, cuckoo, removals, url_col)
 
 
 def cuckoo_contains_py(

@@ -23,6 +23,7 @@ Scale notes (the parts that matter at 10^10 URLs):
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,9 +31,10 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import canonical_urls, make_crawl_extract_udf
 from ..sources.snapshots import SnapshotWarehouse
+from . import seenfilter
 from .bloom import bloom_maybe_seen, bloom_maybe_seen_cogroup, build_bloom, merge_blooms
 from .crawlconfig import CrawlConfig
-from .cuckoo import build_cuckoo, cuckoo_maybe_seen_cogroup, merge_cuckoos
+from .cuckoo import build_cuckoo, cuckoo_maybe_seen, cuckoo_maybe_seen_cogroup, merge_cuckoos
 from .politeness import build_robots_dim, with_politeness
 
 # custom_headers: per-URL request headers (reference
@@ -102,7 +104,7 @@ class CrawlEngine:
         self.pages = pages.select("url", "html", "content_type")
         self._pages_persisted = self.cfg.dedupe_pages
         self._extract_udf = make_crawl_extract_udf(self.cfg.max_links_per_page)
-        self._bloom_bc: tuple[int, object] | None = None
+        self._filter_bc: tuple[int, object] | None = None
         # wall-clock of the LAST wave's PageRank refresh (0.0 when the
         # wave skipped it) — evidence instrumentation only, no
         # semantics: scripts/evidence_crawl_10x.py splits the refresh
@@ -111,9 +113,9 @@ class CrawlEngine:
 
     def close(self) -> None:
         """Release engine-held executor state: the deduped-pages cache
-        and the current bloom broadcast. Without this, a driver that
-        builds several engines (tests, bench, notebook loops)
-        accumulates one cached pages table + one bitmap copy per
+        and the current seen-filter broadcast. Without this, a driver
+        that builds several engines (tests, bench, notebook loops)
+        accumulates one cached pages table + one filter copy per
         engine for the session's lifetime. Idempotent."""
         if self._pages_persisted:
             try:
@@ -121,12 +123,7 @@ class CrawlEngine:
             except Exception:
                 pass
             self._pages_persisted = False
-        if self._bloom_bc is not None:
-            try:
-                self._bloom_bc[1].unpersist(blocking=False)
-            except Exception:
-                pass
-            self._bloom_bc = None
+        self._release_filter_bc()
 
     def __enter__(self) -> "CrawlEngine":
         return self
@@ -241,7 +238,7 @@ class CrawlEngine:
             if d:
                 dropped[table] = d
         if dropped:
-            self._bloom_bc = None  # bitmap may reference a dropped snapshot
+            self._release_filter_bc()  # may hold a dropped filter snapshot
         return dropped
 
     # -- seen-set helpers (incremental; never rewrite history) ---------------
@@ -335,72 +332,66 @@ class CrawlEngine:
             .drop("rank_micro")
         )
 
-    def _bloom_geometry(self) -> dict:
-        cfg = self.cfg
-        return dict(
-            num_buckets=cfg.bloom_num_buckets,
-            bits_per_bucket=cfg.bloom_bits_per_bucket,
-            num_hashes=cfg.bloom_num_hashes,
-        )
+    def _filter_ops(self) -> tuple:
+        """The seen-filter kind's (build, merge, broadcast probe, cogroup
+        probe), each taking the kind's geometry keywords. Looked up per
+        call, so wrappers installed on the public names (perfbench's
+        traced pass) apply."""
+        if self.cfg.seen_filter == "cuckoo":
+            return build_cuckoo, merge_cuckoos, cuckoo_maybe_seen, cuckoo_maybe_seen_cogroup
+        return build_bloom, merge_blooms, bloom_maybe_seen, bloom_maybe_seen_cogroup
 
-    def _cuckoo_geometry(self) -> dict:
-        cfg = self.cfg
-        return dict(
-            num_buckets=cfg.bloom_num_buckets,
-            table_rows=cfg.cuckoo_table_rows,
-            slots_per_row=cfg.cuckoo_slots_per_row,
-        )
+    def _filter_snapshot(self) -> dict:
+        """Metadata of the CURRENT filter snapshot ({} before the first):
+        ``covered`` (seen urls it holds), ``capacity`` and ``geometry``."""
+        snaps = self.wh.snapshots(self.cfg.seen_filter)
+        return snaps[-1] if snaps else {}
 
-    def _bloom_bitmap(self):
-        """Broadcast handle for the CURRENT bloom snapshot, collected and
-        broadcast once per snapshot and destroyed when superseded —
-        probes run twice per wave and a per-call broadcast would leak
-        one bitmap copy per probe for the crawl's lifetime."""
-        snap = self.wh.current_id("bloom")
-        if self._bloom_bc is not None and self._bloom_bc[0] == snap:
-            return self._bloom_bc[1]
-        if self._bloom_bc is not None:
-            # unpersist (NOT destroy): frees executor copies but keeps
-            # the broadcast usable if a lazy plan from earlier in the
-            # wave recomputes a cached partition that references it
+    def _release_filter_bc(self) -> None:
+        # unpersist (NOT destroy): frees executor copies but keeps the
+        # broadcast usable if a lazy plan from earlier in the wave
+        # recomputes a cached partition that references it
+        if self._filter_bc is not None:
             try:
-                self._bloom_bc[1].unpersist(blocking=False)
+                self._filter_bc[1].unpersist(blocking=False)
             except Exception:
                 pass
-        bloom = self.wh.read(self.spark, "bloom")
-        bitmap = {int(r["bucket"]): bytes(r["bits"]) for r in bloom.collect()}
-        bc = self.spark.sparkContext.broadcast(bitmap)
-        self._bloom_bc = (snap, bc)
-        return bc
+            self._filter_bc = None
+
+    def _filter_broadcast(self):
+        """Broadcast handle for the CURRENT filter snapshot, collected and
+        broadcast once per snapshot and released when superseded —
+        probes run twice per wave and a per-call broadcast would leak
+        one filter copy per probe for the crawl's lifetime."""
+        snap = self.wh.current_id(self.cfg.seen_filter)
+        if self._filter_bc is None or self._filter_bc[0] != snap:
+            self._release_filter_bc()
+            filt = seenfilter.collect(self.wh.read(self.spark, self.cfg.seen_filter))
+            self._filter_bc = (snap, self.spark.sparkContext.broadcast(filt))
+        return self._filter_bc[1]
 
     def _filter_unseen(self, df: DataFrame, keep=None) -> DataFrame:
-        """Drop rows whose url is in the seen set: Bloom prefilter
-        (definitely-unseen rows skip the shuffle), exact anti-join only
-        for the maybe-seen residue. ``keep`` (a wave's cache hook)
-        persists the probed rows so both branches read one probe pass;
-        pass it only for wave-output-sized input, never the frontier."""
+        """Drop rows whose url is in the seen set: approximate-filter
+        probe (definitely-unseen rows skip the shuffle), exact anti-join
+        only for the maybe-seen residue. The probe reads the snapshot's
+        own geometry and is broadcast while the filter fits
+        cfg.bloom_broadcast_max, bucket-local (cogroup, no driver
+        collect) above it. ``keep`` (a wave's cache hook) persists the
+        probed rows so both branches read one probe pass; pass it only
+        for wave-output-sized input, never the frontier."""
         total = self._seen_total()
         if total == 0:
             return df
         cfg = self.cfg
         seen = self.read_seen()
-        if total >= cfg.bloom_min_seen and self._filter_covered() == total:
-            if cfg.seen_filter == "cuckoo":
-                # cuckoo has no broadcast mode: the bucket-local probe
-                # is its only (and scale-correct) path
-                probed = cuckoo_maybe_seen_cogroup(
-                    df, self.wh.read(self.spark, "cuckoo"), **self._cuckoo_geometry()
-                )
-            elif cfg.bloom_bitmap_bytes() > cfg.bloom_broadcast_max:
-                # bucket-local path: no driver collect — the only probe
-                # that works once the filter is multi-GB (10^10 URLs)
-                probed = bloom_maybe_seen_cogroup(
-                    df, self.wh.read(self.spark, "bloom"), **self._bloom_geometry()
-                )
+        snap = self._filter_snapshot()
+        if total >= cfg.bloom_min_seen and snap.get("covered") == total and "geometry" in snap:
+            geo = snap["geometry"]
+            _build, _merge, probe_broadcast, probe_cogroup = self._filter_ops()
+            if seenfilter.nbytes(cfg.seen_filter, geo) > cfg.bloom_broadcast_max:
+                probed = probe_cogroup(df, self.wh.read(self.spark, cfg.seen_filter), **geo)
             else:
-                probed = bloom_maybe_seen(
-                    df, None, bitmap_bc=self._bloom_bitmap(), **self._bloom_geometry()
-                )
+                probed = probe_broadcast(df, None, bitmap_bc=self._filter_broadcast(), **geo)
             if keep is not None:
                 probed = keep(probed)
             definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
@@ -408,45 +399,36 @@ class CrawlEngine:
             return definite.unionByName(maybes.join(seen, "url", "left_anti"))
         return df.join(seen, "url", "left_anti")
 
-    def _filter_covered(self) -> int:
-        """Seen-count the CURRENT approximate filter covers (bloom or
-        cuckoo snapshot metadata, per cfg.seen_filter)."""
-        snaps = self.wh.snapshots(self.cfg.seen_filter)
-        return snaps[-1].get("covered", -1) if snaps else -1
-
     def _append_seen(self, terminal: DataFrame, wave: int) -> int:
         """Append this wave's terminal urls as a NEW seen snapshot; once
-        the seen set crosses bloom_min_seen, maintain the Bloom table by
-        OR-merging the wave's bitmaps — O(wave output), never O(total
-        seen) except the ONE full build at threshold crossing. This is
-        the design that survives 10^10 URLs. Returns the new seen total."""
+        the seen set crosses bloom_min_seen, maintain the filter by
+        merging the wave's own filter into it — O(wave output). The
+        filter is sized for HEADROOM × the seen total (the geometry is
+        stored with the snapshot); when the seen total outgrows that
+        capacity, or the snapshot is stale or has no stored geometry,
+        ONE full build runs at the new size, so full builds cost
+        O(total seen) amortized. This is the design that survives 10^10
+        URLs. Returns the new seen total."""
         cfg, wh, spark = self.cfg, self.wh, self.spark
         total_before = self._seen_total()
         wh.commit(terminal, "seen", wave=wave)
         total_after = self._seen_total()
         if total_after >= cfg.bloom_min_seen:
-            incremental = self._filter_covered() == total_before
-            if cfg.seen_filter == "cuckoo":
-                geo = self._cuckoo_geometry()
-                if incremental:
-                    new_filt = merge_cuckoos(
-                        wh.read(spark, "cuckoo"),
-                        build_cuckoo(terminal, **geo),
-                        table_rows=geo["table_rows"],
-                        slots_per_row=geo["slots_per_row"],
-                    )
-                else:  # threshold crossing (or stale): one full build
-                    new_filt = build_cuckoo(self.read_seen(), **geo)
-                wh.commit(new_filt, "cuckoo", wave=wave, extra={"covered": total_after})
+            build, merge, _probe_broadcast, _probe_cogroup = self._filter_ops()
+            snap = self._filter_snapshot()
+            if snap.get("covered") == total_before and snap.get("capacity", 0) >= total_after:
+                capacity, geo = snap["capacity"], snap["geometry"]
+                new_filt = merge(
+                    wh.read(spark, cfg.seen_filter), build(terminal, **geo), **geo
+                )
             else:
-                if incremental:
-                    new_bloom = merge_blooms(
-                        wh.read(spark, "bloom"),
-                        build_bloom(terminal, **self._bloom_geometry()),
-                    )
-                else:  # threshold crossing (or stale): one full build
-                    new_bloom = build_bloom(self.read_seen(), **self._bloom_geometry())
-                wh.commit(new_bloom, "bloom", wave=wave, extra={"covered": total_after})
+                capacity = math.ceil(seenfilter.HEADROOM * total_after)
+                geo = seenfilter.geometry(cfg.seen_filter, capacity)
+                new_filt = build(self.read_seen(), **geo)
+            wh.commit(
+                new_filt, cfg.seen_filter, wave=wave,
+                extra={"covered": total_after, "capacity": capacity, "geometry": geo},
+            )
         # periodic compaction keeps the snapshot union shallow; the
         # superseded snapshots are expired by _gc_seen AFTER this
         # wave's metrics commit marker (never here — see _gc_seen)

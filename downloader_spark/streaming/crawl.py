@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from ..functions.udfs import canonical_urls, canonicalize_udf, make_crawl_extract_udf
 from ..plans.crawlconfig import CrawlConfig
 from ..plans.politeness import build_robots_dim, with_politeness
+from ..plans.seenfilter import geometry
 
 FRONTIER_SCHEMA = "url string, depth int, requeued boolean"
 
@@ -71,9 +72,7 @@ def streaming_crawl(
     seeds: list[str],
     max_depth: int = 2,
     seen_filter: str = "bloom",
-    num_buckets: int = 8,
-    bits_per_bucket: int = 1 << 17,
-    table_rows: int = 1 << 12,
+    capacity: int = 100_000,
     max_links_per_page: int = 20,
     max_drains: int = 64,
     cfg: CrawlConfig | None = None,
@@ -84,11 +83,17 @@ def streaming_crawl(
     does not re-count batches a previous process completed). Results
     are parquet rows (url, depth, text, n_links) under per-batch
     subdirectories — read them with
-    ``spark.read.option("recursiveFileLookup", "true")``."""
-    if seen_filter not in ("bloom", "cuckoo"):
-        raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
+    ``spark.read.option("recursiveFileLookup", "true")``.
+
+    ``capacity`` is the number of distinct urls the seen state is sized
+    for (plans/seenfilter.geometry); a drain that fills a state bucket
+    past it fails rather than dropping new urls as false positives.
+    Keep it fixed across resumes of one ``work_dir``."""
+    geo = geometry(seen_filter, capacity)  # validates seen_filter
     from ..operators.dedup import _ckpt_tracked, _drop_ckpt
     from .stateful import streaming_seen_filter, streaming_seen_filter_cuckoo
+
+    seen_stream = streaming_seen_filter if seen_filter == "bloom" else streaming_seen_filter_cuckoo
 
     frontier_dir = os.path.join(work_dir, "frontier")
     results_dir = os.path.join(work_dir, "results")
@@ -253,14 +258,7 @@ def streaming_crawl(
                 .option("recursiveFileLookup", "true")
                 .parquet(frontier_dir)
             )
-            if seen_filter == "bloom":
-                filtered = streaming_seen_filter(
-                    stream, num_buckets=num_buckets, bits_per_bucket=bits_per_bucket
-                )
-            else:
-                filtered = streaming_seen_filter_cuckoo(
-                    stream, num_buckets=num_buckets, table_rows=table_rows
-                )
+            filtered = seen_stream(stream, **geo)
             drain_fetch["n"] = 0
             q = (
                 filtered.writeStream.foreachBatch(handle)

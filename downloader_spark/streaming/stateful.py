@@ -1,185 +1,45 @@
 """Streaming URL-seen filters via ``applyInPandasWithState``.
 
-The batch engine's approximate seen filters (plans/bloom.py,
-plans/cuckoo.py) re-expressed as stateful streams: the state store
-holds one Bloom bitmap or one cuckoo table per url bucket, updated once
-per micro-batch, and each input url is emitted with ``first_seen``.
-State survives restarts via the checkpoint. The streaming crawl
-(streaming/crawl.py) runs them at frontier intake; tests drain a source
-in two AvailableNow runs across a restart
-(tests/test_formats_stateful.py).
+The batch engine's approximate seen filters as stateful streams: the
+state store holds one Bloom bitmap or cuckoo table per url bucket,
+updated once per micro-batch, and each input url is emitted with
+``first_seen``. Both run the one state loop in plans/seenfilter.py over
+their kind's numpy kernel, so a state row is bit-compatible with a
+batch-built bucket of the same geometry (size it with
+``seenfilter.geometry(kind, capacity)``; keep it across restarts). A
+bucket filled past that capacity fails the batch rather than silently
+marking new urls as repeats. The streaming crawl (streaming/crawl.py)
+runs them at frontier intake; tests drain a source in two AvailableNow
+runs across a restart (tests/test_formats_stateful.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-
-def _passthrough_schema(stream: DataFrame, url_col: str) -> tuple[str, list[str]]:
-    """Output schema = the input's columns (url first, aliased to
-    'url') + first_seen — extra columns (depth, headers, ...) ride
-    through the filter untouched, so a crawl pipeline doesn't lose its
-    row context at the dedup step."""
-    extras = [
-        f for f in stream.schema.fields if f.name != url_col
-    ]
-    schema = "url string, " + ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in extras
-    ) if extras else "url string"
-    schema += ", first_seen boolean"
-    return schema, [f.name for f in extras]
+from ..plans import seenfilter
+from ..plans.bloom import BloomKernel
+from ..plans.cuckoo import CuckooKernel
 
 
 def streaming_seen_filter(
-    url_stream: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    bits_per_bucket: int = 1 << 17,
-    num_hashes: int = 5,
+    url_stream: DataFrame, url_col: str = "url",
+    num_buckets: int = 16, bits_per_bucket: int = 1 << 17, num_hashes: int = 5,
 ) -> DataFrame:
-    """Streaming first-seen detection over an unbounded URL feed — the
-    batch engine's Bloom-before-anti-join (plans/bloom.py) re-expressed
-    as a stateful stream: the state store holds ONE Bloom bitmap per
-    ``pmod(xxhash64(url), num_buckets)`` bucket, updated per
-    micro-batch. Emits (url, first_seen); ``first_seen=false`` rows are
-    definite repeats within the stream's lifetime, ``true`` rows are new
-    except for the usual Bloom false-positive rate being marked false
-    (bound (1-e^{-kn/m})^k — size the geometry to the expected URL
-    count, exactly as the batch path does). Probe positions use the
-    identical double-hashing scheme, so the streaming and batch filters
-    agree bit-for-bit on the same geometry.
-
-    At scale this is the frontier-intake dedup: one state row per
-    bucket (bounded memory per key), no per-URL state rows, checkpoint
-    persistence across restarts for free.
-    """
-    import numpy as np
-
-    from ..plans.bloom import _positions
-
-    m, k = bits_per_bucket, num_hashes
-    F_ = F
-
-    def dedup(key, pdfs, state: GroupState):
-        arr = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
-            else np.zeros(m // 8, dtype=np.uint8)
-        )
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            h1 = pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
-            h2 = pdf["_h2"].to_numpy(dtype=np.int64).view(np.uint64)
-            pos = _positions(h1, h2, k, m)  # (n, k)
-            byte_idx = (pos >> np.uint64(3)).astype(np.int64)
-            bit_mask = (1 << (pos & np.uint64(7))).astype(np.uint8)
-            # fully vectorized: probe against the state AS OF BATCH
-            # START, then exact within-batch first-occurrence dedupe by
-            # url (strictly fewer false positives than a sequential
-            # probe-then-insert, which would let one url's inserted
-            # bits shadow another new url in the same batch)
-            in_state = ((arr[byte_idx] & bit_mask) != 0).all(axis=1)
-            first_in_batch = ~pdf["url"].duplicated().to_numpy()
-            first = first_in_batch & ~in_state
-            np.bitwise_or.at(arr, byte_idx.ravel(), bit_mask.ravel())
-            out = pdf[["url"] + extras].copy()
-            out["first_seen"] = first
-            yield out
-        state.update((arr.tobytes(),))
-
-    from ..plans.bloom import _hash_cols
-
-    out_schema, extras = _passthrough_schema(url_stream, url_col)
-    h1c, h2c = _hash_cols("url")
-    keyed = (
-        url_stream.withColumnRenamed(url_col, "url")
-        .withColumn("_bucket", F_.pmod(F_.xxhash64("url"), F_.lit(num_buckets)).cast("int"))
-        .withColumn("_h1", h1c)
-        .withColumn("_h2", h2c)
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
-        dedup,
-        outputStructType=out_schema,
-        stateStructType="bits binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Emits the input rows (url first) + ``first_seen`` with one Bloom
+    bitmap per bucket as state: ``false`` rows are definite repeats
+    within the stream's lifetime, ``true`` rows are new except for the
+    Bloom false-positive rate."""
+    kern = BloomKernel(num_buckets, bits_per_bucket, num_hashes)
+    return seenfilter.stream(kern, url_stream, url_col)
 
 
 def streaming_seen_filter_cuckoo(
-    url_stream: DataFrame,
-    url_col: str = "url",
-    num_buckets: int = 16,
-    table_rows: int = 1 << 14,
-    slots_per_row: int = 4,
-    max_kicks: int = 200,
+    url_stream: DataFrame, url_col: str = "url", num_buckets: int = 16,
+    table_rows: int = 1 << 14, slots_per_row: int = 4, max_kicks: int = 200,
 ) -> DataFrame:
-    """Cuckoo-table variant of ``streaming_seen_filter`` (VERDICT r3
-    #6: a user who picked ``seen_filter='cuckoo'`` in the batch engine
-    for deletability shouldn't lose it in the streaming path). Same
-    per-bucket state-store layout, same (url, first_seen) contract;
-    the state is a (table, stash) cuckoo filter using the IDENTICAL
-    fingerprint arithmetic as plans/cuckoo.py — a checkpointed
-    streaming state row is bit-compatible with a batch-built bucket,
-    and the pure-Python oracle ``cuckoo_contains_py`` probes it
-    directly. Within a batch, later chunks probe the table updated by
-    earlier chunks, so cross-chunk repeats are caught exactly like the
-    Bloom path. Repeats are definite (no false negatives); new urls
-    carry the cuckoo false-positive rate (~8/2^16 per probe at 4
-    slots), the dual of the Bloom bound."""
-    import numpy as np
-
-    from ..plans.cuckoo import _fp_and_rows, _hash_cols as _cuckoo_hash_cols, _insert_all
-
-    if table_rows & (table_rows - 1):
-        raise ValueError("table_rows must be a power of two (XOR partner indexing)")
-
-    def dedup(key, pdfs, state: GroupState):
-        if state.exists:
-            table_b, stash_b = state.get
-            table = np.frombuffer(table_b, dtype=np.uint16).reshape(
-                table_rows, slots_per_row
-            ).copy()
-            stash = list(np.frombuffer(stash_b, dtype=np.uint16))
-        else:
-            table = np.zeros((table_rows, slots_per_row), dtype=np.uint16)
-            stash = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            hi = pdf["_hi"].to_numpy(dtype=np.int64).view(np.uint64)
-            hf = pdf["_hf"].to_numpy(dtype=np.int64).view(np.uint64)
-            fp, i1, i2 = _fp_and_rows(hi, hf, table_rows)
-            in_state = (table[i1] == fp[:, None]).any(axis=1) | (
-                table[i2] == fp[:, None]
-            ).any(axis=1)
-            if stash:
-                in_state |= np.isin(fp, np.array(stash, dtype=np.uint16))
-            first_in_batch = ~pdf["url"].duplicated().to_numpy()
-            first = first_in_batch & ~in_state
-            _insert_all(table, stash, fp[first], i1[first], table_rows, max_kicks)
-            out = pdf[["url"] + extras].copy()
-            out["first_seen"] = first
-            yield out
-        state.update(
-            (table.tobytes(), np.array(sorted(stash), dtype=np.uint16).tobytes())
-        )
-
-    out_schema, extras = _passthrough_schema(url_stream, url_col)
-    hic, hfc = _cuckoo_hash_cols("url")
-    keyed = (
-        url_stream.withColumnRenamed(url_col, "url")
-        .withColumn("_bucket", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int"))
-        .withColumn("_hi", hic)
-        .withColumn("_hf", hfc)
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
-        dedup,
-        outputStructType=out_schema,
-        stateStructType="table binary, stash binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Cuckoo-table variant of ``streaming_seen_filter`` (deletability
+    kept in the streaming path); the oracle ``cuckoo_contains_py``
+    probes its state rows directly."""
+    kern = CuckooKernel(num_buckets, table_rows, slots_per_row, max_kicks)
+    return seenfilter.stream(kern, url_stream, url_col)

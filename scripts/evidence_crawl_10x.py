@@ -36,7 +36,7 @@ def main() -> None:
     pages_per_host = int(pos[1]) if len(pos) > 1 else 100
     overrides: dict = {}
     if "--cuckoo" in sys.argv:
-        overrides.update(seen_filter="cuckoo", cuckoo_table_rows=1 << 15)
+        overrides.update(seen_filter="cuckoo")
     if "--pagerank" in sys.argv:
         overrides.update(pagerank_every=1)
     if "--url-filter" in sys.argv:

@@ -102,8 +102,7 @@ def test_engine_cogroup_probe_mode_equals_broadcast_mode(spark, tmp_path):
     for mode, budget in budgets.items():
         cfg = CrawlConfig(
             wave_seconds=10, max_per_host_per_wave=4, max_depth=2,
-            bloom_min_seen=1, bloom_num_buckets=4,
-            bloom_bits_per_bucket=1 << 14, **budget,
+            bloom_min_seen=1, **budget,
         )
         eng = CrawlEngine(spark, str(tmp_path / f"wh_{mode}"), pages, cfg)
         eng.init(seeds)
@@ -115,23 +114,20 @@ def test_engine_cogroup_probe_mode_equals_broadcast_mode(spark, tmp_path):
         seen = {r["url"] for r in eng.read_seen().collect()}
         runs[mode] = (res, seen, [vars(m) for m in metrics])
         # which probe ran: only the broadcast path collects the bitmap
-        assert (eng._bloom_bc is None) == (mode == "cogroup"), mode
+        assert (eng._filter_bc is None) == (mode == "cogroup"), mode
         eng.close()
     assert runs["broadcast"] == runs["cogroup"]
 
 
 def test_bloom_probe_validation_and_auto_geometry():
-    """The probe path is chosen by bitmap geometry: the default filter
-    fits the broadcast budget, and past the budget the engine must never
-    collect bitmaps to the driver (cogroup)."""
+    """The probe path is chosen by the filter's size under the sizing
+    rule: a test-scale filter fits the broadcast budget, and a 10^10-url
+    filter exceeds it, so the engine must never collect it to the
+    driver (cogroup)."""
     from downloader_spark.plans.crawlconfig import CrawlConfig
+    from downloader_spark.plans.seenfilter import geometry, nbytes
 
-    small = CrawlConfig()  # default geometry: 16 × 16 KiB = 256 KiB
-    assert small.bloom_bitmap_bytes() == 256 * 1024
-    assert small.bloom_bitmap_bytes() <= small.bloom_broadcast_max
-
-    big = CrawlConfig(
-        bloom_num_buckets=1024, bloom_bits_per_bucket=1 << 25
-    )  # 4 GiB bitmap
-    assert big.bloom_bitmap_bytes() == 4 * 1024**3
-    assert big.bloom_bitmap_bytes() > big.bloom_broadcast_max
+    budget = CrawlConfig().bloom_broadcast_max
+    for kind in ("bloom", "cuckoo"):
+        assert nbytes(kind, geometry(kind, 10_000)) <= budget
+        assert nbytes(kind, geometry(kind, 10**10)) > budget

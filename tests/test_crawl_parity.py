@@ -18,8 +18,6 @@ CFG = CrawlConfig(
     max_per_host_per_wave=5,
     max_depth=2,
     salt_buckets=4,
-    bloom_num_buckets=4,
-    bloom_bits_per_bucket=1 << 14,
     bloom_min_seen=1,  # exercise the Bloom path even at test scale
     max_content_bytes=6000,  # small cap so some pages hit 'too_large'
     max_urls_per_wave=15,  # exercise the global wave budget (P6)
@@ -236,8 +234,7 @@ def test_accelerator_flags_never_change_semantics(spark, tmp_path_factory):
     for name, overrides in variants.items():
         cfg = CrawlConfig(**{
             "wave_seconds": 10, "max_per_host_per_wave": 4, "max_depth": 2,
-            "bloom_min_seen": 1, "bloom_num_buckets": 4,
-            "bloom_bits_per_bucket": 1 << 14, **overrides,
+            "bloom_min_seen": 1, **overrides,
         })
         eng = CrawlEngine(
             spark, str(tmp_path_factory.mktemp(f"wh_{name}")), pages, cfg
@@ -253,3 +250,52 @@ def test_accelerator_flags_never_change_semantics(spark, tmp_path_factory):
         )
         eng.close()
     assert runs["default"] == runs["no_filter"] == runs["shuffle_robots"]
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_filter_resized_from_seen_set(spark, web, sim_run, tmp_path, monkeypatch, kind):
+    """The seen filter is sized from the seen total: with no headroom
+    and a 16-byte bucket budget it spans several buckets and is rebuilt
+    at a new geometry as the seen set grows, and the crawl still equals
+    the simulator (cuckoo through the cogroup probe). A filter snapshot
+    with no stored geometry (the layout before geometry was stored)
+    takes the full-build path even where a merge would otherwise run."""
+    import dataclasses
+
+    from downloader_spark.plans import seenfilter
+    from downloader_spark.plans import wave as wave_mod
+
+    pages_df, _pages, seeds = web
+    cfg = dataclasses.replace(
+        CFG, seen_filter=kind, bloom_broadcast_max=0 if kind == "cuckoo" else CFG.bloom_broadcast_max
+    )
+    monkeypatch.setattr(seenfilter, "HEADROOM", 1)
+    monkeypatch.setattr(seenfilter, "BUCKET_BYTES", 16)
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), pages_df, cfg)
+    eng.init(seeds)
+    metrics = [eng.run_wave(w) for w in (1, 2)]
+    monkeypatch.setattr(seenfilter, "HEADROOM", 10)
+    metrics.append(eng.run_wave(3))
+    snaps = eng.wh.snapshots(kind)
+    geos = {tuple(sorted(s["geometry"].items())) for s in snaps}
+    assert len(geos) >= 2, snaps
+    assert max(s["geometry"]["num_buckets"] for s in snaps) >= 2
+    # without its geometry, the wave-3 filter would be merged into
+    assert snaps[-1]["capacity"] >= metrics[-1].n_seen_out * 2
+    eng.wh.commit(
+        eng.wh.read(spark, kind), kind, wave=3, extra={"covered": snaps[-1]["covered"]}
+    )
+    merged = []
+    for name in ("merge_blooms", "merge_cuckoos"):
+        orig = getattr(wave_mod, name)
+        monkeypatch.setattr(
+            wave_mod, name, lambda *a, _orig=orig, **kw: merged.append(1) or _orig(*a, **kw)
+        )
+    metrics.append(eng.run_wave(4))
+    assert not merged
+    assert "geometry" in eng.wh.snapshots(kind)[-1]
+
+    for m, s in zip(metrics, sim_run.wave_counts, strict=True):
+        assert {k: vars(m)[k] for k in s} == s
+    assert {r["url"] for r in eng.read_seen().collect()} == sim_run.seen
+    eng.close()

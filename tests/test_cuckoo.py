@@ -215,9 +215,7 @@ def test_engine_cuckoo_seen_filter_equals_bloom(spark, tmp_path):
     for mode in ("bloom", "cuckoo"):
         cfg = CrawlConfig(
             wave_seconds=10, max_per_host_per_wave=4, max_depth=2,
-            bloom_min_seen=1, bloom_num_buckets=4,
-            bloom_bits_per_bucket=1 << 14, seen_filter=mode,
-            cuckoo_table_rows=1 << 8,
+            bloom_min_seen=1, seen_filter=mode,
         )
         eng = CrawlEngine(spark, str(tmp_path / f"wh_{mode}"), pages, cfg)
         eng.init(seeds)
@@ -243,5 +241,3 @@ def test_seen_filter_validation():
 
     with _pytest.raises(ValueError, match="seen_filter"):
         CrawlConfig(seen_filter="cuckooo")
-    with _pytest.raises(ValueError, match="power of two"):
-        CrawlConfig(seen_filter="cuckoo", cuckoo_table_rows=1000)

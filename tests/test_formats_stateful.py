@@ -128,6 +128,38 @@ class TestStreamingSeenFilter:
         assert sorted(firsts) == sorted(set(firsts)), "a url was first_seen twice"
         assert set(firsts) == all_urls == {u for (u,) in urls1 + urls2}
 
+    @pytest.mark.parametrize("mode", ["bloom", "cuckoo"])
+    def test_overfilled_state_fails_loudly(self, spark, tmp_path, mode):
+        """A state bucket filled past the capacity its geometry was sized
+        for fails the batch, naming the bucket: with no exact anti-join
+        behind the streaming filter, its false positives would silently
+        drop new urls."""
+        from downloader_spark.streaming.stateful import (
+            streaming_seen_filter,
+            streaming_seen_filter_cuckoo,
+        )
+
+        src = str(tmp_path / "src")
+        spark.createDataFrame(
+            [(f"http://h.example/o/{i}",) for i in range(200)], "url string"
+        ).write.parquet(src)
+        stream = spark.readStream.schema("url string").parquet(src)
+        if mode == "bloom":  # capacity ~7 urls at the target FP rate
+            filtered = streaming_seen_filter(
+                stream, num_buckets=1, bits_per_bucket=64, num_hashes=2
+            )
+        else:  # capacity 8 urls (half of 4 rows x 4 slots)
+            filtered = streaming_seen_filter_cuckoo(stream, num_buckets=1, table_rows=4)
+        q = (
+            filtered.writeStream.foreachBatch(lambda df, _bid: df.count())
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(Exception, match="seen filter bucket 0 holds"):
+            q.awaitTermination()
+        q.stop()
+
     def test_cuckoo_streaming_state_matches_batch_filter(self, spark, tmp_path):
         """The checkpointed streaming cuckoo state uses the SAME
         fingerprint arithmetic as the batch filter: a batch-built

@@ -19,7 +19,7 @@ M = 256
 CFG = CrawlConfig(
     wave_seconds=10**6, max_per_host_per_wave=10**6,
     max_depth=10,  # deeper than the crawl → every ok page's links count
-    bloom_num_buckets=4, bloom_bits_per_bucket=1 << 14, bloom_min_seen=1,
+    bloom_min_seen=1,
     hll_metrics_m=M,
 )
 

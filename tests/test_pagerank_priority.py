@@ -20,8 +20,6 @@ CFG_PR = CrawlConfig(
     max_per_host_per_wave=4,
     max_depth=2,
     salt_buckets=4,
-    bloom_num_buckets=4,
-    bloom_bits_per_bucket=1 << 14,
     bloom_min_seen=1,
     pagerank_every=1,  # refresh before every wave > 1
 )
@@ -113,7 +111,7 @@ def test_high_indegree_overtakes_lexicographic(spark, tmp_path_factory):
     pages_df, page_map, seeds = _two_host_web(spark)
     base = dict(
         wave_seconds=10, max_depth=2, salt_buckets=4,
-        bloom_num_buckets=4, bloom_bits_per_bucket=1 << 14, bloom_min_seen=1,
+        bloom_min_seen=1,
     )
 
     def first_b_fetch(cfg):

@@ -28,8 +28,6 @@ CFG = CrawlConfig(
     max_per_host_per_wave=5,
     max_depth=2,
     salt_buckets=4,
-    bloom_num_buckets=4,
-    bloom_bits_per_bucket=1 << 14,
     bloom_min_seen=1,
     url_filter=True,
     url_blocklist=("site0002.example", "site0005.example"),
