@@ -7,9 +7,14 @@ boundary once per Arrow batch (input_hint: "no per-row Python").
   crawl payload (reference content_converter.py:441-552 + D1/D2 flags).
 - ``canonicalize_udf(url) → struct(...)`` — P1+P2 validation +
   canonical frontier key (reference validation.py:28-268).
+- ``make_crawl_extract_udf(max_links)`` — ``extract_udf`` plus the
+  page's out-links, canonicalized in the same Python call: ``links``
+  holds only the valid ones as (url_canonical, host) in document
+  order and ``n_links`` is the raw count. The crawl engines explode
+  ``links`` with native Spark; no second Python pass touches a link.
 - ``canonical_urls(df, url_col)`` — the same canonicalizer as a row
-  filter: one mapInPandas pass that keeps only the valid rows. Every
-  crawl call site that drops invalid urls uses it; the
+  filter: one mapInPandas pass that keeps only the valid rows (the
+  crawl engines' seeds). The
   ``select(canonicalize_udf).filter("c.valid")`` form plans the UDF
   twice (once per referencing projection) and pays the Arrow/worker
   boundary twice per row.
@@ -49,7 +54,21 @@ EXTRACT_SCHEMA = StructType(
 )
 
 CRAWL_EXTRACT_SCHEMA = StructType(
-    EXTRACT_SCHEMA.fields + [StructField("links", ArrayType(StringType()))]
+    EXTRACT_SCHEMA.fields
+    + [
+        StructField(
+            "links",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("url_canonical", StringType()),
+                        StructField("host", StringType()),
+                    ]
+                )
+            ),
+        ),
+        StructField("n_links", IntegerType()),
+    ]
 )
 
 CANON_SCHEMA = StructType(
@@ -95,7 +114,9 @@ _CRAWL_COLS = [f.name for f in CRAWL_EXTRACT_SCHEMA.fields]
 
 def make_crawl_extract_udf(max_links: int = 64):
     """extract_udf + out-link discovery (one parse per page), with the
-    link cap taken from engine config (CrawlConfig.max_links_per_page)."""
+    link cap taken from engine config (CrawlConfig.max_links_per_page).
+    Each extracted link runs through ``canonicalize_url`` in the same
+    call; ``links`` keeps the valid ones, ``n_links`` counts them all."""
 
     @pandas_udf(CRAWL_EXTRACT_SCHEMA)
     def crawl_extract(
@@ -104,12 +125,13 @@ def make_crawl_extract_udf(max_links: int = 64):
         rows = []
         for u, h, ct in zip(url, html, content_type):
             if h is None:
-                rows.append(("", "", 0, False, False, False, False, []))
+                rows.append(("", "", 0, False, False, False, False, [], 0))
                 continue
             r = extract_page(
                 bytes(h), ct or "", u or "", with_links=True, link_cap=max_links
             )
             f = r.flags
+            checks = [canonicalize_url(link) for link in r.links]
             rows.append(
                 (
                     r.text,
@@ -119,15 +141,13 @@ def make_crawl_extract_udf(max_links: int = 64):
                     f.is_error_page,
                     f.needs_render,
                     f.needs_js_render,
-                    list(r.links),
+                    [{"url_canonical": c.url, "host": c.host} for c in checks if c.valid],
+                    len(checks),
                 )
             )
         return pd.DataFrame(rows, columns=_CRAWL_COLS)
 
     return crawl_extract
-
-
-crawl_extract_udf = make_crawl_extract_udf()
 
 
 @pandas_udf(CANON_SCHEMA)

@@ -103,6 +103,20 @@ def url_spam_score(url: Column, weights: dict[str, int] | None = None) -> Column
     return score.cast("int")
 
 
+def url_keep_col(
+    url: Column,
+    host: Column,
+    domains: list[str],
+    weights: dict[str, int],
+    block_at: int = URL_SCORE_BLOCK,
+) -> Column:
+    """The crawl engines' pre-frontier URL gate over a canonical url and
+    its host: not blocked and spam score < ``block_at``. One predicate
+    for the batch wave and the streaming drain; ``url_keep_py`` is its
+    single-node mirror (CLAUDE.md invariant 2)."""
+    return ~domain_blocked_col(host, domains) & (url_spam_score(url, weights) < F.lit(block_at))
+
+
 def url_keep_py(
     url: str,
     host: str,

@@ -15,7 +15,7 @@ decisions by construction.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .crawlconfig import CrawlConfig
@@ -133,3 +133,22 @@ def with_politeness(
     return joined.withColumn("allowed", allowed).withColumn("budget", budget).drop(
         "crawl_delay", "disallow", "has_robots"
     )
+
+
+def top_per_host(allowed: DataFrame, order: list[Column], salt_buckets: int) -> DataFrame:
+    """Rows of ``allowed`` whose per-host ``rank`` under ``order`` is
+    within the row's ``budget``; adds ``rank``. TWO-PHASE: a partial
+    rank per (host, pmod(xxhash64(url), salt_buckets)) first caps any
+    single window partition at budget × salt_buckets rows for hot
+    hosts, then the exact rank runs on the survivors (skew defense;
+    SURVEY §4.1). Both crawl engines schedule through it."""
+    salted = allowed.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets)))
+    w1 = Window.partitionBy("host", "_salt").orderBy(*order)
+    survivors = (
+        salted.withColumn("_prank", F.row_number().over(w1))
+        .filter(F.col("_prank") <= F.col("budget"))
+        .drop("_salt", "_prank")
+    )
+    w2 = Window.partitionBy("host").orderBy(*order)
+    ranked = survivors.withColumn("rank", F.row_number().over(w2))
+    return ranked.filter(F.col("rank") <= F.col("budget"))

@@ -14,8 +14,15 @@ Scale notes (the parts that matter at 10^10 URLs):
   a salted partial rank caps any single partition's rows at
   budget×salt_buckets for hot hosts, then the exact rank runs on the
   survivors (skew defense; SURVEY §4.1);
-- the URL-seen check is Bloom-prefiltered: definitely-unseen rows skip
-  the exact anti-join shuffle entirely (SURVEY §4.2);
+- the URL-seen check runs once per url, on the wave's discovered
+  links, and is Bloom-prefiltered: definitely-unseen rows skip the
+  exact anti-join shuffle entirely (SURVEY §4.2). Every committed
+  frontier is disjoint from seen (deferred and retried urls are never
+  terminal, discovered urls are filtered against seen ∪ terminal, and
+  init() filters the seeds), so a wave reads its frontier unprobed;
+- out-links are canonicalized inside the extract UDF, in the same
+  Python call as the parse; discovery and the PageRank edges explode
+  them with native Spark only;
 - the pages join shuffles on url; Spark's runtime Bloom filter + AQE
   handle the rest (session defaults in session.py);
 - statuses/retries are DATA (attempt column, T3), never task retries.
@@ -35,7 +42,7 @@ from . import seenfilter
 from .bloom import bloom_maybe_seen, bloom_maybe_seen_cogroup, build_bloom, merge_blooms
 from .crawlconfig import CrawlConfig
 from .cuckoo import build_cuckoo, cuckoo_maybe_seen, cuckoo_maybe_seen_cogroup, merge_cuckoos
-from .politeness import build_robots_dim, with_politeness
+from .politeness import build_robots_dim, top_per_host, with_politeness
 
 # custom_headers: per-URL request headers (reference
 # BatchURLRequest.custom_headers, models/responses.py:37) — carried
@@ -62,6 +69,22 @@ class WaveMetrics:
     n_discovered: int
     n_frontier_out: int
     n_seen_out: int
+
+
+def _metrics_row(spark: SparkSession, row: dict) -> DataFrame:
+    """The one-row metrics marker, built JVM-side (no Python worker).
+    The schema is the one ``createDataFrame([row])`` infers: columns in
+    sorted key order, every value a nullable bigint (lists an
+    ``array<bigint>``). A CASE without ELSE keeps each column nullable,
+    so the Parquet footer matches too."""
+    one = spark.range(1, numPartitions=1)
+
+    def col(v):
+        if isinstance(v, list):
+            return F.array(*map(F.lit, v)).cast("array<bigint>")
+        return F.lit(v).cast("bigint")
+
+    return one.select(*[F.when(one.id == 0, col(v)).alias(k) for k, v in sorted(row.items())])
 
 
 class CrawlEngine:
@@ -137,7 +160,10 @@ class CrawlEngine:
         (url, custom_headers dict) pairs (reference
         BatchURLRequest.custom_headers, models/responses.py:37).
         Invalid seeds are recorded as results rows with status
-        'invalid' (reference validate→400 analog, download.py:137-148)."""
+        'invalid' (reference validate→400 analog, download.py:137-148).
+        Seeds already in the seen set (a re-init of a crawled
+        warehouse) are dropped: every committed frontier stays
+        disjoint from seen, which run_wave relies on."""
         rows = [
             (i, s, None)
             if isinstance(s, str)
@@ -161,7 +187,7 @@ class CrawlEngine:
         # original seed order (min_by seed_idx) — the simulator's rule;
         # dropDuplicates would keep an arbitrary row and diverge on
         # same-url seeds that differ in custom_headers
-        valid = (
+        valid = self._filter_unseen(
             canon.groupBy(F.col("url_canonical").alias("url"))
             .agg(
                 F.min_by("host", "seed_idx").alias("host"),
@@ -317,17 +343,16 @@ class CrawlEngine:
         )
         release_result(ranks)
 
-    def _with_rank_score(self, unseen: DataFrame) -> DataFrame:
+    def _with_rank_score(self, frontier: DataFrame) -> DataFrame:
         """Left-join the latest ranks snapshot onto the frontier as
-        ``_pr`` (0 for unranked urls). The join shuffles on url — the
-        same key the seen anti-join just used, so AQE co-locates it;
-        the ranks payload is (url, long)."""
+        ``_pr`` (0 for unranked urls). The join shuffles on url; the
+        ranks payload is (url, long)."""
         snaps = self.wh.snapshots("ranks")
         if not snaps:
-            return unseen.withColumn("_pr", F.lit(0).cast("long"))
+            return frontier.withColumn("_pr", F.lit(0).cast("long"))
         ranks = self.wh.read(self.spark, "ranks")
         return (
-            unseen.join(ranks, "url", "left")
+            frontier.join(ranks, "url", "left")
             .withColumn("_pr", F.coalesce(F.col("rank_micro"), F.lit(0).cast("long")))
             .drop("rank_micro")
         )
@@ -377,8 +402,9 @@ class CrawlEngine:
         own geometry and is broadcast while the filter fits
         cfg.bloom_broadcast_max, bucket-local (cogroup, no driver
         collect) above it. ``keep`` (a wave's cache hook) persists the
-        probed rows so both branches read one probe pass; pass it only
-        for wave-output-sized input, never the frontier."""
+        probed rows so both branches read one probe pass. Called for a
+        wave's discovered links and for init()'s seeds; a wave's
+        frontier is already disjoint from seen and is never probed."""
         total = self._seen_total()
         if total == 0:
             return df
@@ -444,9 +470,13 @@ class CrawlEngine:
         """Run one wave and commit results → seen → filter → frontier →
         metrics (the marker, strictly last).
 
+        The frontier is read as committed: every frontier snapshot is
+        disjoint from the seen set (see _filter_unseen), so the wave
+        runs no seen probe before politeness.
+
         Wave-scoped caches — each relation is built once and every
-        branch that needs it reads the cache: ``pol`` (seen-filtered
-        frontier + politeness), ``selected`` (this wave's fetch set),
+        branch that needs it reads the cache: ``pol`` (frontier +
+        politeness), ``selected`` (this wave's fetch set),
         ``extracted`` (the one fetch+extract pass), ``terminal`` (the
         urls the wave appends to seen), ``discovered`` (the deduped
         out-links) and, when the Bloom filter is live, the probed
@@ -484,24 +514,23 @@ class CrawlEngine:
             self._refresh_ranks(wave)
             self.last_rank_refresh_sec = round(_time.monotonic() - _t0, 2)
 
-        # 1+2. URL-seen filter (Bloom prefilter + exact anti-join for the
-        #    maybes) THEN politeness (robots allow/deny + per-host
-        #    budget), persisted and materialized as ONE relation: every
+        # 1+2. politeness (robots allow/deny + per-host budget) over the
+        #    frontier, which is disjoint from seen by construction (no
+        #    probe), persisted and materialized as ONE relation: every
         #    later branch (denied results, terminal seen, deferred
-        #    frontier) reads this cache instead of re-running the probe
-        #    and the robots join — lazy persists under a multi-branch
-        #    union otherwise recompute the whole chain per branch
-        #    (measured ~6× wave wall-clock).
+        #    frontier) reads this cache instead of re-running the
+        #    robots join — lazy persists under a multi-branch union
+        #    otherwise recompute the whole chain per branch (measured
+        #    ~6× wave wall-clock).
         #    n_unseen is OBSERVED during the extract job below instead
         #    of a separate count() — the pol cache is populated by the
         #    first job that runs through it (extracted.count), saving
         #    one full Spark job per wave of pure fixed overhead.
-        unseen = self._filter_unseen(frontier)
         if cfg.pagerank_every:
-            unseen = self._with_rank_score(unseen)
+            frontier = self._with_rank_score(frontier)
         obs_unseen = Observation(f"unseen-{wave}")
         pol = keep(
-            with_politeness(unseen, robots, cfg)
+            with_politeness(frontier, robots, cfg)
             .observe(obs_unseen, F.count(F.lit(1)).alias("n"))
         )
         denied = pol.filter(~F.col("allowed"))
@@ -513,18 +542,7 @@ class CrawlEngine:
         order = ([F.desc("_pr")] if cfg.pagerank_every else []) + [
             F.desc("score"), F.asc("depth"), F.asc("url")
         ]
-        salted = allowed.withColumn(
-            "_salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-        survivors = (
-            salted.withColumn("_prank", F.row_number().over(w1))
-            .filter(F.col("_prank") <= F.col("budget"))
-            .drop("_salt", "_prank")
-        )
-        w2 = Window.partitionBy("host").orderBy(*order)
-        ranked = survivors.withColumn("rank", F.row_number().over(w2))
-        selected = ranked.filter(F.col("rank") <= F.col("budget")).drop("budget", "allowed")
+        selected = top_per_host(allowed, order, cfg.salt_buckets).drop("budget", "allowed")
         if cfg.max_urls_per_wave is not None:
             # P6 global wave budget: deterministic top-N over the
             # politeness-selected set (TakeOrdered — no full sort);
@@ -581,7 +599,7 @@ class CrawlEngine:
             F.when(is_ok, F.col("ex.markdown")).alias("markdown"),
             F.when(is_ok, F.col("ex.needs_render")).otherwise(False).alias("needs_render"),
             F.when(is_ok, F.col("ex.needs_js_render")).otherwise(False).alias("needs_js_render"),
-            F.when(is_ok, F.size("ex.links")).otherwise(0).alias("n_links"),
+            F.when(is_ok, F.col("ex.n_links")).otherwise(0).alias("n_links"),
             "custom_headers",
         ).unionByName(
             denied.select(
@@ -619,29 +637,22 @@ class CrawlEngine:
             .unionByName(denied.select("url"))
         )
 
-        # 6. discover links → canonical, valid, depth-bounded; dedupe
+        # 6. discover links → depth-bounded (the extract UDF already
+        #    canonicalized them and dropped the invalid ones); dedupe
         #    within the wave by url (min depth → max score, same rule as
         #    the simulator's in-wave merge)
-        discovered = canonical_urls(
-            ok_links.select("depth", F.explode("links").alias("raw_url"))
-            .filter(F.col("depth") + 1 <= cfg.max_depth),
-            "raw_url",
+        discovered = (
+            ok_links.filter(F.col("depth") + 1 <= cfg.max_depth)
+            .select("depth", F.explode("links").alias("link"))
+            .select("link.url_canonical", "link.host", "depth")
         )
         if cfg.url_filter:
             # RefinedWeb-style pre-frontier URL gate (native columns;
             # simulator mirror: urlquality.url_keep_py — invariant 2)
-            from ..functions.urlquality import (
-                domain_blocked_col,
-                url_spam_score,
-            )
+            from ..functions.urlquality import url_keep_col
 
-            domains, weights, block_at = cfg.resolved_url_filter()
             discovered = discovered.filter(
-                ~domain_blocked_col(F.col("host"), domains)
-                & (
-                    url_spam_score(F.col("url_canonical"), weights)
-                    < F.lit(block_at)
-                )
+                url_keep_col(F.col("url_canonical"), F.col("host"), *cfg.resolved_url_filter())
             )
         # read by the frontier chain and by the HLL register agg. A
         # cached plan keeps its final shuffle's width (AQE may not
@@ -736,14 +747,9 @@ class CrawlEngine:
         # beyond two urls and the table is only read every
         # cfg.pagerank_every waves.
         if cfg.pagerank_every:
-            links_df = (
-                canonical_urls(
-                    ok_links.select(F.col("url").alias("src"), F.explode("links").alias("raw")),
-                    "raw",
-                )
-                .select("src", F.col("url_canonical").alias("dst"))
-                .distinct()
-            )
+            links_df = ok_links.select(
+                F.col("url").alias("src"), F.explode("links.url_canonical").alias("dst")
+            ).distinct()
             wh.commit(links_df, "links", wave=wave)
         obs_disc = Observation(f"disc-{wave}")
         discovered_new = (
@@ -769,7 +775,7 @@ class CrawlEngine:
         # 8. next frontier = deferred ∪ retries ∪ (discovered − seen),
         #    deduped by url (min depth → max score; max attempt wins).
         #    n_discovered observed during the frontier write.
-        # deferred ≡ unseen − selected − denied ≡ allowed − selected
+        # deferred ≡ frontier − selected − denied ≡ allowed − selected
         # (denied ∩ allowed = ∅, selected ⊆ allowed) — reads the pol cache
         try:
             deferred = allowed.join(
@@ -854,8 +860,7 @@ class CrawlEngine:
         row = dict(vars(metrics))
         if hll_regs is not None:
             row["hll_regs"] = hll_regs
-        mdf = spark.createDataFrame([row])
-        wh.commit(mdf, "metrics", wave=wave)
+        wh.commit(_metrics_row(spark, row), "metrics", wave=wave)
 
         # the metrics commit marker is durable: NOW superseded seen
         # history can be reclaimed (also sweeps leftovers if an earlier

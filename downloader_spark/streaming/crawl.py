@@ -15,8 +15,9 @@ last checkpoint:
           same politeness dim, predicate and crawl-delay budget the
           batch engine enforces; over-budget urls are REQUEUED to the
           next drain, not dropped) → static pages join → ONE Arrow
-          extract pass → results + discovered links (depth+1, bounded)
-          + requeued urls written BACK into the frontier dir
+          extract pass (which also canonicalizes the out-links) →
+          results + discovered links (depth+1, bounded) + requeued
+          urls written BACK into the frontier dir
 
 The files foreachBatch writes during drain N are exactly what drain
 N+1 picks up — the self-feeding loop a crawl is — and the loop
@@ -38,8 +39,8 @@ join (never shuffled by the stream); the seen state is one
 bitmap/table row per bucket — bounded, not per-URL; and each drain is
 one incremental micro-batch, so cost is O(new frontier), the same
 invariant the batch wave engine holds. The per-host budget rank is the
-batch engine's two-phase salted window (plans/wave.py:447-459) —
-hot-host skew is capped before the exact rank. The batch engine
+batch engine's two-phase salted window (plans/politeness.top_per_host)
+— hot-host skew is capped before the exact rank. The batch engine
 remains the production path (exact wave semantics, overlapped commit
 chains, resume-from-snapshot); this demonstrates the same crawl
 expressed through checkpointed streaming state, and its fetched set +
@@ -54,12 +55,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import canonical_urls, canonicalize_udf, make_crawl_extract_udf
 from ..plans.crawlconfig import CrawlConfig
-from ..plans.politeness import build_robots_dim, with_politeness
+from ..plans.politeness import build_robots_dim, top_per_host, with_politeness
 from ..plans.seenfilter import geometry
 
 FRONTIER_SCHEMA = "url string, depth int, requeued boolean"
@@ -151,28 +152,12 @@ def streaming_crawl(
         pol, pol_ids = _ckpt_tracked(with_politeness(canon, robots, cfg))
         try:
             allowed = pol.filter("allowed")
-            # two-phase salted per-host rank (plans/wave.py:447-459):
-            # the salt caps any single partition at budget×salt_buckets
-            # rows for hot hosts before the exact rank runs. The
+            # the batch engine's two-phase salted per-host rank. The
             # streaming frontier carries no score column; score is
             # depth-monotone (cfg.score_for_depth), so (depth asc, url
             # asc) is the batch ordering restricted to this schema.
             order = [F.asc("depth"), F.asc("url")]
-            salted = allowed.withColumn(
-                "_salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-            )
-            w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-            survivors = (
-                salted.withColumn("_prank", F.row_number().over(w1))
-                .filter(F.col("_prank") <= F.col("budget"))
-                .drop("_salt", "_prank")
-            )
-            w2 = Window.partitionBy("host").orderBy(*order)
-            take = (
-                survivors.withColumn("_rank", F.row_number().over(w2))
-                .filter(F.col("_rank") <= F.col("budget"))
-                .select("url", "depth")
-            )
+            take = top_per_host(allowed, order, cfg.salt_buckets).select("url", "depth")
             deferred = allowed.join(take.select("url"), "url", "left_anti").select(
                 "url", "depth", F.lit(True).alias("requeued")
             )
@@ -187,7 +172,7 @@ def streaming_crawl(
                 fetched.select(
                     "url", "depth",
                     F.col("ex.text").alias("text"),
-                    F.size("ex.links").alias("n_links"),
+                    F.col("ex.n_links").alias("n_links"),
                     F.col("ex.links").alias("_links"),
                 )
             )
@@ -197,29 +182,18 @@ def streaming_crawl(
                     os.path.join(results_dir, f"b{bid}")
                 )
                 if max_depth > 0:
-                    disc = canonical_urls(
-                        out.filter(F.col("depth") < F.lit(max_depth)).select(
-                            F.explode("_links").alias("raw"),
-                            (F.col("depth") + 1).alias("depth"),
-                        ),
-                        "raw",
-                    )
+                    # the extract pass already canonicalized the links
+                    disc = out.filter(F.col("depth") < F.lit(max_depth)).select(
+                        F.explode("_links").alias("link"),
+                        (F.col("depth") + 1).alias("depth"),
+                    ).select("link.url_canonical", "link.host", "depth")
                     if cfg.url_filter:
                         # same pre-frontier URL gate as the wave engine
-                        # (plans/wave.py discovered filter)
-                        from ..functions.urlquality import (
-                            domain_blocked_col,
-                            url_spam_score,
-                        )
+                        from ..functions.urlquality import url_keep_col
 
-                        domains, weights, block_at = cfg.resolved_url_filter()
                         disc = disc.filter(
-                            ~domain_blocked_col(F.col("host"), domains)
-                            & (
-                                url_spam_score(
-                                    F.col("url_canonical"), weights
-                                )
-                                < F.lit(block_at)
+                            url_keep_col(
+                                F.col("url_canonical"), F.col("host"), *cfg.resolved_url_filter()
                             )
                         )
                     discovered = (

@@ -1,16 +1,22 @@
 """A crawl wave computes each per-wave relation once: snapshot reads
-carry their schema, canonicalization is one Python node, and the
-wave-scoped caches are released whether the wave returns or raises."""
+carry their schema, out-links are canonicalized inside the extract
+pass, the seen probe runs on discovered links only (the frontier is
+disjoint from seen by construction), the metrics marker is built
+without Python, and the wave-scoped caches are released whether the
+wave returns or raises."""
 
 import re
+import sys
 
 import pytest
 from pyspark import StorageLevel
 
-from downloader_spark.functions.udfs import canonical_urls
+from downloader_spark.functions.udfs import canonical_urls, make_crawl_extract_udf
 from downloader_spark.functions.urlnorm import canonicalize_url
+from downloader_spark.htmlx.convert import extract_page
+from downloader_spark.plans import wave
 from downloader_spark.plans.crawlconfig import CrawlConfig
-from downloader_spark.plans.wave import CrawlEngine
+from downloader_spark.plans.wave import CrawlEngine, _metrics_row
 from downloader_spark.sources.pagegen import generate_web_graph
 
 SEEDS = [f"http://site{h:04d}.example/p/0" for h in range(4)]
@@ -107,3 +113,96 @@ def test_canonical_urls_is_one_python_node(spark):
             want.add((i, u, c.url, c.host))
     assert {tuple(r) for r in out.collect()} == want
     assert len(want) == 2
+
+
+LINK_PAGE = b"""<html><body><main><p>Links page with enough words to count as body.</p>
+<a href="mailto:someone@example.com">mail</a>
+<a href="javascript:void(0)">js</a>
+<a href="ftp://files.example.com/x">ftp</a>
+<a href="http://127.0.0.1/admin">loopback</a>
+<a href="/relative/path?b=2&a=1">relative</a>
+<a href="../up">up</a>
+<a href="http://UPPER.Example.COM/Path">upper</a>
+<a href="https://example.org/page#section">fragment</a>
+<a href="http://example.net:80/port">default port</a>
+<a href="http://upper.example.com/Path">same canonical url as upper</a>
+<a href="#top">top</a>
+</main></body></html>"""
+
+
+def test_crawl_extract_canonicalizes_links_in_the_extract_pass(spark):
+    base = "http://Site.example/dir/page.html"
+    df = spark.createDataFrame(
+        [(0, base, LINK_PAGE, "text/html"), (1, base, None, "text/html")],
+        "i int, url string, html binary, content_type string",
+    )
+    ex = make_crawl_extract_udf(max_links=64)
+    rows = {
+        r["i"]: r["ex"]
+        for r in df.select("i", ex("url", "html", "content_type").alias("ex")).collect()
+    }
+    raw = extract_page(LINK_PAGE, "text/html", base, with_links=True, link_cap=64).links
+    want = [c for link in raw if (c := canonicalize_url(link)).valid]
+    assert [(x["url_canonical"], x["host"]) for x in rows[0]["links"]] == [
+        (c.url, c.host) for c in want
+    ]
+    assert rows[0]["n_links"] == len(raw)
+    # the battery exercises both drops: links extract_page never emits
+    # (mailto/javascript/ftp/fragment-only) and links canonicalize_url
+    # rejects (loopback)
+    assert 0 < len(want) < len(raw) < 11
+    assert rows[1]["links"] == [] and rows[1]["n_links"] == 0
+
+
+def test_wave_probes_only_discovered_links_and_frontier_stays_disjoint(
+    spark, tmp_path, monkeypatch
+):
+    eng = _engine(spark, str(tmp_path / "wh"), bloom_min_seen=1, pagerank_every=1)
+    with eng:
+        eng.init(SEEDS)
+
+        def no_canonical_pass(*a, **kw):
+            raise AssertionError("a wave ran the canonical_urls pass")
+
+        monkeypatch.setattr(wave, "canonical_urls", no_canonical_pass)
+        callers = []
+        probe = eng._filter_unseen
+
+        def recording_probe(df, keep=None):
+            callers.append(sys._getframe(1).f_code.co_name)
+            return probe(df, keep)
+
+        monkeypatch.setattr(eng, "_filter_unseen", recording_probe)
+        for w in (1, 2, 3):
+            m = eng.run_wave(w)
+            assert m.n_unseen == m.n_frontier_in > 0, w
+            frontier = eng.wh.read(spark, "frontier")
+            assert frontier.join(eng.read_seen(), "url", "left_semi").isEmpty(), w
+        # one probe per wave, of the discovered links (in _finish_wave);
+        # the Bloom filter is live from wave 2 on, so the probe ran
+        assert callers == ["_finish_wave"] * 3
+        assert eng.wh.snapshots("bloom")
+
+
+def test_reinit_drops_seeds_already_seen(spark, tmp_path):
+    eng = _engine(spark, str(tmp_path / "wh"))
+    with eng:
+        eng.init(SEEDS)
+        eng.run_wave(1)
+        seen = {r.url for r in eng.read_seen().collect()}
+        seeds = SEEDS + [f"http://site{h:04d}.example/p/5" for h in range(2)]
+        canon = {canonicalize_url(s).url for s in seeds}
+        assert {canonicalize_url(s).url for s in SEEDS} <= seen
+        assert canon - seen
+        eng.init(seeds)
+        frontier = {r.url for r in eng.wh.read(spark, "frontier").collect()}
+        assert frontier == canon - seen
+
+
+def test_metrics_marker_schema_is_the_inferred_one(spark):
+    row = {"wave": 2, "n_ok": 5, "n_seen_out": 9, "hll_regs": [0, 3, 1, 7]}
+    got = _metrics_row(spark, row)
+    assert got.schema == spark.createDataFrame([row]).schema
+    assert got.collect()[0].asDict() == row
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "Scan ExistingRDD" not in plan, plan
