@@ -51,6 +51,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..session import spread
+
 #: threshold_edges scores a group in TILE × TILE pair tiles, so each
 #: score matrix is 32 MiB of doubles whatever the group size
 TILE = 2048
@@ -174,9 +176,7 @@ def topk_superset(
                 )
 
     src = cand.select("cand_id", "cvec", *extra_cols)
-    return src.repartition(
-        spark.sparkContext.defaultParallelism, "cand_id"
-    ).mapInPandas(gen, schema)
+    return spread(src, "cand_id").mapInPandas(gen, schema)
 
 
 def topk_tail(superset: DataFrame, k: int, round_to: int) -> DataFrame:

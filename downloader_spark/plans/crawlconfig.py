@@ -35,7 +35,6 @@ class CrawlConfig:
     # oversized pages become terminal 'too_large' rows, counted in metrics
     max_content_bytes: int = 50 * 1024 * 1024
     salt_buckets: int = 8  # two-phase top-k salt for hot hosts
-    num_host_buckets: int = 64  # frontier partitioning pmod(xxhash64(host), P)
     # seen-filter probe path, chosen by the filter snapshot's size (its
     # geometry comes from plans/seenfilter.py's sizing rule, either
     # kind): while the filter fits this budget it is collected once per

@@ -106,9 +106,9 @@ def with_politeness(
     the default crawl delay.
 
     The dim is broadcast while it fits (cfg.broadcast_robots); at
-    10^8-host scale flip it off and the join becomes a shuffle hash
-    join on host — both sides already partition by host, so AQE
-    co-locates it with the priority window's shuffle."""
+    10^8-host scale flip it off and the join shuffles both sides on
+    host (a Parquet snapshot read carries no partitioning, so neither
+    side arrives partitioned)."""
     dim = F.broadcast(robots_dim) if cfg.broadcast_robots else robots_dim
     joined = frontier.join(dim, "host", "left")
     path = F.regexp_extract("url", r"^[a-z]+://[^/]*(/.*)$", 1)

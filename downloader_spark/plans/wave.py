@@ -71,6 +71,37 @@ class WaveMetrics:
     n_seen_out: int
 
 
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """unionByName of a non-empty list of snapshot reads."""
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d)
+    return out
+
+
+def _merge_frontier(n: int, *parts: DataFrame) -> DataFrame:
+    """One frontier row per url over ``parts`` (each FRONTIER_SCHEMA):
+    min depth, max score, max attempt, and the headers of the first
+    part, in argument order, whose row for the url carries any.
+    Written hash-partitioned by url into ``n`` partitions: a url key
+    fills every partition, where a bounded bucket key would cap the
+    file count at the bucket count. (The dedupe keeps its own shuffle:
+    with the layout shuffle under the aggregate, AQE drops a union
+    branch whose cached input is empty together with the Observation
+    on it.)"""
+    tagged = _union([p.withColumn("_part", F.lit(i)) for i, p in enumerate(parts)])
+    return tagged.groupBy("url").agg(
+        F.first("host").alias("host"),
+        F.min("depth").alias("depth"),
+        F.max("score").alias("score"),
+        F.max("attempt").alias("attempt"),
+        F.min_by(
+            "custom_headers",
+            F.when(F.col("custom_headers").isNotNull(), F.col("_part")),
+        ).alias("custom_headers"),
+    ).repartition(n, "url")
+
+
 def _metrics_row(spark: SparkSession, row: dict) -> DataFrame:
     """The one-row metrics marker, built JVM-side (no Python worker).
     The schema is the one ``createDataFrame([row])`` infers: columns in
@@ -161,9 +192,15 @@ class CrawlEngine:
         BatchURLRequest.custom_headers, models/responses.py:37).
         Invalid seeds are recorded as results rows with status
         'invalid' (reference validate→400 analog, download.py:137-148).
-        Seeds already in the seen set (a re-init of a crawled
-        warehouse) are dropped: every committed frontier stays
-        disjoint from seen, which run_wave relies on."""
+
+        On a crawled warehouse (re-init) the live frontier is kept: it
+        is first rolled back to the last complete wave, then the seeds
+        not yet seen are merged into it by frontier_out's rule
+        (_merge_frontier, the live row's headers first) and committed
+        at that wave. Seeds already in the seen set are dropped, so
+        every committed frontier stays disjoint from seen, which
+        run_wave relies on. The empty seen snapshot is committed on a
+        fresh warehouse only."""
         rows = [
             (i, s, None)
             if isinstance(s, str)
@@ -173,6 +210,7 @@ class CrawlEngine:
         seed_df = self.spark.createDataFrame(
             rows, "seed_idx long, url string, custom_headers map<string,string>"
         )
+        self.recover()
         # valid seeds, canonicalized once: the frontier write and the
         # invalid-seed anti-join both read this cache
         canon = canonical_urls(seed_df, "url").persist()
@@ -187,7 +225,7 @@ class CrawlEngine:
         # original seed order (min_by seed_idx) — the simulator's rule;
         # dropDuplicates would keep an arbitrary row and diverge on
         # same-url seeds that differ in custom_headers
-        valid = self._filter_unseen(
+        seeds = self._filter_unseen(
             canon.groupBy(F.col("url_canonical").alias("url"))
             .agg(
                 F.min_by("host", "seed_idx").alias("host"),
@@ -216,14 +254,15 @@ class CrawlEngine:
             F.lit(0).alias("n_links"),
             F.col("custom_headers"),
         )
-        frontier = valid.repartition(
-            self._n_shuffle(n_seeds),
-            F.pmod(F.xxhash64("host"), F.lit(cfg.num_host_buckets)),
-        )
-        self.wh.commit(frontier, "frontier", wave=0)
-        self.wh.commit(
-            self.spark.createDataFrame([], SEEN_SCHEMA), "seen", wave=0
-        )
+        live = self.wh.snapshots("frontier")
+        parts = [self.wh.read(self.spark, "frontier"), seeds] if live else [seeds]
+        n_rows = n_seeds + (live[-1]["n_rows"] if live else 0)
+        wave = self.next_wave - 1
+        self.wh.commit(_merge_frontier(self._n_shuffle(n_rows), *parts), "frontier", wave=wave)
+        if not self.wh.snapshots("seen"):
+            self.wh.commit(
+                self.spark.createDataFrame([], SEEN_SCHEMA), "seen", wave=0
+            )
         robots = build_robots_dim(self.pages)
         self.wh.commit(robots, "robots", wave=0)
         if invalid.isEmpty():
@@ -288,12 +327,7 @@ class CrawlEngine:
         """Union of the live seen snapshots (append-only table,
         compacted every cfg.seen_compact_every waves so the union stays
         shallow)."""
-        snaps = self._live_seen_snaps()
-        dfs = [self.wh.read(self.spark, "seen", s["id"]) for s in snaps]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union([self.wh.read(self.spark, "seen", s["id"]) for s in self._live_seen_snaps()])
 
     def _gc_seen(self) -> None:
         """Expire seen snapshots superseded by a compaction — called
@@ -310,12 +344,7 @@ class CrawlEngine:
     # -- rank-informed frontier priority (VERDICT r4 #3) ----------------------
     def _read_union(self, table: str) -> DataFrame:
         """Union of every snapshot of an append-only table."""
-        snaps = self.wh.snapshots(table)
-        dfs = [self.wh.read(self.spark, table, s["id"]) for s in snaps]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union([self.wh.read(self.spark, table, s["id"]) for s in self.wh.snapshots(table)])
 
     def _refresh_ranks(self, wave: int) -> None:
         """Run integer fixed-point PageRank (operators/graph.py) over
@@ -459,9 +488,7 @@ class CrawlEngine:
         # superseded snapshots are expired by _gc_seen AFTER this
         # wave's metrics commit marker (never here — see _gc_seen)
         if len(self._live_seen_snaps()) >= cfg.seen_compact_every:
-            compacted = self.read_seen().repartition(
-                self._n_shuffle(), F.pmod(F.xxhash64("url"), F.lit(cfg.num_host_buckets))
-            )
+            compacted = self.read_seen().repartition(self._n_shuffle(), "url")
             wh.commit(compacted, "seen", wave=wave, extra={"kind": "compaction"})
         return self._seen_total()
 
@@ -785,23 +812,9 @@ class CrawlEngine:
                 "url", "host", "depth", "score",
                 (F.col("attempt") + 1).alias("attempt"), "custom_headers",
             )
-            frontier_out = (
-                deferred.unionByName(retry_front)
-                .unionByName(discovered_new)
-                .groupBy("url")
-                .agg(
-                    F.first("host").alias("host"),
-                    F.min("depth").alias("depth"),
-                    F.max("score").alias("score"),
-                    F.max("attempt").alias("attempt"),
-                    # only one source row per url can carry headers (the
-                    # deferred/retry row); discovered rows are always NULL
-                    F.first("custom_headers", ignorenulls=True).alias("custom_headers"),
-                )
-                .repartition(
-                    n_out, F.pmod(F.xxhash64("host"), F.lit(cfg.num_host_buckets))
-                )
-            )
+            # only one source row per url can carry headers (the
+            # deferred/retry row); discovered rows are always NULL
+            frontier_out = _merge_frontier(n_out, deferred, retry_front, discovered_new)
             wh.commit(frontier_out, "frontier", wave=wave)
         finally:
             # the seen chain must never be left in flight when the wave
@@ -940,9 +953,4 @@ class CrawlEngine:
     # -- reads ------------------------------------------------------------------
     def all_results(self) -> DataFrame:
         """Union of every results snapshot (the full crawl log)."""
-        snaps = self.wh.snapshots("results")
-        dfs = [self.wh.read(self.spark, "results", s["id"]) for s in snaps]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return self._read_union("results")

@@ -22,6 +22,7 @@ from .operators.aggregates import (
 )
 from .operators.dedup import exact_dup_groups
 from .operators.topk import history_page, per_key_topk
+from .session import spread
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -77,47 +78,6 @@ def _q(name: str, oracle: str | Callable[[], str] | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session parallelism before
-    per-row-HEAVY map work (r7). The sf fixtures are single-row-group
-    parquet files, so a scan is ONE partition and every pre-exchange
-    projection (regex, HOFs, Arrow UDFs, gram explodes) otherwise runs
-    on one core — measured 19 s single-task vs ~2 s spread for the
-    extract UDF at sf1.0. Only applied where the map work dominates
-    the ~0.2 s shuffle it costs; at production scale scans yield
-    thousands of partitions and callers would drop this (the
-    repartition constant is the session's core count, not a magic
-    number)."""
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _spread_if_big(
-    spark: SparkSession, df: DataFrame, sf_dir: str,
-    table: str = "documents", min_mb: int = 4,
-) -> DataFrame:
-    """_spread gated on the source table's file size (guide §2: derive
-    scale-dependent partitioning from input size, not a constant). For
-    BORDERLINE per-row work — cheap enough that the ~0.2 s shuffle
-    outweighs it at sf0.1 (measured quality_score 0.30 → 0.55-0.77 s
-    there) but single-core-bound at sf1.0+ (1.8 → 0.5 s) — spread only
-    once the input outgrows ``min_mb``. Clearly-heavy paths (UDFs,
-    gram explodes, multi-regex flag packs) use _spread unconditionally:
-    they win at every fixture scale."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        # single-file fixtures: the size IS the table size; directory
-        # or remote layouts: assume big (a multi-file table usually
-        # already scans parallel anyway — the repartition is harmless)
-        size = (1 << 40) if os.path.isdir(path) else os.path.getsize(path)
-    except OSError:
-        size = 1 << 40
-    if size >= min_mb * (1 << 20):
-        return _spread(spark, df)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -178,7 +138,7 @@ def q_token_counts(spark, sf_dir):
     """,
 )
 def q_quality_score(spark, sf_dir):
-    docs = _spread_if_big(spark, _t(spark, sf_dir, "documents"), sf_dir)
+    docs = _t(spark, sf_dir, "documents")
     denom = F.greatest("n_chars", F.lit(1))
     punct = F.length(F.regexp_replace("text", r"[^.!?]", ""))
     digits = F.length(F.regexp_replace("text", r"[^0-9]", ""))
@@ -443,10 +403,9 @@ def q_gopher_quality(spark, sf_dir):
             )
         )
     )
-    # spread the per-row HOF work: the sf fixture is ONE small parquet
-    # file (1 scan partition per union branch); at production scale the
-    # scan already yields thousands of partitions and this is ~free
-    seeded = seeded.repartition(spark.sparkContext.defaultParallelism)
+    # spread the per-row HOF work (a one-file fixture scans as one
+    # partition per union branch)
+    seeded = spread(seeded)
     # token/line arrays materialized ONCE (r7): features and flags
     # together reference the token array six times and the line array
     # four times, and inline split expressions re-inline per reference
@@ -921,14 +880,10 @@ def q_extract_lang_profile(spark, sf_dir):
     from .functions.udfs import extract_udf
     from .sources.pagegen import pages_from_documents
 
-    # spread the extract UDF across cores (r7): the sf fixture is ONE
-    # parquet file → one scan partition, so the whole corpus was parsed
-    # by a single Python worker (measured 19 s single-task vs ~2 s
-    # spread at sf1.0); at production scale the scan already yields
-    # thousands of partitions and this is ~free
-    pages = pages_from_documents(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread the extract UDF across cores (r7): a one-file fixture is
+    # one scan partition, so one Python worker parsed the whole corpus
+    # (measured 19 s single-task vs ~2 s spread at sf1.0)
+    pages = spread(pages_from_documents(spark, sf_dir))
     ex = pages.withColumn(
         "ex", extract_udf("url", "html", F.lit("text/html"))
     )
@@ -1579,7 +1534,7 @@ def q_decontaminate(spark, sf_dir):
         F.concat_ws(" ", F.slice(words_of(F.col("text")), 5, 16)).alias("etext"),
     )
     return contamination_stats(
-        _spread(spark, docs), "doc_id", F.col("text"), eval_df, F.col("etext"), n=8
+        spread(docs), "doc_id", F.col("text"), eval_df, F.col("etext"), n=8
     ).orderBy("doc_id")
 
 
@@ -1653,7 +1608,7 @@ def q_drop_repeated_spans(spark, sf_dir):
         F.when(F.col("doc_id") % 50 == 0,
                F.lit("\nLimited time offer act now")).otherwise(F.lit("")),
     )
-    seeded = _spread(spark, docs.select("doc_id", text2.alias("text")))
+    seeded = spread(docs.select("doc_id", text2.alias("text")))
     return drop_repeated_spans(
         seeded, "doc_id", F.col("text"), min_df=2, min_words=3
     ).orderBy("doc_id")
@@ -1727,9 +1682,9 @@ def _webtext_gate(spark, corpus):
     from .functions.repetition_arrow import with_repetition_arrow
     from .functions.text import _tokens, gopher_flags
 
-    # spread the per-row HOF gate work across cores (single-file toy
-    # fixture -> one scan partition per union branch; free at scale)
-    corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
+    # spread the per-row HOF gate work across cores (a one-file
+    # fixture scans as one partition per union branch)
+    corpus = spread(corpus)
     # token/line arrays materialized once for the flag HOFs (r7 — the
     # shingles_of_words inline-reuse rule; same expressions)
     corpus = corpus.select(
@@ -2479,7 +2434,7 @@ def q_detect_lang_counts(spark, sf_dir):
     # the shingles_of_words rule applied to the lang scorer
     from .functions.text import _tokens, detect_lang_from_tokens
 
-    docs = _spread(spark, _t(spark, sf_dir, "documents").select("text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("text"))
     return (
         docs.select(_tokens(F.col("text")).alias("_toks"))
         .select(detect_lang_from_tokens(F.col("_toks")).alias("detected"))
@@ -2638,7 +2593,7 @@ def q_pii_redact(spark, sf_dir):
             ((d * 7) % 256).cast("string"),
         )).otherwise(F.lit("")),
     )
-    base = _spread(spark, docs.select("doc_id", seeded_text.alias("text")))
+    base = spread(docs.select("doc_id", seeded_text.alias("text")))
     counts = pii_counts(F.col("text"))
     return base.select(
         "doc_id",
@@ -2676,7 +2631,7 @@ def q_fingerprint_groups(spark, sf_dir):
     # spread BEFORE the token projection so the split itself runs
     # distributed (r7; a post-projection repartition would still do
     # the heavy map work in the single scan task)
-    seeded = _spread(spark, seeded).select(
+    seeded = spread(seeded).select(
         "doc_id", tokens_of(F.col("text")).alias("_toks")
     )  # split once
     return (
@@ -3470,12 +3425,12 @@ def q_multi_format_fanout(spark, sf_dir):
         .when(m == 1, F.array(F.lit("json"), F.lit("raw"), F.lit("pdf")))
         .otherwise(F.array(F.lit("html"), F.lit("text")))
     )
-    pages = docs.select(
+    pages = spread(docs.select(
         url.alias("url"),
         F.encode(html_str, "UTF-8").alias("html"),
         formats.alias("formats"),
-    ).repartition(spark.sparkContext.defaultParallelism)
-    # ^ r7: single-file fixture scan = one partition = one Python
+    ))
+    # ^ r7: a one-file fixture scan is one partition = one Python
     # worker parsing every page (same fix as extract_lang_profile)
     extracted = pages.withColumn("ex", extract_udf("url", "html", F.lit("text/html")))
     return multi_format_results(extracted).select(
@@ -3615,7 +3570,7 @@ def _bpe_seeded_docs(spark, sf_dir):
     )
     # spread before the Arrow BPE encoder (r7: single-row-group scan
     # would otherwise push every doc through ONE Python worker)
-    return _spread(spark, seeded)
+    return spread(seeded)
 
 
 def _bpe_oracle_common() -> str:
@@ -3989,7 +3944,7 @@ def q_lm_perplexity(spark, sf_dir):
         )
     )
     return (
-        score_perplexity(_spread(spark, seeded))
+        score_perplexity(spread(seeded))
         .select("doc_id", "n_bigrams", "nll_micro", "mean_nll", "ppl_bucket")
         .orderBy("doc_id")
     )
@@ -4110,7 +4065,7 @@ def q_quality_classifier(spark, sf_dir):
         )
     )
     return (
-        score_quality(_spread(spark, seeded))
+        score_quality(spread(seeded))
         .select("doc_id", "n_grams", "score_micro", "mean_score", "quality_label")
         .orderBy("doc_id")
     )

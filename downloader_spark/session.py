@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -66,3 +66,24 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def spread(df: DataFrame, *cols: str) -> DataFrame:
+    """Repartition ``df`` to the session parallelism — round-robin, or
+    hashed on ``cols`` — when its input is narrower than the session:
+    fewer input files than ``defaultParallelism``. The engine's one
+    partitioning rule for per-row-heavy map work (Python UDFs, HOF
+    token work, gram explodes) that sits before any exchange.
+
+    A single-file parquet table has one row group, so its scan is one
+    partition and that map work would run on one core. A table of at
+    least ``defaultParallelism`` files already scans in parallel and is
+    returned unchanged. Files, not scan partitions: a union of several
+    branches over one file scans as several partitions and still needs
+    the spread. Cached scans report their source files; local and
+    checkpointed relations report none, so they spread. The check is
+    plan-time only (file listing, no job)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if len(df.inputFiles()) >= par:
+        return df
+    return df.repartition(par, *cols)

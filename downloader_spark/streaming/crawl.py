@@ -11,7 +11,7 @@ last checkpoint:
         in the state store — streaming/stateful.py; extra columns like
         depth ride through)
       → foreachBatch:
-          canonicalize → robots allow gate + PER-HOST BUDGET rank (the
+          robots allow gate + PER-HOST BUDGET rank (the
           same politeness dim, predicate and crawl-delay budget the
           batch engine enforces; over-budget urls are REQUEUED to the
           next drain, not dropped) → static pages join → ONE Arrow
@@ -33,9 +33,10 @@ same rows (marker absent → the partial output is overwritten, never
 appended next to). Together with the checkpointed seen state this
 restores the exactly-once RESULTS contract the restart tests pin.
 
-Scale notes: the frontier stream carries only (url, depth, requeued)
-rows; the 100 TB pages corpus is on the STATIC side of a stream-static
-join (never shuffled by the stream); the seen state is one
+Scale notes: the frontier stream carries only (url, host, depth,
+requeued) rows, canonical when written, so a drain runs no
+canonicalize pass; the 100 TB pages corpus is on the STATIC side of a
+stream-static join (never shuffled by the stream); the seen state is one
 bitmap/table row per bucket — bounded, not per-URL; and each drain is
 one incremental micro-batch, so cost is O(new frontier), the same
 invariant the batch wave engine holds. The per-host budget rank is the
@@ -58,12 +59,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonical_urls, canonicalize_udf, make_crawl_extract_udf
+from ..functions.udfs import canonical_urls, make_crawl_extract_udf
 from ..plans.crawlconfig import CrawlConfig
 from ..plans.politeness import build_robots_dim, top_per_host, with_politeness
 from ..plans.seenfilter import geometry
 
-FRONTIER_SCHEMA = "url string, depth int, requeued boolean"
+FRONTIER_SCHEMA = "url string, host string, depth int, requeued boolean"
 
 
 def streaming_crawl(
@@ -89,7 +90,9 @@ def streaming_crawl(
     ``capacity`` is the number of distinct urls the seen state is sized
     for (plans/seenfilter.geometry); a drain that fills a state bucket
     past it fails rather than dropping new urls as false positives.
-    Keep it fixed across resumes of one ``work_dir``."""
+    Keep it fixed across resumes of one ``work_dir``. Frontier files
+    carry ``host``; a ``work_dir`` whose frontier files predate that
+    column (url, depth, requeued only) cannot be resumed."""
     geo = geometry(seen_filter, capacity)  # validates seen_filter
     from ..operators.dedup import _ckpt_tracked, _drop_ckpt
     from .stateful import streaming_seen_filter, streaming_seen_filter_cuckoo
@@ -116,6 +119,7 @@ def streaming_crawl(
         canonical_urls(spark.createDataFrame([(s,) for s in seeds], "raw string"), "raw")
         .select(
             F.col("url_canonical").alias("url"),
+            "host",
             F.lit(0).alias("depth"),
             F.lit(False).alias("requeued"),
         )
@@ -141,15 +145,12 @@ def streaming_crawl(
         fresh = (
             batch_df.filter("first_seen OR requeued")
             .groupBy("url")
-            .agg(F.min("depth").alias("depth"))
+            .agg(F.first("host").alias("host"), F.min("depth").alias("depth"))
         )
-        canon = fresh.select(
-            "url", "depth", canonicalize_udf("url").alias("c")
-        ).select("url", "depth", F.col("c.host").alias("host"))
         # robots allow gate + per-host crawl-delay budget — the SAME
         # politeness surface the batch engine enforces; pol feeds two
         # branches (take + defer), so materialize it once
-        pol, pol_ids = _ckpt_tracked(with_politeness(canon, robots, cfg))
+        pol, pol_ids = _ckpt_tracked(with_politeness(fresh, robots, cfg))
         try:
             allowed = pol.filter("allowed")
             # the batch engine's two-phase salted per-host rank. The
@@ -159,7 +160,7 @@ def streaming_crawl(
             order = [F.asc("depth"), F.asc("url")]
             take = top_per_host(allowed, order, cfg.salt_buckets).select("url", "depth")
             deferred = allowed.join(take.select("url"), "url", "left_anti").select(
-                "url", "depth", F.lit(True).alias("requeued")
+                "url", "host", "depth", F.lit(True).alias("requeued")
             )
             fetched = take.join(pages_side, "url").withColumn(
                 "ex", extract("url", "html", "_ct")
@@ -198,7 +199,7 @@ def streaming_crawl(
                         )
                     discovered = (
                         disc.groupBy(F.col("url_canonical").alias("url"))
-                        .agg(F.min("depth").alias("depth"))
+                        .agg(F.first("host").alias("host"), F.min("depth").alias("depth"))
                         .withColumn("requeued", F.lit(False))
                     )
                 else:

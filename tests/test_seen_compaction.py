@@ -88,3 +88,20 @@ def test_crash_between_compaction_and_metrics_recovers(spark, tmp_path, monkeypa
     m2 = eng.run_wave(2)
     assert m2.n_seen_out >= len(pre_seen)
     eng.close()
+
+
+def test_compaction_layout_is_keyed_by_url(spark, tmp_path):
+    """The compaction snapshot is hash-partitioned by url at the
+    shuffle width, so every partition of a 128-wide shuffle over 600
+    urls holds rows and the write is one file per partition. A bounded
+    bucket key (pmod(xxhash64(url), 64)) would cap it at 64 files."""
+    cfg = CrawlConfig(seen_compact_every=2, bloom_min_seen=10**9, dedupe_pages=False)
+    pages = spark.createDataFrame([], "url string, html binary")
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), pages, cfg)
+    eng._n_shuffle = lambda n_rows=None: 128
+    urls = [f"http://site{i % 7:04d}.example/p/{i}" for i in range(600)]
+    for wave, part in ((1, urls[:300]), (2, urls[300:])):
+        eng._append_seen(spark.createDataFrame([(u,) for u in part], "url string"), wave)
+    snap = eng.wh.snapshots("seen")[-1]
+    assert snap.get("kind") == "compaction" and snap["n_rows"] == 600
+    assert snap["n_partitions"] > 64

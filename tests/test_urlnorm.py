@@ -146,3 +146,33 @@ class TestSSRFBoundaryMatrix:
         # 172.15.x and 172.32.x are NOT in 172.16.0.0/12
         assert validate_url("http://172.15.0.1").valid
         assert validate_url("http://172.32.0.1").valid
+
+
+# every url literal this file checks, plus forms the canonicalizer
+# rewrites (scheme case, default ports, fragments, query order, empty
+# query values, percent escapes, bare hosts)
+BATTERY = [
+    "http://example.com/page", "https://example.com", "example.com/path",
+    "  http://example.com  ", "", None, "   ", "file:///etc/passwd",
+    "ftp://example.com", "javascript://alert(1)", "http://", "http://exa mple.com",
+    "http://127.0.0.1/x", "http://127.9.9.9/x", "http://0.0.0.0/",
+    "http://169.254.169.254/latest/meta-data", "http://169.254.1.1/",
+    "http://224.0.0.1/", "http://240.0.0.1/", "http://10.0.0.5/", "http://172.16.0.1/",
+    "http://192.168.1.1/", "http://localhost/admin", "http://localhost.localdomain/",
+    "http://93.184.216.34/", "http://[::1]/", "http://EXAMPLE.com/Path",
+    "http://example.com:80/a", "https://example.com:443/a", "http://example.com:8080/a",
+    "http://example.com/a#frag", "http://example.com/a?b=2&a=1", "http://example.com",
+    "http://8.8.8.8", "http://1.1.1.1", "http://172.15.0.1", "http://172.32.0.1",
+    "HTTP://Example.COM:80/a/b?z=1&y=&x=a%20b#top", "https://Sub.Example.com/?",
+    "http://example.com/a%2Fb/../c?q=%7E", "http://example.com:0080/x",
+]
+
+
+def test_canonicalize_is_idempotent():
+    """The streaming frontier writes canonical urls and never
+    canonicalizes them again, which is sound only if a canonical url is
+    its own canonical form."""
+    valid = [c for c in map(canonicalize_url, BATTERY) if c.valid]
+    assert len(valid) >= 20
+    for c in valid:
+        assert canonicalize_url(c.url) == c, c

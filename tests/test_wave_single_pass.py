@@ -185,6 +185,8 @@ def test_wave_probes_only_discovered_links_and_frontier_stays_disjoint(
 
 
 def test_reinit_drops_seeds_already_seen(spark, tmp_path):
+    """Re-init keeps the live frontier, adds only unseen seeds, and
+    commits no second empty seen snapshot."""
     eng = _engine(spark, str(tmp_path / "wh"))
     with eng:
         eng.init(SEEDS)
@@ -194,9 +196,12 @@ def test_reinit_drops_seeds_already_seen(spark, tmp_path):
         canon = {canonicalize_url(s).url for s in seeds}
         assert {canonicalize_url(s).url for s in SEEDS} <= seen
         assert canon - seen
+        live = {r.url for r in eng.wh.read(spark, "frontier").collect()}
+        n_seen_snaps = len(eng.wh.snapshots("seen"))
         eng.init(seeds)
         frontier = {r.url for r in eng.wh.read(spark, "frontier").collect()}
-        assert frontier == canon - seen
+        assert frontier == live | (canon - seen)
+        assert len(eng.wh.snapshots("seen")) == n_seen_snaps
 
 
 def test_metrics_marker_schema_is_the_inferred_one(spark):
