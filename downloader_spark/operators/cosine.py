@@ -4,7 +4,8 @@ embedding similarity and embedding dedup path.
 - ``fold_norms`` / ``fold_dots`` / ``cosines``: the single exact
   per-dimension fold (see the exactness contract below).
 - ``topk_superset`` + ``topk_tail``: per-query top-k over a candidate
-  scan — cosine_topk and the IVF, tree and LSH probes.
+  scan — cosine_topk, the LSH probe and every IVF probe (flat and
+  tree, float and quantized, both passes of a quantized rerank).
 - ``threshold_edges``: every within-group pair at or above a cosine
   threshold — semantic_dedup (grouped by cluster) and
   embedding_near_dups (grouped by LSH bucket, or one group for the
@@ -17,7 +18,7 @@ survivors leave the Python worker.
 
 Exactness contract (the oracle hashes pin every output bit):
 - dot/norm are the SAME IEEE-754 double sequence as Spark's
-  ``aggregate(zip_with(a, b, x*y), 0.0, acc + v)`` fold (similarity._dot
+  ``aggregate(zip_with(a, b, x*y), 0.0, acc + v)`` fold (semdedup._dot
   / _norm): a Python loop over dimensions doing elementwise
   acc = acc + (a_d * b_d). numpy elementwise ops are single
   correctly-rounded IEEE ops, so the result is bit-identical to the
@@ -30,7 +31,9 @@ Exactness contract (the oracle hashes pin every output bit):
   the batch top-k under THAT order, any y ranked above x has
   round(y) >= round(x), hence raw y > raw x - 1.5 quanta, so x is never
   cut by the margin — the union of batch supersets contains the global
-  top-k, and the F.round + per_key_topk tail ranks it exactly.
+  top-k, and the F.round + per_key_topk tail ranks it exactly. With
+  ``round_to=None`` (a quantized probe's survivor pass) the order is
+  (raw sim DESC, cand_id): the margin is 0 and the tail does not round.
 - threshold: the kernel keeps every pair with raw cosine
   >= threshold - 0.5·quantum - 1e-9, a superset of the pairs whose
   Spark ``round(cosine, round_to) >= threshold`` (HALF_UP rounding can
@@ -104,7 +107,7 @@ def topk_superset(
     cand: DataFrame,
     queries: DataFrame,
     k: int,
-    round_to: int = 6,
+    round_to: int | None = 6,
     extra_cols: tuple = (),
     mask_fn=None,
     q_collected=None,
@@ -119,7 +122,7 @@ def topk_superset(
     membership, LSH bucket match); cand_id == query_id and non-finite
     cosines are always excluded. ``q_collected`` is (qids, Q) when the
     caller already collected the query batch — mask columns follow Q's
-    row order."""
+    row order. ``round_to=None`` ranks by the raw cosine (margin 0)."""
     qids, Q = (
         q_collected if q_collected is not None
         else collect_query_matrix(queries)
@@ -137,7 +140,7 @@ def topk_superset(
     qn = fold_norms(Q)
     nq = len(qids)
     qid_arr = np.asarray(qids)
-    margin = 2.5 * (10.0 ** (-round_to))
+    margin = 0.0 if round_to is None else 2.5 * (10.0 ** (-round_to))
 
     def gen(batches):
         for pdf in batches:
@@ -179,14 +182,16 @@ def topk_superset(
     return spread(src, "cand_id").mapInPandas(gen, schema)
 
 
-def topk_tail(superset: DataFrame, k: int, round_to: int) -> DataFrame:
+def topk_tail(superset: DataFrame, k: int, round_to: int | None) -> DataFrame:
     """F.round + per-query window rank over the kernel superset:
-    (query_id, cand_id, cosine, rnk)."""
+    (query_id, cand_id, cosine, rnk); ``round_to=None`` ranks the raw
+    cosine."""
     from .topk import per_key_topk
 
-    scored = superset.select(
-        "query_id", "cand_id", F.round(F.col("cosine"), round_to).alias("cosine")
-    )
+    cosine = F.col("cosine")
+    if round_to is not None:
+        cosine = F.round(cosine, round_to).alias("cosine")
+    scored = superset.select("query_id", "cand_id", cosine)
     return per_key_topk(
         scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
     ).select("query_id", "cand_id", "cosine", "rnk")

@@ -47,13 +47,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cosine import threshold_edges
-from .similarity import _dot, _norm
 
 MICRO = 1_000_000
 
 DEFAULT_EMB_CORPUS = os.environ.get(
     "SPARK_GRAFT_EMB_CORPUS", "/root/testdata/sf0.001/embeddings.parquet"
 )
+
+
+# Spark-side (higher-order-function) dot and norm, the JVM form of
+# cosine.fold_dots/fold_norms. Only the cosine-to-centroid column uses
+# them: it scores one row against one vector, with no pair table to
+# avoid.
+def _dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _norm(a):
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+    )
 
 
 def quantize_centroids(centroids: list[list[float]]) -> list[list[int]]:

@@ -5,8 +5,9 @@
   the candidate scan (operators/cosine.py), so the candidate table is
   the only big input and no (candidate × query) pair table is built.
 - ``ivf_topk`` / ``ivf2_topk``: inverted-file and two-level tree
-  probes; float indexes score through the same kernel with a
-  probe-membership mask, quantized indexes through _rank_tail.
+  probes; every index, float or quantized (SQ8/PQ), scores through
+  the same kernel with a probe-membership mask (_kernel_probe), and a
+  quantized rerank is a second kernel pass over the survivors.
 - ``lsh_topk``: random-hyperplane LSH — only same-bucket pairs are
   admissible (a bucket-match mask on the same kernel).
 - ``embedding_near_dups``: all pairs at or above a cosine threshold,
@@ -24,28 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cosine import collect_query_matrix, threshold_edges, topk_superset, topk_tail
-
-
-# Spark-side (higher-order-function) dot and norm, the JVM form of
-# cosine.fold_dots/fold_norms. Only the quantized rerank (_rank_tail)
-# and semdedup's cosine-to-centroid column use them: both score one
-# row against one vector, with no pair table to avoid.
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 def cosine_topk(
@@ -165,10 +144,10 @@ def embedding_near_dups(
     return edges.dropDuplicates(["id_a", "id_b"]) if n_tables > 1 else edges
 
 
-def make_nearest_centroids_udf(centroids: list[list[float]], n: int = 1):
+def make_nearest_centroids_udf(centroids: list[list[float]]):
     """Factory: Arrow-batched pandas UDF mapping an ``array<float>``
-    column to the ``array<int>`` of its n nearest centroid indices by
-    squared L2 (nearest first, ties by index). The centroid matrix is
+    column to the one-element ``array<int>`` holding its nearest
+    centroid index by squared L2 (ties by index). The centroid matrix is
     captured in the closure (k×dim doubles, shipped once per task like
     a broadcast) and each Arrow batch is ONE numpy matmul:
     d²(v,c) = |c|² − 2·v·c (+|v|², constant per row, dropped) — so k
@@ -181,7 +160,6 @@ def make_nearest_centroids_udf(centroids: list[list[float]], n: int = 1):
 
     C = np.asarray(centroids, dtype=np.float64)  # k × dim
     cn = (C * C).sum(axis=1)  # |c|² per centroid
-    n = min(n, len(centroids))
 
     @pandas_udf(ArrayType(IntegerType()))
     def nearest(v: pd.Series) -> pd.Series:
@@ -189,11 +167,7 @@ def make_nearest_centroids_udf(centroids: list[list[float]], n: int = 1):
             return pd.Series([], dtype=object)
         M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
         d = cn[None, :] - 2.0 * (M @ C.T)
-        if n == 1:
-            idx = d.argmin(axis=1)[:, None]
-        else:
-            idx = np.argsort(d, axis=1, kind="stable")[:, :n]
-        return pd.Series([r.astype("int32").tolist() for r in idx])
+        return pd.Series([[int(i)] for i in d.argmin(axis=1)])
 
     return nearest
 
@@ -238,7 +212,7 @@ def kmeans_centroids(
         raise ValueError("kmeans_centroids: empty input (after sampling)")
     k = len(centroids)  # inputs smaller than k yield fewer centroids
     for _ in range(iters):
-        assign = make_nearest_centroids_udf(centroids, 1)
+        assign = make_nearest_centroids_udf(centroids)
         assigned = vecs.withColumn("_c", assign(F.col("_v"))[0])
         means = (
             assigned.select("_c", F.posexplode("_v").alias("_p", "_x"))
@@ -352,8 +326,8 @@ def sq8_decode_py(codes, params: dict) -> list[float]:
 # gets its own ks-centroid codebook; a vector stores m ONE-BYTE codes
 # (m bytes total vs dim bytes for SQ8 vs 8·dim for floats — dim/m ×
 # smaller again). Probes score nearest-codeword reconstructions and
-# re-rank survivors at full precision (the same _rank_tail refine step
-# as SQ8). The per-subspace codebooks are fitted DISTRIBUTED: one
+# re-rank survivors at full precision (the same refine step as SQ8).
+# The per-subspace codebooks are fitted DISTRIBUTED: one
 # explode into (subspace, subvector) rows, then the same grouped-Lloyd
 # job kmeans_tree uses per coarse cell — all m codebooks train together
 # in one Spark job per iteration, never a driver loop of m fits.
@@ -422,7 +396,7 @@ def fit_pq(
         for r in sorted(init, key=lambda r: (r["_c"], r["_r"])):
             subs.setdefault(int(r["_c"]), []).append(list(r["_v"]))
         for _ in range(iters):
-            sub_assign = make_nearest_sub_udf(subs, 1)
+            sub_assign = make_nearest_sub_udf(subs)
             assigned = subrows.withColumn(
                 "_s", sub_assign(F.col("_c"), F.col("_v"))[0]
             )
@@ -604,11 +578,10 @@ def build_ivf_index(
     table) for exact final ranking.
 
     - ``path`` given: the assigned table is written to parquet
-      PARTITIONED BY the list id ``_c`` and re-read, so a probe that
-      filters/joins on ``_c`` prunes non-probed list files entirely
-      (dynamic partition pruning at cluster scale — the same
-      store-once/read-many pattern as sources/bucketed.py for the fetch
-      join). This is the persistable 100 TB index.
+      PARTITIONED BY the list id ``_c`` and re-read; a probe filters
+      ``_c`` on its driver-side probe lists, so non-probed list files
+      are never read (static partition pruning). This is the
+      persistable 100 TB index.
     - no ``path``: the assigned table is cached in memory
       (``persist=False`` for one-shot wrappers that must not leak
       executor cache).
@@ -617,7 +590,7 @@ def build_ivf_index(
         embeddings, vec_col, k=n_centroids, iters=iters, id_col=id_col,
         sample_frac=sample_frac,
     )
-    assign = make_nearest_centroids_udf(centroids, 1)
+    assign = make_nearest_centroids_udf(centroids)
     assigned = embeddings.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
     ).withColumn("_c", assign(F.col("cvec"))[0])
@@ -690,6 +663,90 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
     )
 
 
+def _kernel_probe(
+    index,
+    queries: DataFrame,
+    vec_col: str,
+    k: int,
+    round_to: int,
+    probe_lists,
+    n_lists: int,
+    pq: dict | None,
+    rerank_from: DataFrame | None,
+    rerank_id_col: str,
+    rerank_factor: int,
+) -> DataFrame:
+    """The one probe of every IVF index, flat or tree, float or
+    quantized. ``probe_lists(Q)`` maps the collected query matrix to
+    one list of probed list ids per query (driver-side); a stored index
+    is pre-filtered on its ``_c`` PARTITION column (static pruning —
+    only probed lists' files are read), a quantized payload is decoded
+    to ``cvec``, and each candidate batch of the Arrow kernel scores
+    only the queries probing its list.
+
+    A quantized index with ``rerank_from`` is the FAISS refine step in
+    two kernel passes: the first keeps each query's k·rerank_factor
+    survivors by raw reconstruction cosine (then cand_id) and collects
+    them (n_queries × k·factor rows); the second scores only the
+    survivors' full-precision ``rerank_from`` vectors, each against the
+    queries it survived for."""
+    import numpy as np
+
+    qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
+    qids, Q = collect_query_matrix(qry)
+    lists = probe_lists(Q) if len(Q) else []
+    probe_bool = np.zeros((len(lists), max(n_lists, 1)), dtype=bool)
+    for j, row in enumerate(lists):
+        probe_bool[j, row] = True
+    cand = index.assigned
+    probed = sorted({int(c) for row in lists for c in row})
+    if index.path is not None and len(probed) < n_lists:
+        cand = cand.filter(F.col("_c").isin(probed))
+    if index.sq8 is not None:
+        cand = cand.withColumn(
+            "cvec", sq8_decode_col(F.col("ccode"), index.sq8)
+        ).drop("ccode")
+    elif pq is not None:
+        cand = cand.withColumn(
+            "cvec", make_pq_decode_udf(pq)(F.col("ccode"))
+        ).drop("ccode")
+
+    def mask_fn(pdf, C):
+        return probe_bool[:, pdf["_c"].to_numpy()].T
+
+    quantized = index.sq8 is not None or pq is not None
+    if not quantized or rerank_from is None:
+        superset = topk_superset(
+            cand, qry, k, round_to, extra_cols=("_c",), mask_fn=mask_fn,
+            q_collected=(qids, Q),
+        )
+        return topk_tail(superset, k, round_to)
+
+    n_surv = k * rerank_factor
+    raw = topk_superset(
+        cand, qry, n_surv, None, extra_cols=("_c",), mask_fn=mask_fn,
+        q_collected=(qids, Q),
+    )
+    col = {q: j for j, q in enumerate(qids)}
+    survived: dict = {}
+    for q, c in topk_tail(raw, n_surv, None).select("query_id", "cand_id").collect():
+        survived.setdefault(c, []).append(col[q])
+    full = rerank_from.select(
+        F.col(rerank_id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
+    ).filter(F.col("cand_id").isin(list(survived)))
+
+    def survivor_fn(pdf, C):
+        m = np.zeros((len(pdf), len(qids)), dtype=bool)
+        for i, c in enumerate(pdf["cand_id"]):
+            m[i, survived[c]] = True
+        return m
+
+    superset = topk_superset(
+        full, qry, k, round_to, mask_fn=survivor_fn, q_collected=(qids, Q)
+    )
+    return topk_tail(superset, k, round_to)
+
+
 def ivf_probe(
     index: IVFIndex,
     queries: DataFrame,
@@ -702,168 +759,34 @@ def ivf_probe(
     rerank_factor: int = 4,
 ) -> DataFrame:
     """Probe a built index: each query scores only its nprobe nearest
-    inverted lists. The join key is the list id ``_c`` — against a
-    ``path``-stored index the probe side drives partition pruning, so
-    non-probed lists are never read; with nprobe == n_centroids every
-    list is probed and the result is EXACTLY the brute-force top-k (the
-    DuckDB-oracle-able configuration proving the lists partition the
-    candidate set losslessly).
+    inverted lists, chosen driver-side by the |c|² − 2·q·c centroid
+    distance (ties by list id). Against a ``path``-stored index only
+    the probed lists' partition files are read; with nprobe ==
+    n_centroids every list is probed and the result is EXACTLY the
+    brute-force top-k (the DuckDB-oracle-able configuration proving the
+    lists partition the candidate set losslessly).
 
-    Against a quantized index (``index.sq8``), candidates are scored on
-    the affine SQ8 reconstruction. Pass ``rerank_from`` (the
-    full-precision (id, vec) table — at scale, the base corpus) to
-    RE-RANK each query's top k·rerank_factor reconstruction-scored
-    survivors exactly: the survivor set is tiny (n_queries × k·factor)
-    and broadcasts into the id join, so full-precision vectors are
-    touched only for survivors (FAISS SQ8 refine step).
+    Against a quantized index (``index.sq8`` or ``index.pq``),
+    candidates are scored on the decoded reconstruction. Pass
+    ``rerank_from`` (the full-precision (id, vec) table — at scale, the
+    base corpus) to RE-RANK each query's top k·rerank_factor
+    reconstruction-scored survivors exactly: full-precision vectors are
+    scored only for survivors (FAISS SQ8 refine step). Every pass is
+    the Arrow scoring kernel (see _kernel_probe); no pair table is
+    built."""
+    import numpy as np
 
-    Float (non-quantized) probes run the Arrow scoring kernel (r7):
-    probe lists are derived driver-side with the same numpy expression
-    the probe UDF used, a stored index is pre-filtered natively on the
-    ``_c`` PARTITION column (static pruning — only probed lists' files
-    are read), and each candidate batch scores only the queries probing
-    its list. The list join, the pair table and its window shuffle are
-    gone; the round + rank tail is unchanged."""
-    if not index.quantized:
-        import numpy as np
-
-        qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = collect_query_matrix(qry)
-        C = np.asarray(index.centroids, dtype=np.float64)
-        cn = (C * C).sum(axis=1)
-        n_lists = len(index.centroids)
-        n_probe = min(nprobe, n_lists)
-        lists = (
-            np.argsort(
-                cn[None, :] - 2.0 * (Q @ C.T), axis=1, kind="stable"
-            )[:, :n_probe]
-            if len(Q)
-            else np.zeros((0, n_probe), dtype=np.int64)
-        )
-        probe_bool = np.zeros((len(Q), n_lists), dtype=bool)
-        for j, row in enumerate(lists):
-            probe_bool[j, row] = True
-        cand = index.assigned
-        if index.path is not None and n_probe < n_lists:
-            probed = sorted({int(c) for row in lists for c in row})
-            cand = cand.filter(F.col("_c").isin(probed))
-
-        def mask_fn(pdf, C):
-            return probe_bool[:, pdf["_c"].to_numpy()].T
-
-        superset = topk_superset(
-            cand, qry, k, round_to, extra_cols=("_c",), mask_fn=mask_fn,
-            q_collected=(qids, Q),
-        )
-        return topk_tail(superset, k, round_to)
-
-    probe = make_nearest_centroids_udf(index.centroids, nprobe)
-    qry = queries.select(
-        "query_id", F.col(vec_col).alias("qvec")
-    ).withColumn("_probe", F.explode(probe(F.col("qvec"))))
-    cand = index.assigned
-    if index.sq8 is not None:
-        cand = cand.withColumn(
-            "cvec", sq8_decode_col(F.col("ccode"), index.sq8)
-        ).drop("ccode")
-    elif index.pq is not None:
-        cand = cand.withColumn(
-            "cvec", make_pq_decode_udf(index.pq)(F.col("ccode"))
-        ).drop("ccode")
-    # in-memory index: the join key _c is a UDF expression, and the
-    # plain == key makes Catalyst infer isnotnull(_c) — an inlined
-    # constraint that gets extracted as a SECOND ArrowEvalPython over
-    # the whole candidate table (assignment would run 2×). eqNullSafe
-    # infers no constraint (still a hash-join key; _c is never null).
-    # Stored index: _c is a parquet PARTITION column — plain equality
-    # keeps the probe eligible for dynamic partition pruning.
-    if index.path is not None:
-        cond = cand["_c"] == qry["_probe"]
-    else:
-        cond = cand["_c"].eqNullSafe(qry["_probe"])
-    paired = cand.join(qry, cond).filter(
-        F.col("cand_id") != F.col("query_id")
+    C = np.asarray(index.centroids, dtype=np.float64)
+    cn = (C * C).sum(axis=1)
+    n_lists = len(index.centroids)
+    n_probe = min(nprobe, n_lists)
+    return _kernel_probe(
+        index, queries, vec_col, k, round_to,
+        lambda Q: np.argsort(
+            cn[None, :] - 2.0 * (Q @ C.T), axis=1, kind="stable"
+        )[:, :n_probe],
+        n_lists, index.pq, rerank_from, rerank_id_col, rerank_factor,
     )
-    return _rank_tail(
-        paired, queries, vec_col, k, round_to,
-        quantized=index.quantized,
-        rerank_from=rerank_from, rerank_id_col=rerank_id_col,
-        rerank_factor=rerank_factor,
-    )
-
-
-def _rank_tail(
-    paired: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    k: int,
-    round_to: int,
-    quantized: bool,
-    rerank_from: DataFrame | None,
-    rerank_id_col: str,
-    rerank_factor: int,
-) -> DataFrame:
-    """Shared score/rank tail of every IVF probe (flat and tree):
-    cosine over the (possibly reconstructed) candidate vectors, then —
-    for a quantized index with ``rerank_from`` — the FAISS refine step:
-    keep k·factor survivors per query on the approximate score and
-    re-rank ONLY them against full precision (the survivor set is
-    n_queries × k·factor rows and broadcasts into the id join).
-    cosine.py's degenerate rule holds on both passes: a pair whose
-    cosine is not finite (zero-norm or NaN vector) is never a
-    neighbour."""
-    from .topk import per_key_topk
-
-    def cosine(a: str, b: str):
-        # try_divide: a zero norm gives null instead of ANSI DIVIDE_BY_ZERO
-        return F.try_divide(_dot(F.col(a), F.col(b)), _norm(F.col(a)) * _norm(F.col(b)))
-
-    def finite(c: str):
-        # Spark orders NaN above +inf, and null compares to null
-        return F.abs(F.col(c)) < F.lit(float("inf"))
-
-    paired = paired.select(
-        "query_id", "cand_id", cosine("cvec", "qvec").alias("_sim")
-    ).filter(finite("_sim"))
-
-    if quantized and rerank_from is not None:
-        # approximate pass keeps k·factor survivors per query at full
-        # float precision (rounding here would merge near-ties the
-        # exact pass must separate)
-        surv = per_key_topk(
-            paired,
-            ["query_id"],
-            [F.desc("_sim"), F.asc("cand_id")],
-            k=k * rerank_factor,
-        ).select("query_id", "cand_id")
-        exact = (
-            rerank_from.select(
-                F.col(rerank_id_col).alias("cand_id"),
-                F.col(vec_col).alias("_fvec"),
-            )
-            .join(F.broadcast(surv), ["cand_id"])
-            .join(
-                F.broadcast(
-                    queries.select("query_id", F.col(vec_col).alias("qvec"))
-                ),
-                ["query_id"],
-            )
-        )
-        scored = (
-            exact.select("query_id", "cand_id", cosine("_fvec", "qvec").alias("_sim"))
-            .filter(finite("_sim"))
-            .select("query_id", "cand_id", F.round("_sim", round_to).alias("cosine"))
-        )
-        return per_key_topk(
-            scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
-        ).select("query_id", "cand_id", "cosine", "rnk")
-
-    scored = paired.select(
-        "query_id", "cand_id", F.round("_sim", round_to).alias("cosine")
-    )
-    return per_key_topk(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
-    ).select("query_id", "cand_id", "cosine", "rnk")
 
 
 def ivf_topk(
@@ -893,10 +816,10 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def make_nearest_sub_udf(subs: dict[int, list[list[float]]], n: int = 1):
+def make_nearest_sub_udf(subs: dict[int, list[list[float]]]):
     """Factory: pandas UDF mapping (coarse cell id, vector) to the
-    ``array<int>`` of the n nearest SUB-centroid indices within that
-    cell. The per-cell matrices live in the closure; each Arrow batch
+    one-element ``array<int>`` holding its nearest SUB-centroid index
+    within that cell (ties by index). The per-cell matrices live in the closure; each Arrow batch
     groups rows by cell and does one matmul per distinct cell — the
     same vectorization as make_nearest_centroids_udf, per cell."""
     import numpy as np
@@ -917,10 +840,8 @@ def make_nearest_sub_udf(subs: dict[int, list[list[float]]], n: int = 1):
             C, cn = mats[int(c)], norms[int(c)]
             rows = grp.values
             d = cn[None, :] - 2.0 * (M[rows] @ C.T)
-            nn = min(n, C.shape[0])
-            idx = np.argsort(d, axis=1, kind="stable")[:, :nn]
-            for r, ids in zip(rows, idx):
-                out[r] = ids.astype("int32").tolist()
+            for r, i in zip(rows, d.argmin(axis=1)):
+                out[r] = [int(i)]
         return pd.Series(out)
 
     return nearest
@@ -968,7 +889,7 @@ def kmeans_tree(
             F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(m))
             < int(sample_frac * m)
         )
-    assign = make_nearest_centroids_udf(coarse, 1)
+    assign = make_nearest_centroids_udf(coarse)
     # the coarse centroids never change below, so the sampled
     # assignment frame is computed ONCE and cached: without the persist
     # the init collect plus every Lloyd iteration would re-run the
@@ -993,7 +914,7 @@ def kmeans_tree(
         for c in range(n_coarse):  # sample-empty cell: coarse centroid stands in
             subs.setdefault(c, [list(coarse[c])])
         for _ in range(iters):
-            sub_assign = make_nearest_sub_udf(subs, 1)
+            sub_assign = make_nearest_sub_udf(subs)
             assigned = av.withColumn(
                 "_s", sub_assign(F.col("_c"), F.col("_v"))[0]
             )
@@ -1025,9 +946,9 @@ def kmeans_tree(
 class IVF2Index:
     """A built two-level IVF index: coarse centroids + per-cell
     sub-centroids (driver-side) and the assigned candidate table
-    (cand_id, cvec, _c) where ``_c = cell * n_sub + sub`` — the same
-    single-column list id the flat index uses, so the stored layout
-    (parquet partitioned by _c) and the probe join are identical."""
+    (cand_id, cvec | ccode, _c) where ``_c = cell * n_sub + sub`` — the
+    same single-column list id the flat index uses, so the stored
+    layout (parquet partitioned by _c) and the probe are identical."""
 
     def __init__(
         self,
@@ -1084,8 +1005,8 @@ def build_ivf2_index(
         embeddings, vec_col, n_coarse=n_coarse, n_sub=n_sub, iters=iters,
         id_col=id_col, sample_frac=sample_frac,
     )
-    c_assign = make_nearest_centroids_udf(coarse, 1)
-    s_assign = make_nearest_sub_udf(subs, 1)
+    c_assign = make_nearest_centroids_udf(coarse)
+    s_assign = make_nearest_sub_udf(subs)
     assigned = (
         embeddings.select(
             F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
@@ -1152,38 +1073,13 @@ def load_ivf2_index(spark, path: str) -> IVF2Index:
     )
 
 
-def make_tree_probe_udf(
-    coarse: list[list[float]],
-    subs: dict[int, list[list[float]]],
-    n_sub: int,
-    wprobe: int,
-    nprobe: int,
-):
-    """Factory: pandas UDF mapping a query vector to the ``array<int>``
-    of list ids to probe — the wprobe nearest coarse cells are opened,
-    all their sub-centroids scored, and the nprobe globally nearest
-    lists returned (ties by list id: deterministic). Per query this is
-    n_coarse + wprobe·n_sub distances, the tree's whole point."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series(
-            _tree_probe_rows(M, coarse, subs, n_sub, wprobe, nprobe)
-        )
-
-    return probe
-
-
 def _tree_probe_rows(M, coarse, subs, n_sub, wprobe, nprobe):
-    """Probe-list derivation shared by the tree-probe UDF and the
-    driver-side kernel path — one list of probed list ids per row of
-    the float64 query matrix ``M`` (same expressions either way)."""
+    """Tree probe lists, driver-side: one list of probed list ids per
+    row of the float64 query matrix ``M`` — the wprobe nearest coarse
+    cells are opened, all their sub-centroids scored, and the nprobe
+    globally nearest lists kept (ties by list id: deterministic). Per
+    query this is n_coarse + wprobe·n_sub distances, the tree's whole
+    point."""
     import numpy as np
 
     C = np.asarray(coarse, dtype=np.float64)
@@ -1219,70 +1115,21 @@ def ivf2_probe(
     rerank_id_col: str = "vec_id",
     rerank_factor: int = 4,
 ) -> DataFrame:
-    """Probe a two-level index — identical join/score/rank tail to
-    ivf_probe (the list id column is the same shape), only the probe
-    list derivation goes through the tree. With wprobe == n_coarse and
-    nprobe ≥ total lists the result EQUALS brute force (each candidate
-    lives in exactly one list), which is the oracle configuration.
-    Against a quantized tree (``index.sq8``), pass ``rerank_from`` for
-    the exact FAISS refine step (see _rank_tail).
-
-    Float probes run the Arrow scoring kernel (r7, same contract as
-    ivf_probe): tree probe lists derived driver-side via the shared
-    _tree_probe_rows, stored indexes pre-filtered on the ``_c``
-    partition column, per-batch top-k supersets instead of the pair
-    join + full window shuffle."""
-    if index.sq8 is None:
-        import numpy as np
-
-        qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = collect_query_matrix(qry)
-        lists = _tree_probe_rows(
+    """Probe a two-level index — the same kernel probe as ivf_probe
+    (the list id column is the same shape), only the probe list
+    derivation goes through the tree (_tree_probe_rows). With wprobe ==
+    n_coarse and nprobe ≥ total lists the result EQUALS brute force
+    (each candidate lives in exactly one list), which is the oracle
+    configuration. Against a quantized tree (``index.sq8``), pass
+    ``rerank_from`` for the exact FAISS refine step (see
+    _kernel_probe)."""
+    return _kernel_probe(
+        index, queries, vec_col, k, round_to,
+        lambda Q: _tree_probe_rows(
             Q, index.coarse, index.subs, index.n_sub, wprobe, nprobe
-        ) if len(Q) else []
-        n_lists = len(index.coarse) * index.n_sub
-        probe_bool = np.zeros((len(lists), max(n_lists, 1)), dtype=bool)
-        for j, row in enumerate(lists):
-            probe_bool[j, row] = True
-        cand = index.assigned
-        probed = sorted({int(c) for row in lists for c in row})
-        if index.path is not None and len(probed) < n_lists:
-            cand = cand.filter(F.col("_c").isin(probed))
-
-        def mask_fn(pdf, C):
-            return probe_bool[:, pdf["_c"].to_numpy()].T
-
-        superset = topk_superset(
-            cand, qry, k, round_to, extra_cols=("_c",), mask_fn=mask_fn,
-            q_collected=(qids, Q),
-        )
-        return topk_tail(superset, k, round_to)
-
-    probe = make_tree_probe_udf(
-        index.coarse, index.subs, index.n_sub, wprobe, nprobe
-    )
-    qry = queries.select(
-        "query_id", F.col(vec_col).alias("qvec")
-    ).withColumn("_probe", F.explode(probe(F.col("qvec"))))
-    cand = index.assigned
-    if index.sq8 is not None:
-        cand = cand.withColumn(
-            "cvec", sq8_decode_col(F.col("ccode"), index.sq8)
-        ).drop("ccode")
-    # same constraint nuance as ivf_probe: eqNullSafe for the in-memory
-    # index (plain == would re-run the assignment UDF as an extracted
-    # isnotnull constraint); plain equality for the stored index so the
-    # probe stays eligible for dynamic partition pruning
-    if index.path is not None:
-        cond = cand["_c"] == qry["_probe"]
-    else:
-        cond = cand["_c"].eqNullSafe(qry["_probe"])
-    paired = cand.join(qry, cond).filter(F.col("cand_id") != F.col("query_id"))
-    return _rank_tail(
-        paired, queries, vec_col, k, round_to,
-        quantized=index.sq8 is not None,
-        rerank_from=rerank_from, rerank_id_col=rerank_id_col,
-        rerank_factor=rerank_factor,
+        ),
+        len(index.coarse) * index.n_sub, None,
+        rerank_from, rerank_id_col, rerank_factor,
     )
 
 

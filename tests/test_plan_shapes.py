@@ -25,6 +25,26 @@ def explain_str(df):
     return buf.getvalue()
 
 
+def _kernel_passes(monkeypatch, probe):
+    """Run ``probe()`` and return (its plan, the plans of the top-k
+    kernel passes it built). A quantized rerank collects its survivor
+    pass before it returns, so that pass is not in the returned plan."""
+    from downloader_spark.operators import similarity
+
+    built = []
+    real = similarity.topk_superset
+
+    def recording(*args, **kwargs):
+        df = real(*args, **kwargs)
+        built.append(df)
+        return df
+
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "topk_superset", recording)
+        out = probe()
+    return explain_str(out), [explain_str(df) for df in built]
+
+
 def test_filter_pushdown_and_pruning(spark):
     from downloader_spark.queries import Q
 
@@ -91,19 +111,26 @@ def test_fanout_single_arrow_eval(spark):
     assert "Generate" in plan  # the format explode
 
 
-def test_ivf_probe_is_kernel_scored_no_pair_join(spark):
-    """The r7 float IVF probe: candidates are scored inside ONE
-    mapInPandas kernel (per-batch top-k supersets), so the plan has NO
-    pair join at all — no HashJoin carrying vector payloads, no
-    nested-loop, no row-at-a-time Python. The only other Python node is
-    the Arrow-batched centroid-assignment UDF on the candidate side
-    (exactly one — the kernel reads `_c` without a join, so the old
-    eqNullSafe double-eval hazard is structurally gone)."""
+def test_ivf_probe_is_kernel_scored_no_pair_join(spark, monkeypatch):
+    """Every IVF probe, float or quantized, flat or tree: candidates are
+    scored inside ONE mapInPandas kernel per pass (per-batch top-k
+    supersets), so no plan has a pair join at all — no HashJoin
+    carrying vector payloads, no nested-loop, no row-at-a-time Python.
+    The only other Python nodes are the Arrow-batched assignment (and
+    PQ decode) UDFs on the candidate side: the query batch is collected
+    to the driver, so no plan reads the query side. A quantized rerank
+    is a second kernel pass over the survivors."""
     import re
 
     from pyspark.sql import functions as F
 
-    from downloader_spark.operators.similarity import ivf_topk
+    from downloader_spark.operators.similarity import (
+        build_ivf2_index,
+        build_ivf_index,
+        ivf2_probe,
+        ivf_probe,
+        ivf_topk,
+    )
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     qry = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -114,6 +141,37 @@ def test_ivf_probe_is_kernel_scored_no_pair_join(spark):
     assert "BatchEvalPython" not in plan
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+
+    pq = build_ivf_index(
+        emb, n_centroids=4, iters=1, persist=False, quantize="pq",
+        pq_m=8, pq_ks=16,
+    )
+    tree = build_ivf2_index(
+        emb, n_coarse=2, n_sub=2, iters=1, persist=False, quantize="sq8"
+    )
+    for name, probe, n_passes in (
+        ("flat pq", lambda: ivf_probe(pq, qry, k=3, nprobe=2), 1),
+        ("flat pq rerank", lambda: ivf_probe(
+            pq, qry, k=3, nprobe=2, rerank_from=emb, rerank_factor=8
+        ), 2),
+        ("tree sq8", lambda: ivf2_probe(tree, qry, k=3, wprobe=1, nprobe=2), 1),
+        ("tree sq8 rerank", lambda: ivf2_probe(
+            tree, qry, k=3, wprobe=1, nprobe=2, rerank_from=emb
+        ), 2),
+    ):
+        plan, passes = _kernel_passes(monkeypatch, probe)
+        assert len(passes) == n_passes, name
+        for p in passes + [plan]:
+            assert "Join" not in p, name
+            assert "BatchEvalPython" not in p, name
+            assert len(re.findall(r"\(\d+\) MapInPandas", p)) == 1, name
+            # the query batch (vec_id % 100 == 0) is not in any plan,
+            # and no Python node reads query rows
+            assert "% 100" not in p, name
+            for inputs in re.findall(
+                r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: \[([^\]]*)\]", p
+            ):
+                assert "query_id" not in inputs, name
 
 
 def test_exact_near_dup_guard_means_lsh_default_no_nested_loop(spark):
@@ -178,16 +236,22 @@ def test_bucketed_pages_join_skips_pages_side_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS t_pages_bucketed")
 
 
-def test_stored_ivf_index_probe_prunes_partitions(spark, tmp_path):
+def test_stored_ivf_index_probe_prunes_partitions(spark, tmp_path, monkeypatch):
     """A path-stored IVF index is parquet PARTITIONED BY the inverted
     list id; a probe must only read the probed lists' files — at 100 TB
     this is what makes a probe O(probed lists), not O(index). r7: probe
     lists are derived driver-side, so the pruning is a STATIC partition
     filter on `_c` (stronger than the old dynamic pruning — resolved at
-    plan time, no subquery broadcast), and the scan must show it."""
+    plan time, no subquery broadcast), and the scan must show it — for
+    float and quantized indexes, flat and tree alike."""
     from pyspark.sql import functions as F
 
-    from downloader_spark.operators.similarity import build_ivf_index, ivf_probe
+    from downloader_spark.operators.similarity import (
+        build_ivf2_index,
+        build_ivf_index,
+        ivf2_probe,
+        ivf_probe,
+    )
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     qry = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -199,16 +263,26 @@ def test_stored_ivf_index_probe_prunes_partitions(spark, tmp_path):
     plan = explain_str(ivf_probe(index, qry, k=3, nprobe=2))
     import re
 
-    m = re.search(r"PartitionFilters: \[([^\]]*_c[^\]]*)\]", plan)
+    pruned = r"PartitionFilters: \[([^\]]*_c[^\]]*)\]"
+    m = re.search(pruned, plan)
     assert m, plan  # the _c IN (...) filter reached the partitioned scan
-    # and the quantized probe (old join path) keeps its dynamic pruning
-    # eligibility: the sq8 probe still joins on the partition column
+    # the quantized probes prune the same way: an SQ8 index's survivor
+    # pass (the one that scans the index) and a stored SQ8 tree
     sq8 = build_ivf_index(
         emb, n_centroids=16, iters=1, path=str(tmp_path / "ivf_sq8"),
         quantize="sq8",
     )
-    plan_q = explain_str(ivf_probe(sq8, qry, k=3, nprobe=2, rerank_from=emb))
-    assert "dynamicpruning" in plan_q.lower()
+    _, passes = _kernel_passes(
+        monkeypatch, lambda: ivf_probe(sq8, qry, k=3, nprobe=2, rerank_from=emb)
+    )
+    assert len(passes) == 2
+    assert re.search(pruned, passes[0]), passes[0]
+    tree = build_ivf2_index(
+        emb, n_coarse=4, n_sub=4, iters=1, path=str(tmp_path / "ivf2_sq8"),
+        quantize="sq8",
+    )
+    plan_t = explain_str(ivf2_probe(tree, qry, k=3, wprobe=2, nprobe=3))
+    assert re.search(pruned, plan_t), plan_t
 
 
 def test_round4_text_operators_stay_native(spark):

@@ -404,3 +404,80 @@ def test_sq8_rerank_skips_zero_vector(spark, emb, tmp_path):
         per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + 1
     assert set(per_query.values()) == {3}
     assert len(per_query) == qry.count() - 1
+
+
+# ---------------------------------------------------------------------------
+# Quantized probe outputs pinned: the sha256 of the sorted (query_id,
+# cand_id, cosine, rnk) rows of twelve configurations, captured when the
+# quantized probes still ran a pair join and a HOF-scored rerank. The
+# Arrow-kernel probe must reproduce them bit for bit.
+# ---------------------------------------------------------------------------
+
+_SQ8_PARTIAL = "2b9e4342d498e773f7ff8d8b61fbbba926919c5de057b9f5c5d5d12014359be6"
+_SQ8_PARTIAL_RR = "591109ccd4abd1883b824e2acbe37a131fb311109fbe3e2a85d6c9df8c4e0430"
+_SQ8_FULL = "317d1e9318618320b7623ac7b2698e00e885d29ebf3b604a4f3c771cc9a4f94b"
+_SQ8_FULL_RR = "7d757e6c35c1cf0d9593449353399ea5a76d0878964f8750b1a1fd62b17bd6aa"
+
+#: (index kind, stored, probe, rerank) -> sha256. A full tree probe
+#: scores every candidate on the same SQ8 codes as a full flat probe,
+#: so the two share their pins.
+QUANT_PINS = {
+    ("sq8", False, 3, False): _SQ8_PARTIAL,
+    ("sq8", False, 8, True): _SQ8_FULL_RR,
+    ("sq8", True, 3, True): _SQ8_PARTIAL_RR,
+    ("sq8", True, 8, False): _SQ8_FULL,
+    ("pq", False, 3, True): "d7385efe22950360fef57a1b690cdb07ec2df7cac58a3d964a60df957b7ffdbf",
+    ("pq", False, 8, False): "6af20853657294d1fd4db957b8852ea336220ccd18a3884f5cf691f2f9cfd6b2",
+    ("pq", True, 3, False): "4bc1fba885c93c43e2851e3852c40549b8e36b81f93f8eaddfd4a10feb404719",
+    ("pq", True, 8, True): "f2a54973bd6dec162a46f6262d456e917e2d2f2bffab7c78948ed0a694e14362",
+    ("tree", False, (2, 4), False): "d289d956fadb8da92da6312d944cc1c95e47053f9e69d4216b067975ea739e5f",
+    ("tree", False, (3, 9), True): _SQ8_FULL_RR,
+    ("tree", True, (2, 4), True): "31cdef2e1fa0629f99f5f5776d41f6f34128ce996854bbe432878b3474794395",
+    ("tree", True, (3, 9), False): _SQ8_FULL,
+}
+
+
+def test_quantized_probe_outputs_pinned(spark, emb, tmp_path):
+    """20 queries, k=5: flat SQ8 and PQ (m=16, ks=32) over 8 lists and
+    the SQ8 tree (3 cells × 3 subs), in-memory and stored, partial and
+    full probe, without and with the full-precision rerank (factor 4
+    for SQ8, 8 for PQ)."""
+    import hashlib
+
+    from downloader_spark.operators.similarity import build_ivf2_index, ivf2_probe
+
+    qry = emb.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = {}
+    for kind in ("sq8", "pq", "tree"):
+        for stored in (False, True):
+            path = str(tmp_path / f"{kind}_{int(stored)}") if stored else None
+            if kind == "tree":
+                index = build_ivf2_index(
+                    emb, n_coarse=3, n_sub=3, iters=2, path=path, quantize="sq8"
+                )
+            else:
+                extra = {"pq_m": 16, "pq_ks": 32} if kind == "pq" else {}
+                index = build_ivf_index(
+                    emb, n_centroids=8, iters=2, path=path, quantize=kind, **extra
+                )
+            for (k_, s_, probe, rerank) in QUANT_PINS:
+                if (k_, s_) != (kind, stored):
+                    continue
+                rr = {}
+                if rerank:
+                    rr = {"rerank_from": emb, "rerank_factor": 8 if kind == "pq" else 4}
+                if kind == "tree":
+                    df = ivf2_probe(
+                        index, qry, k=5, wprobe=probe[0], nprobe=probe[1], **rr
+                    )
+                else:
+                    df = ivf_probe(index, qry, k=5, nprobe=probe, **rr)
+                rows = sorted(tuple(r) for r in df.collect())
+                assert len(rows) == 100
+                got[(kind, stored, probe, rerank)] = hashlib.sha256(
+                    repr(rows).encode()
+                ).hexdigest()
+            index.close()
+    assert got == QUANT_PINS

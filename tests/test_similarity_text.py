@@ -632,6 +632,23 @@ def test_kernel_paths_handle_empty_query_batch(spark, vecs):
     assert ivf_probe(idx, empty_q, k=3, nprobe=2).count() == 0
     idx2 = build_ivf2_index(df, n_coarse=2, n_sub=2, iters=1, persist=False)
     assert ivf2_probe(idx2, empty_q, k=3, wprobe=2, nprobe=2).count() == 0
+    # quantized indexes, without and with the full-precision rerank
+    for quant in (
+        build_ivf_index(df, n_centroids=4, iters=1, persist=False, quantize="sq8"),
+        build_ivf_index(
+            df, n_centroids=4, iters=1, persist=False, quantize="pq",
+            pq_m=4, pq_ks=4,
+        ),
+    ):
+        assert ivf_probe(quant, empty_q, k=3, nprobe=2).count() == 0
+        assert ivf_probe(quant, empty_q, k=3, nprobe=2, rerank_from=df).count() == 0
+    tree = build_ivf2_index(
+        df, n_coarse=2, n_sub=2, iters=1, persist=False, quantize="sq8"
+    )
+    assert ivf2_probe(tree, empty_q, k=3, wprobe=2, nprobe=2).count() == 0
+    assert ivf2_probe(
+        tree, empty_q, k=3, wprobe=2, nprobe=2, rerank_from=df
+    ).count() == 0
 
 
 def test_cosine_topk_skips_degenerate_candidates(spark, vecs):
