@@ -54,6 +54,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .bpe import _words, norm_words_col
 from .sketch import md5_60bit
 
@@ -249,9 +250,7 @@ def score_quality(
     model = model or default_classifier()
     B = model["n_buckets"]
     spark = SparkSession.getActiveSession() or df.sparkSession
-    w_df = spark.createDataFrame(
-        sorted(model["w_micro"].items()), "bucket long, w long"
-    )
+    w_df = local_frame(spark, sorted(model["w_micro"].items()), "bucket long, w long")
     ws = F.col("_qw")
     base = df.select(id_col, norm_words_col(F.col(text_col)).alias("_qw"))
     tail = F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(0)))

@@ -53,6 +53,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .bpe import _words  # same normalization: lower, \s+ collapse, split
 
 DEFAULT_LM_CORPUS = os.environ.get(
@@ -217,13 +218,12 @@ def score_perplexity(
     the shuffle — only (id, lp) pairs do."""
     model = model or default_lm()
     spark = SparkSession.getActiveSession() or df.sparkSession
-    pair_df = spark.createDataFrame(
+    pair_df = local_frame(
+        spark,
         [(a, b, lp) for (a, b), lp in sorted(model["pair_lp"].items())],
         "a string, b string, lp_ab long",
     )
-    ctx_df = spark.createDataFrame(
-        sorted(model["ctx_lp"].items()), "a string, lp_a long"
-    )
+    ctx_df = local_frame(spark, sorted(model["ctx_lp"].items()), "a string, lp_a long")
     w = F.col("_lmw")
     base = df.select(id_col, _norm_words(F.col(text_col)).alias("_lmw"))
     bigrams = base.select(

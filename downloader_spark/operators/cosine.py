@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..session import spread
+from ..session import local_frame, spread
 
 #: threshold_edges scores a group in TILE × TILE pair tiles, so each
 #: score matrix is 32 MiB of doubles whatever the group size
@@ -136,7 +136,7 @@ def topk_superset(
     )
     spark = cand.sparkSession
     if not qids:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     qn = fold_norms(Q)
     nq = len(qids)
     qid_arr = np.asarray(qids)

@@ -13,6 +13,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -330,7 +332,7 @@ def connected_keepers(
     driver-side union-find (r7): every propagation round is 2-3 Spark
     jobs plus a tracked checkpoint, so a 5k-edge dup graph paid ~3 s
     of pure round fixed cost — the same result is exact in
-    milliseconds on the driver. The gate is the same bounded-small-side
+    milliseconds on the driver and returns as a ``local_frame``. The gate is the same bounded-small-side
     class as the ≤256 MiB Bloom broadcast (CrawlConfig
     bloom_broadcast_max): 2M bare-id edges ≈ 32 MB collected. The gate
     counts edges, not bytes, so that size assumes bare integer ids;
@@ -365,14 +367,8 @@ def connected_keepers(
             if r not in best or v < best[r]:
                 best[r] = v
         out_rows = [(v, best[find(v)]) for v in sorted(nodes)]
-        spark = pairs.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = pairs.schema[id_a].dataType
-        schema = StructType(
-            [StructField("node", id_type), StructField("keeper", id_type)]
-        )
-        return spark.createDataFrame(out_rows, schema)
+        id_type = pairs.schema[id_a].dataType.simpleString()
+        return local_frame(pairs.sparkSession, out_rows, f"node {id_type}, keeper {id_type}")
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .cosine import threshold_edges
 
 MICRO = 1_000_000
@@ -261,9 +262,7 @@ def semantic_dedup(
     cent_rows = [
         (j, [m / MICRO for m in c]) for j, c in enumerate(centroids_micro)
     ]
-    cent = spark.createDataFrame(
-        cent_rows, "cluster int, _c array<double>"
-    )
+    cent = local_frame(spark, cent_rows, "cluster int, _c array<double>")
     asg = asg.join(F.broadcast(cent), "cluster").withColumn(
         "cos_centroid",
         F.round(

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import canonical_urls, make_crawl_extract_udf
+from ..session import local_frame
 from ..sources.snapshots import SnapshotWarehouse
 from . import seenfilter
 from .bloom import bloom_maybe_seen, bloom_maybe_seen_cogroup, build_bloom, merge_blooms
@@ -103,19 +104,15 @@ def _merge_frontier(n: int, *parts: DataFrame) -> DataFrame:
 
 
 def _metrics_row(spark: SparkSession, row: dict) -> DataFrame:
-    """The one-row metrics marker, built JVM-side (no Python worker).
+    """The one-row metrics marker, a ``local_frame`` (no Python worker).
     The schema is the one ``createDataFrame([row])`` infers: columns in
     sorted key order, every value a nullable bigint (lists an
-    ``array<bigint>``). A CASE without ELSE keeps each column nullable,
-    so the Parquet footer matches too."""
-    one = spark.range(1, numPartitions=1)
-
-    def col(v):
-        if isinstance(v, list):
-            return F.array(*map(F.lit, v)).cast("array<bigint>")
-        return F.lit(v).cast("bigint")
-
-    return one.select(*[F.when(one.id == 0, col(v)).alias(k) for k, v in sorted(row.items())])
+    ``array<bigint>``), so the Parquet footer matches too."""
+    keys = sorted(row)
+    schema = ", ".join(
+        f"`{k}` {'array<bigint>' if isinstance(row[k], list) else 'bigint'}" for k in keys
+    )
+    return local_frame(spark, [tuple(row[k] for k in keys)], schema)
 
 
 class CrawlEngine:
@@ -207,8 +204,8 @@ class CrawlEngine:
             else (i, s[0], dict(s[1]) if s[1] else None)
             for i, s in enumerate(seeds)
         ]
-        seed_df = self.spark.createDataFrame(
-            rows, "seed_idx long, url string, custom_headers map<string,string>"
+        seed_df = local_frame(
+            self.spark, rows, "seed_idx long, url string, custom_headers map<string,string>"
         )
         self.recover()
         # valid seeds, canonicalized once: the frontier write and the
@@ -260,9 +257,7 @@ class CrawlEngine:
         wave = self.next_wave - 1
         self.wh.commit(_merge_frontier(self._n_shuffle(n_rows), *parts), "frontier", wave=wave)
         if not self.wh.snapshots("seen"):
-            self.wh.commit(
-                self.spark.createDataFrame([], SEEN_SCHEMA), "seen", wave=0
-            )
+            self.wh.commit(local_frame(self.spark, [], SEEN_SCHEMA), "seen", wave=0)
         robots = build_robots_dim(self.pages)
         self.wh.commit(robots, "robots", wave=0)
         if invalid.isEmpty():
@@ -943,8 +938,8 @@ class CrawlEngine:
             for i, v in enumerate(regs):
                 if v > merged[i]:
                     merged[i] = int(v)
-        regs_df = self.spark.createDataFrame(
-            [(i, v) for i, v in enumerate(merged)], "register_id int, max_rho int"
+        regs_df = local_frame(
+            self.spark, list(enumerate(merged)), "register_id int, max_rho int"
         )
         out = hll_estimate(regs_df, m=m).collect()[0].asDict()
         out["registers"] = merged

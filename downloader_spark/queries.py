@@ -22,7 +22,7 @@ from .operators.aggregates import (
 )
 from .operators.dedup import exact_dup_groups
 from .operators.topk import history_page, per_key_topk
-from .session import spread
+from .session import local_frame, spread
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -3243,9 +3243,7 @@ def q_url_quality_filter(spark, sf_dir):
         .otherwise(F.concat(F.lit("http://news"), sid, F.lit(".example.org/winner-profile")))
     )
     df = docs.select("doc_id", url.alias("url"))
-    domains = spark.createDataFrame(
-        [(x,) for x in BLOCK_DOMAINS], "domain string"
-    )
+    domains = local_frame(spark, [(x,) for x in BLOCK_DOMAINS], "domain string")
     return url_quality(df, "doc_id", domains_df=domains)
 
 

@@ -5,6 +5,17 @@ splitting for hot hosts), runtime Bloom filters (accelerates the
 frontier⟕pages join), Arrow batches sized for HTML payloads, and
 shuffle partitions sized to the local core count — on a real cluster
 these come from spark-submit conf instead.
+
+It also holds two of the engine's one-way rules:
+
+- ``spread`` is the one partitioning rule for per-row-heavy map work.
+- ``local_frame`` is the one driver-table rule: every table the engine
+  builds from rows held on the driver (model tables, centroids, a
+  driver union-find result, crawl seeds, the metrics marker) enters
+  Spark as an Arrow-built ``LocalRelation``. Its scan reads rows the
+  driver already holds: no Python worker re-pickles them and no job
+  runs to build the table. ``createDataFrame`` is called nowhere else
+  (tests/test_driver_table_rule.py).
 """
 
 from __future__ import annotations
@@ -12,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -87,3 +99,29 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     if len(df.inputFiles()) >= par:
         return df
     return df.repartition(par, *cols)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over ``rows`` (a sequence of tuples in ``schema``'s
+    column order) held on the driver: a ``pyarrow.Table`` built column
+    by column in ``schema``'s Arrow types, handed to
+    ``spark.createDataFrame``. The result is a ``LocalRelation``
+    (``LocalTableScan``): reading it launches no Python worker, and
+    collecting it launches no job. ``createDataFrame(list)`` would be a
+    ``LogicalRDD`` over a ``PythonRDD`` whose tasks only unpickle the
+    rows again. Past ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB of Arrow data by default) Spark ships the Arrow batches as
+    an RDD instead, one partition per ``arrow.maxRecordsPerBatch`` rows;
+    its tasks decode Arrow in the JVM, still with no Python worker.
+    ``schema`` is a DDL string or a ``StructType``; the frame's schema
+    is exactly it, also for zero rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(st)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, st)

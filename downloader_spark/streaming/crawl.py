@@ -63,6 +63,7 @@ from ..functions.udfs import canonical_urls, make_crawl_extract_udf
 from ..plans.crawlconfig import CrawlConfig
 from ..plans.politeness import build_robots_dim, top_per_host, with_politeness
 from ..plans.seenfilter import geometry
+from ..session import local_frame
 
 FRONTIER_SCHEMA = "url string, host string, depth int, requeued boolean"
 
@@ -114,9 +115,9 @@ def streaming_crawl(
     ).cache()
     extract = make_crawl_extract_udf(max_links_per_page)
 
-    # seed file: canonicalize driver-side via one tiny job (depth 0)
+    # seed table: a local_frame of the seeds, canonicalized once (depth 0)
     seeds_df = (
-        canonical_urls(spark.createDataFrame([(s,) for s in seeds], "raw string"), "raw")
+        canonical_urls(local_frame(spark, [(s,) for s in seeds], "raw string"), "raw")
         .select(
             F.col("url_canonical").alias("url"),
             "host",

@@ -481,3 +481,37 @@ def test_quantized_probe_outputs_pinned(spark, emb, tmp_path):
                 ).hexdigest()
             index.close()
     assert got == QUANT_PINS
+
+
+def test_rerank_survivor_cut_ranks_raw_cosine(spark):
+    """The survivor pass of a quantized rerank keeps each query's
+    k·rerank_factor best candidates by RAW reconstruction cosine, then
+    cand_id. A and B tie at 6 digits (0.996509) and differ by 1.8e-8
+    exactly at the cut: k=1, rerank_factor=2, and X is the clear best.
+    B's raw cosine is higher, so B survives with X; a survivor pass
+    rounded to 6 digits would tie them and keep A, the lower id. In the
+    full-precision table X is worse than both, so the rerank's answer
+    is whichever of A and B survived.
+
+    Every vector is integral and the corpus spans [0, 255] in every
+    dimension, so the SQ8 codebook is vmin 0, span 255 and each
+    reconstruction equals its vector exactly."""
+    q = [100.0, 120.0, 140.0, 160.0]
+    a = [90.0, 130.0, 152.0, 148.0]  # cosine 0.99650875382...
+    b = [110.0, 109.0, 128.0, 171.0]  # cosine 0.99650877210...
+    x = q  # cosine 1
+    axes = [[255.0 if j == i else 0.0 for j in range(4)] for i in range(4)]
+    rows = [(1, a), (2, b), (3, x)] + [(10 + i, v) for i, v in enumerate(axes)]
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(rows, schema)
+    full = spark.createDataFrame(
+        [(3, [160.0, 140.0, 120.0, 100.0])] + [r for r in rows if r[0] != 3], schema
+    )
+    qry = spark.createDataFrame([(100, q)], "query_id long, embedding array<float>")
+    index = build_ivf_index(corpus, n_centroids=2, iters=2, quantize="sq8")
+    assert index.sq8 == {"vmin": [0.0] * 4, "span": [255.0] * 4}
+    got = ivf_probe(
+        index, qry, k=1, nprobe=2, rerank_from=full, rerank_factor=2
+    ).collect()
+    assert [tuple(r) for r in got] == [(100, 2, 0.996509, 1)]
+    index.close()
