@@ -1678,15 +1678,25 @@ def _webtext_gate(spark, corpus):
     """Gopher gate stage shared by the webtext pipeline family: content
     rules plus the three length-robust repetition rules (see
     q_webtext_pipeline's docstring for why the length gate and the
-    top-3/4-gram rules are deliberately not applied here)."""
+    top-3/4-gram rules are deliberately not applied here).
+
+    Returns ``doc_id, text, _keep``: the gate is a column, not a
+    filter. A filter here would be pushed through the spread's
+    ``Repartition`` into every branch of the seeded-corpus ``Union``,
+    with ``text``, ``_gtoks`` and ``_glines`` inlined into each flag, so
+    the repetition UDF would run once per branch and below the
+    exchange. ``_webtext_survivors`` filters ``_keep`` on the gate's
+    checkpoint, where no rule can move it. A null ``_keep`` drops its
+    row, as the filter did."""
     from .functions.repetition_arrow import with_repetition_arrow
     from .functions.text import _tokens, gopher_flags
 
-    # spread the per-row HOF gate work across cores (a one-file
-    # fixture scans as one partition per union branch)
+    # the corpus scans as one partition per union branch of a one-file
+    # fixture; every gate expression and the one repetition UDF above
+    # run after this exchange, on all cores
     corpus = spread(corpus)
-    # token/line arrays materialized once for the flag HOFs (r7 — the
-    # shingles_of_words inline-reuse rule; same expressions)
+    # token/line arrays computed once per row for the flag HOFs (r7 —
+    # the shingles_of_words inline-reuse rule; same expressions)
     corpus = corpus.select(
         "doc_id", "text",
         _tokens(F.col("text")).alias("_gtoks"),
@@ -1700,14 +1710,16 @@ def _webtext_gate(spark, corpus):
             corpus.withColumn("_fl", fl),
             features=["dup_line_frac", "dup_para_frac", "top_2gram_char_frac"],
         )
-        .filter(
-            ~F.col("_fl.word_len_out") & ~F.col("_fl.symbol_heavy")
-            & ~F.col("_fl.bullet_heavy") & ~F.col("_fl.ellipsis_heavy")
-            & ~F.col("_fl.low_alpha")
-            & ~F.col("dup_line_heavy") & ~F.col("dup_para_heavy")
-            & ~F.col("top_2gram_heavy")
+        .select(
+            "doc_id", "text",
+            (
+                ~F.col("_fl.word_len_out") & ~F.col("_fl.symbol_heavy")
+                & ~F.col("_fl.bullet_heavy") & ~F.col("_fl.ellipsis_heavy")
+                & ~F.col("_fl.low_alpha")
+                & ~F.col("dup_line_heavy") & ~F.col("dup_para_heavy")
+                & ~F.col("top_2gram_heavy")
+            ).alias("_keep"),
         )
-        .select("doc_id", "text")
     )
 
 
@@ -1721,8 +1733,9 @@ def _webtext_survivors(spark, gated):
     from .operators.dedup import _ckpt_tracked, _drop_ckpt, drop_repeated_spans
 
     gated, gate_ids = _ckpt_tracked(gated)
+    # the gate's filter, above its checkpoint (see _webtext_gate)
     cleaned = drop_repeated_spans(
-        gated, "doc_id", F.col("text"), min_df=3, min_words=3
+        gated.filter("_keep"), "doc_id", F.col("text"), min_df=3, min_words=3
     )
     collapsed = F.trim(F.regexp_replace("cleaned_text", r"\s+", " "))
     survivors = (

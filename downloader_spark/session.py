@@ -94,7 +94,15 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     branches over one file scans as several partitions and still needs
     the spread. Cached scans report their source files; local and
     checkpointed relations report none, so they spread. The check is
-    plan-time only (file listing, no job)."""
+    plan-time only (file listing, no job).
+
+    Spread heavy work by projecting it, not by filtering on it: a
+    deterministic filter above a spread is pushed through its
+    ``Repartition`` into each ``Union`` branch beneath it, with
+    projected aliases inlined, so its work runs before the exchange.
+    Project a heavy predicate as a column and filter it after a
+    materialization point (``queries._webtext_gate``'s ``_keep``,
+    filtered on its checkpoint). Cheap filters may sink to the scan."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if len(df.inputFiles()) >= par:
         return df
@@ -111,8 +119,10 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     ``LogicalRDD`` over a ``PythonRDD`` whose tasks only unpickle the
     rows again. Past ``spark.sql.execution.arrow.localRelationThreshold``
     (48 MiB of Arrow data by default) Spark ships the Arrow batches as
-    an RDD instead, one partition per ``arrow.maxRecordsPerBatch`` rows;
-    its tasks decode Arrow in the JVM, still with no Python worker.
+    an RDD instead, one partition per ``arrow.maxRecordsPerBatch`` rows
+    (1,954 at ``connected_keepers``' 4M-row bound); its tasks decode
+    Arrow in the JVM, still with no Python worker, and the frame is
+    coalesced to ``defaultParallelism`` partitions.
     ``schema`` is a DDL string or a ``StructType``; the frame's schema
     is exactly it, also for zero rows."""
     import pyarrow as pa
@@ -124,4 +134,7 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
         [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, st)
+    df = spark.createDataFrame(table, st)
+    if not df.isLocal():
+        df = df.coalesce(spark.sparkContext.defaultParallelism)
+    return df

@@ -154,6 +154,29 @@ def test_connected_keepers_driver_path_keeps_string_ids(spark):
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
+def test_local_frame_past_the_arrow_threshold_is_coalesced(spark):
+    """Past ``arrow.localRelationThreshold`` the table ships as an RDD
+    of one partition per ``arrow.maxRecordsPerBatch`` rows; local_frame
+    coalesces it to the session parallelism. Below the threshold it
+    stays a LocalRelation."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    par = spark.sparkContext.defaultParallelism
+    rows = [(i, f"u{i}") for i in range(20_000)]
+    schema = "id bigint, url string"
+    below = local_frame(spark, rows, schema)
+    assert below.isLocal()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        past = local_frame(spark, rows, schema)
+        assert not past.isLocal()
+        assert past.rdd.getNumPartitions() <= par
+        assert past.schema == below.schema
+        assert sorted(past.collect()) == sorted(below.collect())
+    finally:
+        spark.conf.set(key, old)
+
+
 # -- no Python worker and no job for a driver table ------------------------
 
 

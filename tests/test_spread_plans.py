@@ -6,6 +6,16 @@ exchange it always did (round-robin to ``defaultParallelism``, or the
 ``cand_id`` hash for the top-k kernel). On a copy of the tables written
 as 8 files (more files than the session's 4 cores) the same queries
 plan no spread at all.
+
+A spread must be the first exchange of the heavy work it spreads: no
+Python UDF (``ArrowEvalPython``, ``BatchEvalPython``) and no HOF
+``lambdafunction`` may sit beneath a site's round-robin exchange. A
+deterministic filter above a spread is pushed through its
+``Repartition`` into every ``Union`` branch, with projected aliases
+inlined, so a heavy predicate there must be a projected column that is
+filtered after a materialization point (``_webtext_gate``). Input
+generators, such as ``extract_lang_profile``'s ``MapInPandas`` page
+generator, are the input and stay allowed beneath it.
 """
 
 import os
@@ -48,6 +58,24 @@ def _build(spark, name, sf_dir):
         # the pipelines checkpoint the gate while building; plan it alone
         return _webtext_gate(spark, _webtext_seeded_corpus(spark, sf_dir)[2])
     return Q[name](spark, sf_dir)
+
+
+def _under_round_robin(df) -> list[str]:
+    """The full tree string of the subtree beneath each round-robin
+    exchange of ``df``'s executed plan (an adaptive plan's current
+    plan), cached relations included."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec" and (
+            node.outputPartitioning().toString().startswith("RoundRobinPartitioning")
+        ):
+            out.append(node.child().treeString(True, False, 2**31 - 1, False, False))
+        for kids in (node.children(), node.innerChildren()):
+            todo += [kids.apply(i) for i in range(kids.size())]
+    return out
 
 
 def _topk(spark, sf_dir):
@@ -101,3 +129,17 @@ def test_spread_rule(spark, many_files):
     assert re.search(rf"hashpartitioning\(doc_id#\d+L?, {par}\)", _plan(spread(one, "doc_id")))
     wide = spark.read.parquet(f"{many_files}/documents.parquet")
     assert spread(wide) is wide
+
+
+def test_no_python_or_hof_work_beneath_a_spread(spark):
+    for name, n in ROUND_ROBIN.items():
+        df = _build(spark, name, SF_SMALL)
+        subtrees = _under_round_robin(df)
+        assert len(subtrees) == n, (name, subtrees)
+        for sub in subtrees:
+            for node in ("ArrowEvalPython", "BatchEvalPython", "lambdafunction"):
+                assert node not in sub, (name, node, sub)
+        if name == "extract_lang_profile":
+            assert any("MapInPandas" in sub for sub in subtrees), subtrees
+        if name == "webtext_gate":
+            assert _plan(df).count("ArrowEvalPython") == 1, _plan(df)
